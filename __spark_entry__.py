@@ -304,7 +304,7 @@ def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup (MinHash) — 4-hash MinHash signature per document
     (engine-portable md5 min-hash)."""
     docs = _read(spark, sf_dir, "documents")
-    sig = DD.minhash_signatures(docs, num_hashes=4)
+    sig = DD.minhash_signatures_udf(docs, num_hashes=4)
     return sig.select(
         F.col("id").alias("doc_id"),
         *[F.element_at(F.col("sig"), i + 1).alias(f"h{i}") for i in range(4)],
@@ -440,15 +440,14 @@ def q_langid_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trained character-trigram language ID (Cavnar-Trenkle-style profiles,
     naive-Bayes scoring): train top-200 trigram profiles with micro-integer
     log-frequency weights on the embedded 9-language corpus, classify every
-    document. Integer score sums make the train+classify pipeline exactly
-    reproducible in ANSI SQL; the Arrow scale path (no gram explode) is
-    property-tested equal in tests/test_langid_bpe.py."""
+    document in one Arrow pass (no gram explode). Integer score sums make
+    the train+classify pipeline exactly reproducible in ANSI SQL."""
     from tilecloud_chain_spark.operators import langid as LI
 
     train = spark.createDataFrame(_LANGID_TRAIN, "lang string, text string")
     profiles = LI.train_ngram_profiles(train, top_k=200)
     docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
-    return LI.langid_ngram(docs, profiles)
+    return LI.langid_ngram_udf(docs, profiles)
 
 
 _BOILERPLATE_LINE = "subscribe to our newsletter today"
@@ -520,16 +519,15 @@ def q_substring_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_quality_score_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trained quality classifier (fastText-style word+bigram features,
     naive-Bayes micro-integer weights — operators/quality.py): train
-    good-vs-bad profiles on the embedded corpus, score every document.
-    Integer score sums make train+classify exactly reproducible in ANSI
-    SQL; the Arrow scale path (no feature explode) is property-tested
-    equal in tests/test_quality.py."""
+    good-vs-bad profiles on the embedded corpus, score every document in
+    one Arrow pass (no feature explode). Integer score sums make
+    train+classify exactly reproducible in ANSI SQL."""
     from tilecloud_chain_spark.operators import quality as Q
 
     train = spark.createDataFrame(Q.DEMO_QUALITY_TRAIN, "label string, text string")
     profiles = Q.train_quality_profiles(train, top_k=400)
     docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
-    return Q.quality_classify(docs, profiles)
+    return Q.quality_classify_udf(docs, profiles)
 
 
 def q_semantic_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -902,7 +900,7 @@ def q_corpus_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     packing, one row per document with every stage flag and (for admitted
     docs) the chunk span. The oracle recomputes the ENTIRE chain in SQL —
     template extraction as string functions, the trained langid + LM
-    twins over the extracted text, the LSH pair formulation + recursive
+    models over the extracted text, the LSH pair formulation + recursive
     CC over the redacted text, the eval-shingle overlap, and the packing
     cumsum — one composed oracle, every stage load-bearing."""
     from tilecloud_chain_spark.operators.corpus import corpus_admission
@@ -1086,11 +1084,11 @@ def q_lm_quality_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     lp_micro >= thr * n_bigrams. The oracle retrains the same model and
     rescoring entirely in SQL — weights, backoffs, vocabulary size, and
     every per-document sum."""
-    from tilecloud_chain_spark.operators.lm import lm_score, train_bigram_lm
+    from tilecloud_chain_spark.operators.lm import lm_score_udf, train_bigram_lm
 
     docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
     bw, pw = train_bigram_lm(docs.filter(F.expr("doc_id % 7 = 0")))
-    return lm_score(docs, bw, pw, keep_threshold_micro=-3_480_000)
+    return lm_score_udf(docs, bw, pw, keep_threshold_micro=-3_480_000)
 
 
 def q_lm3_quality_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1615,7 +1613,7 @@ def q_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") + 1000000).alias("doc_id"),
         F.concat(F.col("text"), F.lit(" zz zz zz")).alias("text"),
     )
-    sig = DD.minhash_signatures(docs.unionAll(near), num_hashes=4)
+    sig = DD.minhash_signatures_udf(docs.unionAll(near), num_hashes=4)
     return DD.lsh_candidate_pairs(sig, bands=2, rows_per_band=2)
 
 
@@ -1815,8 +1813,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 def _langid_cte_sql(src: str = "documents") -> str:
     """CTE chain (no leading WITH) ending in ``langid_out(doc_id,
-    lang_pred, score)`` — the exact SQL twin of train_ngram_profiles +
-    langid_ngram over the shared _LANGID_TRAIN corpus, parameterized on
+    lang_pred, score)`` — train_ngram_profiles + langid_ngram_udf
+    recomputed in SQL over the shared _LANGID_TRAIN corpus, parameterized on
     the scored relation ``src`` (doc_id, text) so composed oracles
     (corpus_admission) can run it over derived text."""
     values = ", ".join(
@@ -1967,8 +1965,8 @@ def _lm_cte_sql(src: str = "documents", thr: int = -3_480_000) -> str:
 
 
 def _quality_sql() -> str:
-    """Exact SQL twin of train_quality_profiles + quality_classify over the
-    shared DEMO_QUALITY_TRAIN corpus: word-unigram + adjacent-bigram
+    """train_quality_profiles + quality_classify_udf recomputed in SQL over
+    the shared DEMO_QUALITY_TRAIN corpus: word-unigram + adjacent-bigram
     features (top-400 per label, count desc / feat asc) with micro-integer
     ln-frequency weights, integer score sums, fixed -14e6 miss penalty."""
     from tilecloud_chain_spark.operators.quality import DEMO_QUALITY_TRAIN as _QT
@@ -2061,7 +2059,7 @@ def _shingles_sql(src: str, n: int = 3) -> str:
 def _lsh_prs_sql(src: str, threshold: float = 0.5,
                  num_hashes: int = 16, bands: int = 8) -> str:
     """CTE chain ending in ``prs(id_a, id_b)`` — near-dup pairs by the SAME
-    MinHash-LSH + exact-verify formulation the Spark scale path runs
+    MinHash-LSH + exact-verify formulation the Spark side runs
     (``minhash_dedup_pairs``): 2-row bands over ``num_hashes`` md5
     min-hashes, band-bucket join for candidates, exact shingle-Jaccard
     verification of candidates only. The Spark side additionally collapses
@@ -2128,7 +2126,7 @@ def _corpus_admission_sql() -> str:
     text is 'Article body: ' || body || NL || summary, with the PII email
     and the exact/near clone logic applied at the body level BEFORE
     templating, so the redacted twin is the same construction with
-    '<EMAIL>' substituted. Reuses the parameterized langid + LM CTE twins
+    '<EMAIL>' substituted. Reuses the parameterized langid + LM CTE chains
     and the LSH pair formulation; CC via recursive reach; packing via the
     global-window cumsum (the Spark side runs the distributed prefix sum
     — different formulation, identical math, as token_chunks)."""

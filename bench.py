@@ -22,7 +22,7 @@ Workloads:
              (Arrow-batched pandas UDF path)
 - knn:       cell-pruned kNN, 64 queries over 1M points
 - lineitem_agg: TPC-H-Q1-style agg over lineitem (generic engine capability)
-- minhash / minhash_sql_twin: MinHash signatures, scale path vs SQL twin
+- minhash:   MinHash signatures (Arrow-batched md5, one pass per doc)
 - image_split: render + split metatiles (image payload path)
 - dedup_clusters: LSH pairs -> connected components -> keep flags
 - frame_dedup: synth videos -> frame sample -> phash -> near-dup join
@@ -208,17 +208,6 @@ def w_minhash(spark: SparkSession, sf_dir: str) -> int:
     engine runs at 100 TB."""
     docs = _read_docs(spark, sf_dir)
     return DD.minhash_signatures_udf(docs, num_hashes=8).count()
-
-
-def w_minhash_sql_twin(spark: SparkSession, sf_dir: str) -> int:
-    """Oracle-parity MinHash twin (shingle explode + shuffle + groupBy —
-    ANSI-SQL-expressible for the DuckDB gate; property-tested value-equal
-    to w_minhash). After the shingle CSE fix it WINS at small scale (the
-    shuffle is cheap); the python-worker path wins at 100 TB where the
-    shingle-hash shuffle volume (docs x shingles x hashes) dominates —
-    both are kept and labeled."""
-    docs = _read_docs(spark, sf_dir)
-    return DD.minhash_signatures(docs, num_hashes=8).count()
 
 
 def w_dedup_clusters(spark: SparkSession, sf_dir: str) -> int:
@@ -491,8 +480,8 @@ def w_span_dedup(spark: SparkSession, sf_dir: str) -> int:
 
 
 def w_quality(spark: SparkSession, sf_dir: str) -> int:
-    """Trained quality scoring at sf, SCALE path (Arrow twin, broadcast
-    profile dict, no feature explode)."""
+    """Trained quality scoring at sf (Arrow batches, broadcast profile
+    dict, no feature explode)."""
     from tilecloud_chain_spark.operators import quality as Q
 
     train = spark.createDataFrame(Q.DEMO_QUALITY_TRAIN, "label string, text string")
@@ -502,8 +491,8 @@ def w_quality(spark: SparkSession, sf_dir: str) -> int:
 
 
 def w_lm_quality(spark: SparkSession, sf_dir: str) -> int:
-    """CCNet bigram-LM perplexity filter at sf, SCALE path (Arrow twin,
-    broadcast weight dicts, no bigram explode): train on the doc_id%7
+    """CCNet bigram-LM perplexity filter at sf (Arrow batches, broadcast
+    weight dicts, no bigram explode): train on the doc_id%7
     reference slice, score the full corpus."""
     from tilecloud_chain_spark.operators.lm import lm_score_udf, train_bigram_lm
 
@@ -631,7 +620,6 @@ WORKLOADS = {
     "knn": w_knn,
     "lineitem_agg": w_lineitem_agg,
     "minhash": w_minhash,
-    "minhash_sql_twin": w_minhash_sql_twin,
     "image_split": w_image_split,
     "dedup_clusters": w_dedup_clusters,
     "frame_dedup": w_frame_dedup,
@@ -757,7 +745,7 @@ _STAGES = ("ingest_phash", "assign_join", "minhash")
 # NORMALIZED r3 time by this raw r2 figure; r2 had no phase indicator)
 _R2_DRIVER_QUERIES = {
     "assign": 3.237, "cell_join": 1.171, "geom_filter": 1.009, "knn": 1.988,
-    "lineitem_agg": 0.436, "minhash": 1.784, "minhash_sql_twin": 1.008,
+    "lineitem_agg": 0.436, "minhash": 1.784,
     "image_split": 8.568, "dedup_clusters": 14.934, "frame_dedup": 5.425,
     "expire": 1.842,
 }
@@ -767,7 +755,7 @@ _R2_DRIVER_QUERIES = {
 # are like-for-like; queries marked "new" have no anchor)
 _R3_DRIVER_QUERIES = {
     "assign": 1.53, "cell_join": 0.917, "geom_filter": 0.538, "knn": 1.211,
-    "lineitem_agg": 0.295, "minhash": 0.718, "minhash_sql_twin": 0.812,
+    "lineitem_agg": 0.295, "minhash": 0.718,
     "image_split": 0.418, "dedup_clusters": 6.323, "frame_dedup": 1.472,
     "expire": 1.457,
 }
@@ -776,7 +764,7 @@ _R3_DRIVER_QUERIES = {
 # anchor (same protocol; host-phase normalized)
 _R5_DRIVER_QUERIES = {
     "assign": 1.01, "cell_join": 0.721, "geom_filter": 0.462, "knn": 0.911,
-    "lineitem_agg": 0.228, "minhash": 0.609, "minhash_sql_twin": 0.662,
+    "lineitem_agg": 0.228, "minhash": 0.609,
     "image_split": 0.391, "dedup_clusters": 4.385, "frame_dedup": 1.2,
     "expire": 1.234, "line_dedup": 1.15, "langid": 1.25, "bpe": 1.057,
     "overviews": 1.112, "decontam": 0.394,
@@ -1546,13 +1534,11 @@ def _write_bench_md(result: dict) -> None:
         "The measured skew table below quantifies this trade on",
         "duplicate-flooded fixtures.",
         "",
-        "Path disclosure: the langid row measures the ARROW twin",
-        "(langid_ngram_udf — broadcast profile dict, no gram explode, the",
-        "scale path) over a 4-language profile set; the quality row likewise",
-        "measures the Arrow twin (quality_classify_udf). The SQL-expressible",
-        "forms are what the correctness gate oracles, and each pair is",
-        "property-tested value-equal. The minhash row is the Arrow scale",
-        "path, minhash_sql_twin the SQL-expressible twin (both labeled).",
+        "Path disclosure: the langid row measures langid_ngram_udf (broadcast",
+        "profile dict, no gram explode) over a 4-language profile set; the",
+        "quality row measures quality_classify_udf and the minhash row",
+        "minhash_signatures_udf. These Arrow forms are the only",
+        "implementations, and the correctness gates run them against DuckDB.",
         "",
         "New standing rows (r6, per the r5 verdict): span_dedup (substring",
         "dedup over the gate fixture shape), quality (trained classifier),",
@@ -1610,9 +1596,8 @@ def _write_bench_md(result: dict) -> None:
         "-> PII -> exact/LSH-CC dedup -> decontaminate -> token packing,",
         "TRAINING INCLUDED like the lm_quality row) — its wall is roughly",
         "the sum of its stage rows plus two model fits, not a plan defect;",
-        "the langid/LM stages run the Arrow twins (property-equal to the",
-        "oracled SQL forms, ~16 s -> ~1.5 s at sf0.1 vs the gram-explode",
-        "SQL form). r8 fixed-cost rework of the r7 driver-action floor:",
+        "the langid/LM stages run the Arrow scorers (~1.5 s at sf0.1).",
+        "r8 fixed-cost rework of the r7 driver-action floor:",
         "localCheckpoints adjacent to a materializing action are now LAZY",
         "(image_caption_dedup base/reps before the flood probe, the",
         "admission flag table before the packing prefix-sum, both",

@@ -87,8 +87,7 @@ def test_lsh_prs_sql_matches_collapsed_pipeline_randomized(spark, seed):
     Spark COLLAPSED MinHash-LSH pipeline (exact-dup collapse + expand) must
     produce exactly the pair set of the UNCOLLAPSED SQL formulation
     (_lsh_prs_sql) that the dedup_clusters/clean_corpus oracles splice in —
-    on corpora with injected exact duplicates and near mutants, both
-    signature paths."""
+    on corpora with injected exact duplicates and near mutants."""
     import random
 
     import duckdb as _ddb
@@ -116,13 +115,12 @@ def test_lsh_prs_sql_matches_collapsed_pipeline_randomized(spark, seed):
     want = set(map(tuple, con.execute(sql).fetchall()))
 
     df = spark.createDataFrame(pdf)
-    for scale_path in (True, False):
-        got = {
-            (r.id_a, r.id_b)
-            for r in DD.minhash_dedup_pairs(
-                df, threshold=0.5, num_hashes=4, bands=2, rows_per_band=2,
-                use_scale_path=scale_path, exact_pairs="expand",
-            ).collect()
-        }
-        assert got == want, (seed, scale_path, got ^ want)
+    got = {
+        (r.id_a, r.id_b)
+        for r in DD.minhash_dedup_pairs(
+            df, threshold=0.5, num_hashes=4, bands=2, rows_per_band=2,
+            exact_pairs="expand",
+        ).collect()
+    }
+    assert got == want, (seed, got ^ want)
     assert want, "fixture produced no pairs — proves nothing"

@@ -108,7 +108,8 @@ def test_container_structure():
     assert b"\xff\xc0" in data  # baseline SOF0
 
 
-@pytest.mark.skipif(not os.path.exists(_REAL_JPEG), reason="fixture not present")
+@pytest.mark.skipif(not os.path.exists(_REAL_JPEG),
+                    reason=f"fixture not present: {_REAL_JPEG}")
 def test_decodes_real_libjpeg_file():
     """Cross-engine validation: a 720x477 libjpeg-produced baseline 4:4:4
     file with 59 restart segments decodes end-to-end with zero Huffman
@@ -123,7 +124,8 @@ def test_decodes_real_libjpeg_file():
     assert IMG.psnr(img, back) >= 45.0
 
 
-@pytest.mark.skipif(not os.path.exists(_SUBSAMPLED_JPEG), reason="fixture not present")
+@pytest.mark.skipif(not os.path.exists(_SUBSAMPLED_JPEG),
+                    reason=f"fixture not present: {_SUBSAMPLED_JPEG}")
 def test_decodes_real_420_subsampled_file():
     """A real libjpeg 4:2:0 file (2x2 luma sampling — the most common
     real-world layout): the generalized MCU interleave (Hi x Vi blocks per

@@ -3,6 +3,7 @@
 import pytest
 from pyspark.sql import functions as F
 
+import __spark_entry__ as ENTRY
 from tilecloud_chain_spark.operators import bpe as BP
 from tilecloud_chain_spark.operators import langid as LI
 
@@ -34,24 +35,30 @@ def test_langid_classifies_held_out(spark, profiles):
     df = spark.createDataFrame(
         [(i, t) for i, _, t in HELD_OUT], "doc_id long, text string"
     )
-    got = {r.doc_id: r.lang_pred for r in LI.langid_ngram(df, profiles).collect()}
+    got = {r.doc_id: r.lang_pred for r in LI.langid_ngram_udf(df, profiles).collect()}
     for i, want, _ in HELD_OUT:
         assert got[i] == want, (i, got[i], want)
 
 
-def test_langid_udf_twin_identical(spark, profiles, sf_dir):
-    """The Arrow scale path must equal the SQL-expressible form on real
-    fixture documents (plus the held-out multilingual rows)."""
+def _langid_vs_oracle(spark, profiles, duck_rows, rows):
+    """langid_ngram_udf over ``rows`` vs its SQL twin — the DuckDB oracle
+    CTE (train + classify recomputed in SQL) — on the same rows."""
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    got = {(r.doc_id, r.lang_pred, round(r.score, 6))
+           for r in LI.langid_ngram_udf(df, profiles).collect()}
+    sql = ("WITH " + ENTRY._langid_cte_sql("docs")
+           + " SELECT doc_id, lang_pred, score FROM langid_out")
+    want = {(i, p, round(s, 6)) for i, p, s in duck_rows(rows, sql)}
+    assert got == want, sorted(got ^ want)[:10]
+
+
+def test_langid_udf_twin_identical(spark, profiles, sf_dir, duck_rows):
+    """The Arrow scorer equals the DuckDB oracle on real fixture documents
+    (plus the held-out multilingual rows)."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
-    extra = spark.createDataFrame(
-        [(900000 + i, t) for i, _, t in HELD_OUT], "doc_id long, text string"
-    )
-    df = docs.unionAll(extra)
-    a = {(r.doc_id, r.lang_pred, r.score)
-         for r in LI.langid_ngram(df, profiles).collect()}
-    b = {(r.doc_id, r.lang_pred, r.score)
-         for r in LI.langid_ngram_udf(df, profiles).collect()}
-    assert a == b
+    rows = [tuple(r) for r in docs.collect()]
+    rows += [(900000 + i, t) for i, _, t in HELD_OUT]
+    _langid_vs_oracle(spark, profiles, duck_rows, rows)
 
 
 def test_char_ngrams_edges(spark):
@@ -113,25 +120,20 @@ def test_bpe_deterministic(spark, sf_dir):
     assert m1 == m2
 
 
-def test_langid_udf_twin_multiline_whitespace(spark, profiles):
-    """Texts with newlines/tabs/trailing whitespace — the exact class where
-    Python strip()/whitespace-class semantics silently diverge from Spark
-    trim/Java backslash-s: both paths must still agree."""
-    df = spark.createDataFrame(
-        [
-            (1, "the dog\njumps over\tthe fox  \n"),
-            (2, "\tder hund\nspringt gut\n\n"),
-            (3, "le chien \n sautebien"),
-            (4, "   "),
-            (5, "el perro\r\nsalta"),
-        ],
-        "doc_id long, text string",
-    )
-    a = {(r.doc_id, r.lang_pred, r.score)
-         for r in LI.langid_ngram(df, profiles).collect()}
-    b = {(r.doc_id, r.lang_pred, r.score)
-         for r in LI.langid_ngram_udf(df, profiles).collect()}
-    assert a == b
+def test_langid_udf_twin_multiline_whitespace(spark, profiles, duck_rows):
+    """Texts with newlines/tabs/CRLF/blank/empty/ideographic-space
+    whitespace — the exact class where Python strip()/whitespace-class
+    semantics silently diverge from SQL trim and the regex backslash-s:
+    the Arrow scorer must still agree with the DuckDB oracle."""
+    _langid_vs_oracle(spark, profiles, duck_rows, [
+        (1, "the dog\njumps over\tthe fox  \n"),
+        (2, "\tder hund\nspringt gut\n\n"),
+        (3, "le chien \n sautebien"),
+        (4, "   "),
+        (5, "el perro\r\nsalta"),
+        (6, ""),
+        (7, "the dog\u3000jumps over the fox"),
+    ])
 
 
 def test_bpe_external_gpt2_merge_table(spark, tmp_path):

@@ -1,11 +1,12 @@
 """Bigram-LM perplexity filter (operators/lm.py): hand-derived weights,
-twin equality, backoff/OOV/short-doc semantics."""
+DuckDB-oracle equality, backoff/OOV/short-doc semantics."""
 
 import math
 
 import pytest
 from pyspark.sql import functions as F
 
+import __spark_entry__ as ENTRY
 from tilecloud_chain_spark.operators import lm as LM
 
 
@@ -47,7 +48,7 @@ def test_score_backoff_oov_and_short_docs(spark):
          (4, None)],
         "doc_id long, text string",
     )
-    out = {r.doc_id: r for r in LM.lm_score(docs, bw, pw).collect()}
+    out = {r.doc_id: r for r in LM.lm_score_udf(docs, bw, pw).collect()}
     w_tc = _micro(math.log(3 / 8))
     w_cs = _micro(math.log(3 / 9))
     assert out[0].lp_micro == w_tc + w_cs and out[0].n_bigrams == 2
@@ -62,29 +63,48 @@ def test_score_backoff_oov_and_short_docs(spark):
     )
 
 
-def test_lm_twin_property(spark):
-    """The Arrow scale path equals the SQL-expressible form row-for-row
-    on a corpus mixing observed / backoff / OOV / short documents."""
-    ref = spark.createDataFrame(
-        [(f"w{i} w{(i * 3) % 11} common tail phrase",) for i in range(24)],
-        "text string",
+def _lm_rows(fmt: str) -> list:
+    """80 templated docs (the doc_id % 7 slice is the reference corpus the
+    oracle trains on) plus whitespace / short-document edge rows."""
+    return [(i, fmt.format(a=i % 13, b=(i * 5) % 17, c=i % 4)) for i in range(80)] + [
+        (80, "x"),
+        (81, ""),
+        # Unicode whitespace (NBSP / line-sep / ideographic space) must NOT
+        # split tokens: the regex \s is ASCII-only in Spark and DuckDB
+        # alike, and str.split() would diverge
+        (82, "common\u00a0tail phrase common\u2028tail common\u3000tail end"),
+        (83, "common\ttail phrase\r\nw1 common"),
+        (84, "   "),
+        (85, "two tokens"),
+    ]
+
+
+def _lm_fit_and_score(spark, rows, fit, score, **kw):
+    """Train ``fit`` on the doc_id % 7 slice of ``rows``, score every row;
+    rows as a set with avg_logprob rounded to 6dp."""
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    model = fit(docs.filter(F.col("doc_id") % 7 == 0))
+    return _as_set(score(docs, *model, **kw).collect())
+
+
+def _as_set(rows):
+    return {tuple(r[:-2]) + (round(r[-2], 6), r[-1]) for r in rows}
+
+
+def test_lm_twin_property(spark, duck_rows):
+    """The Arrow scorer equals its SQL twin — the DuckDB oracle, which
+    retrains the model on the doc_id % 7 slice and rescores in SQL — row
+    for row on a corpus mixing observed / backoff / OOV / short
+    documents."""
+    rows = _lm_rows("w{a} common tail phrase w{b} novel{c}")
+    got = _lm_fit_and_score(
+        spark, rows, LM.train_bigram_lm, LM.lm_score_udf,
+        keep_threshold_micro=LM.KEEP_THRESHOLD_MICRO,
     )
-    bw, pw = LM.train_bigram_lm(ref)
-    docs = spark.createDataFrame(
-        [(i, f"w{i % 13} common tail phrase w{(i * 5) % 17} novel{i % 4}")
-         for i in range(80)] + [
-            (80, "x"),
-            (81, ""),
-            # Unicode whitespace (NBSP / line-sep / ideographic space) must
-            # NOT split tokens: Java-regex \s is ASCII-only, and the Arrow
-            # twin must match it exactly (ADVICE r7 — str.split() diverged).
-            (82, "common tail phrase common tail common　tail"),
-        ],
-        "doc_id long, text string",
-    )
-    a = sorted(map(tuple, LM.lm_score(docs, bw, pw).collect()))
-    b = sorted(map(tuple, LM.lm_score_udf(docs, bw, pw).collect()))
-    assert a == b
+    sql = ("WITH " + ENTRY._lm_cte_sql("docs", thr=LM.KEEP_THRESHOLD_MICRO)
+           + " SELECT doc_id, lp_micro, n_bigrams, avg_logprob, keep FROM lm_out")
+    want = _as_set(duck_rows(rows, sql))
+    assert got == want, sorted(got ^ want)[:10]
 
 
 def test_lm_scale_path_plan(spark):
@@ -149,23 +169,19 @@ def test_trigram_backoff_chain(spark):
         assert out[i].n_trigrams == 0 and out[i].keep is True
 
 
-def test_trigram_twin_property(spark):
-    ref = spark.createDataFrame(
-        [(f"w{i} w{(i * 3) % 11} common tail phrase end",) for i in range(24)],
-        "text string",
+def test_trigram_twin_property(spark, duck_rows):
+    """lm3_score equals the ``lm3_quality_docs`` DuckDB oracle (all three
+    levels retrained on the doc_id % 7 slice, threshold -4.2e6) on the
+    same rows."""
+    rows = _lm_rows("w{a} common tail phrase w{b} novel{c} end")
+    got = _lm_fit_and_score(
+        spark, rows, LM.train_trigram_lm, LM.lm3_score,
+        keep_threshold_micro=-4_200_000,
     )
-    tw, bw, pw = LM.train_trigram_lm(ref)
-    docs = spark.createDataFrame(
-        [(i, f"w{i % 13} common tail phrase w{(i * 5) % 17} novel{i % 4} end")
-         for i in range(80)] + [
-            (80, "x"), (81, ""), (82, "two tokens"),
-            (83, "common tail phrase common tail common　tail end"),  # NBSP-ish
-        ],
-        "doc_id long, text string",
+    want = _as_set(
+        duck_rows(rows, ENTRY.oracle_sql()["lm3_quality_docs"], "documents")
     )
-    a = sorted(map(tuple, LM.lm3_score(docs, tw, bw, pw).collect()))
-    b = sorted(map(tuple, LM.lm3_score_udf(docs, tw, bw, pw).collect()))
-    assert a == b
+    assert got == want, sorted(got ^ want)[:10]
 
 
 def test_trigram_separates_common_word_spam(spark):
@@ -191,7 +207,7 @@ def test_trigram_separates_common_word_spam(spark):
          (1, "the cat ran in the dog sat on the mat")],
         "doc_id long, text string",
     )
-    b2 = {r.doc_id: r.avg_logprob for r in LM.lm_score(docs, bw, pw).collect()}
+    b2 = {r.doc_id: r.avg_logprob for r in LM.lm_score_udf(docs, bw, pw).collect()}
     b3 = {r.doc_id: r.avg_logprob
           for r in LM.lm3_score(docs, tw, bw, pw).collect()}
     gap2 = b2[0] - b2[1]   # bigram separation

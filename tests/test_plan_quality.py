@@ -174,15 +174,80 @@ def test_shingle_pipeline_tokenizes_once(spark):
     ALIASED shingle-array attribute lets Catalyst add a size()>0 filter
     whose pushdown re-inlines the whole tokenize+transform at the scan —
     the tokenizer then runs twice per row (measured 0.8s -> 10s at sf0.1).
-    The optimized MinHash plan must contain the regex split exactly once."""
+    The optimized shingle-table plan (the one ``jaccard_pairs`` and
+    ``decontaminate`` consume) must contain the regex split exactly once."""
     from tilecloud_chain_spark.operators import dedup as DD
 
     df = spark.createDataFrame(
         [(1, "a b c d e"), (2, "f g h i j")], "doc_id long, text string"
     )
-    sig = DD.minhash_signatures(df, num_hashes=4)
-    plan = sig._jdf.queryExecution().optimizedPlan().toString()
+    sh = DD.shingles(df, 3)
+    plan = sh._jdf.queryExecution().optimizedPlan().toString()
     assert plan.count("split(") == 1, plan
+
+
+def _plan_ops(plan: str) -> list[str]:
+    """Operator names of an executed plan's tree (the final plan only, for
+    an adaptive one) — one per line, codegen stage markers stripped."""
+    import re
+
+    tree = plan.split("\n\n", 1)[0]
+    if "== Final Plan ==" in tree:
+        tree = tree.split("== Final Plan ==", 1)[1].split("== Initial Plan ==", 1)[0]
+    ops = []
+    for line in tree.splitlines():
+        m = re.match(r"^[\s:|+\-]*(?:\*\(\d+\) |\* )?(\w+)", line)
+        if m:
+            ops.append(m.group(1))
+    return ops
+
+
+def test_dedup_keep_flags_plan_shape(spark):
+    """Pins the shipping admission dedup plan (``dedup_keep_flags``, the
+    ``corpus_admission`` dedup stage) on a fixed corpus. The returned
+    frame's executed plan joins the pinned (id, md5) table to the group
+    table and to the component table as two broadcast-hash joins (AQE
+    turns the planned sort-merge joins into broadcast joins over the two
+    probe-side shuffles). Every SQL execution the call runs (the md5
+    group pin, the Arrow signature pin, banding, verification, the CC
+    edge count) is counted as well."""
+    import random
+
+    from tilecloud_chain_spark.operators import dedup as DD
+
+    rng = random.Random(5)
+    vocab = [f"w{i}" for i in range(40)]
+    rows = [(i, " ".join(rng.choice(vocab) for _ in range(14))) for i in range(60)]
+    rows += [(900000 + i, t) for i, t in rows[:5]]           # exact clones
+    rows += [(9000000 + i, t + " zz") for i, t in rows[:6]]  # near clones
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+
+    sc = spark.sparkContext._jsc.sc()
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        sc.listenerBus().waitUntilEmpty()
+        ex = store.executionsList()
+        return [ex.apply(i) for i in range(ex.size())]
+
+    def counts(ops):
+        return {k: ops.count(k) for k in (
+            "Exchange", "BroadcastExchange", "SortMergeJoin", "BroadcastHashJoin")}
+
+    before = {e.executionId() for e in executions()}
+    out = DD.dedup_keep_flags(df)
+    flags = out.collect()
+    assert sum(not r.exact_keep for r in flags) == 5
+    assert sum(not r.neardup_keep for r in flags) >= 11
+
+    final = counts(_plan_ops(out._jdf.queryExecution().executedPlan().toString()))
+    assert final == {"Exchange": 2, "BroadcastExchange": 2,
+                     "SortMergeJoin": 0, "BroadcastHashJoin": 2}, final
+    run = [e for e in executions() if e.executionId() not in before]
+    total = counts([op for e in run for op in _plan_ops(e.physicalPlanDescription())])
+    assert len(run) == 10, len(run)
+    assert total == {"Exchange": 13, "BroadcastExchange": 8,
+                     "SortMergeJoin": 0, "BroadcastHashJoin": 8}, total
 
 
 def test_dedup_spans_no_window_over_hash(spark):

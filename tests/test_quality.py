@@ -1,9 +1,10 @@
 """Trained quality classifier (operators/quality.py): held-out accuracy,
-Arrow-twin equality, degenerate inputs."""
+DuckDB-oracle equality, degenerate inputs."""
 
 import pytest
 from pyspark.sql import functions as F
 
+import __spark_entry__ as ENTRY
 from tilecloud_chain_spark.operators import quality as Q
 
 
@@ -32,34 +33,37 @@ def test_quality_held_out_accuracy(spark, profiles):
     df = spark.createDataFrame(
         [(i, t) for i, _, t in HELD_OUT], "doc_id long, text string"
     )
-    got = {r.doc_id: r.label for r in Q.quality_classify(df, profiles).collect()}
+    got = {r.doc_id: r.label for r in Q.quality_classify_udf(df, profiles).collect()}
     want = {i: lab for i, lab, _ in HELD_OUT}
     acc = sum(got[i] == want[i] for i in want) / len(want)
     assert acc == 1.0, (got, want)
 
 
-def test_quality_udf_twin_equal(spark, profiles, sf_dir):
-    """Arrow scale path == SQL-expressible form on real documents plus
-    degenerate rows (empty text, one token, multiline/tab whitespace)."""
+def test_quality_udf_twin_equal(spark, profiles, sf_dir, duck_rows):
+    """The Arrow scorer equals its SQL twin — the DuckDB oracle, which
+    retrains the profiles and rescores in SQL — on real documents plus
+    degenerate rows (empty text, one token, tab/newline/CRLF whitespace,
+    an ideographic space, which the regex backslash-s does not split)."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", "text"
-    ).limit(120)
-    extra = spark.createDataFrame(
-        [(9000001, ""), (9000002, "word"), (9000003, "a\tb\nc  d"),
-         (9000004, "  leading and trailing  ")],
-        "doc_id long, text string",
-    )
-    df = docs.unionAll(extra)
-    a = {r.doc_id: (r.label, r.score)
-         for r in Q.quality_classify(df, profiles).collect()}
-    b = {r.doc_id: (r.label, r.score)
-         for r in Q.quality_classify_udf(df, profiles).collect()}
-    assert a == b
+    ).orderBy("doc_id").limit(120)
+    rows = [tuple(r) for r in docs.collect()] + [
+        (9000001, ""), (9000002, "word"), (9000003, "a\tb\nc  d"),
+        (9000004, "  leading and trailing  "), (9000005, "click\r\nhere now"),
+        (9000006, "   "), (9000007, "buy\u3000now cheap deals"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    got = {(r.doc_id, r.label, round(r.score, 6))
+           for r in Q.quality_classify_udf(df, profiles).collect()}
+    want = {(i, lab, round(sc, 6))
+            for i, lab, sc in duck_rows(rows, ENTRY._quality_sql(), "documents")}
+    assert got == want, sorted(got ^ want)[:10]
 
 
 def test_quality_empty_doc_is_und(spark, profiles):
     df = spark.createDataFrame([(1, ""), (2, "   ")], "doc_id long, text string")
-    got = {r.doc_id: (r.label, r.score) for r in Q.quality_classify(df, profiles).collect()}
+    got = {r.doc_id: (r.label, r.score)
+           for r in Q.quality_classify_udf(df, profiles).collect()}
     assert got == {1: ("und", 0.0), 2: ("und", 0.0)}
 
 

@@ -216,12 +216,28 @@ def test_cosine_near_dup_pairs_finds_injected(spark, embs):
     assert expected <= pairs
 
 
-def test_minhash_udf_matches_sql_version(spark, docs):
-    """Scale-path (python-worker) MinHash == SQL-expressible MinHash."""
-    base = docs.select("doc_id", "text").limit(80)
-    a = {r.id: list(r.sig) for r in DD.minhash_signatures(base, num_hashes=6).collect()}
-    b = {r.id: list(r.sig) for r in DD.minhash_signatures_udf(base, num_hashes=6).collect()}
-    assert a == b
+def test_minhash_udf_matches_sql_version(spark, docs, duck_rows):
+    """The Arrow MinHash equals its SQL version — the signature CTE of the
+    DuckDB LSH oracle (``_lsh_prs_sql``) — on fixture documents plus
+    whitespace edge rows (tab, CRLF, blank, empty, an ideographic space
+    the regex backslash-s does not split, fewer than k tokens)."""
+    import __spark_entry__ as ENTRY
+
+    rows = [tuple(r) for r in docs.select("doc_id", "text").orderBy("doc_id").limit(80).collect()]
+    rows += [
+        (9000001, "alpha\tbeta gamma\tdelta"),
+        (9000002, "alpha beta\r\ngamma delta"),
+        (9000003, "   "),
+        (9000004, ""),
+        (9000005, "alpha\u3000beta gamma delta"),
+        (9000006, "Alpha  BETA"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    got = {r.id: list(r.sig) for r in DD.minhash_signatures_udf(df, num_hashes=6).collect()}
+    sql = ("WITH " + ENTRY._lsh_prs_sql("docs", num_hashes=6, bands=3)
+           + " SELECT doc_id, h0, h1, h2, h3, h4, h5 FROM lsh_sig")
+    want = {r[0]: list(r[1:]) for r in duck_rows(rows, sql)}
+    assert got == want, sorted(k for k in got.keys() | want.keys() if got.get(k) != want.get(k))
 
 
 def test_ivf_recall_pinned(spark):
@@ -358,14 +374,12 @@ def _dup_heavy_corpus(spark, docs, copies=4):
     return out.unionAll(near)
 
 
-@pytest.mark.parametrize("use_scale_path", [True, False])
-def test_collapse_exact_value_identical(spark, docs, use_scale_path):
+def test_collapse_exact_value_identical(spark, docs):
     """The exact-dup-collapsed pipeline (the degenerate-bucket fix) must be
     VALUE-identical to the uncollapsed one on a duplicate-heavy corpus —
-    same (id_a, id_b, jaccard) set, both signature paths."""
+    same (id_a, id_b, jaccard) set."""
     df = _dup_heavy_corpus(spark, docs)
-    kw = dict(threshold=0.6, num_hashes=8, bands=4, rows_per_band=2,
-              use_scale_path=use_scale_path)
+    kw = dict(threshold=0.6, num_hashes=8, bands=4, rows_per_band=2)
     got = {
         (r.id_a, r.id_b, r.jaccard)
         for r in DD.minhash_dedup_pairs(df, collapse_exact=True, **kw).collect()
@@ -404,7 +418,7 @@ def test_max_bucket_cap_subset_and_other_band_recall(spark, docs):
         F.concat(F.col("text"), F.lit(" zz")).alias("text"),
     )
     df = base.unionAll(near)
-    sig = DD.minhash_signatures(df, num_hashes=8)
+    sig = DD.minhash_signatures_udf(df, num_hashes=8)
     uncapped = {(r.id_a, r.id_b) for r in DD.lsh_candidate_pairs(sig, 4, 2).collect()}
     capped = {
         (r.id_a, r.id_b)

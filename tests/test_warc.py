@@ -155,7 +155,7 @@ def test_warc_extract_spark_and_single_arrow_stage(spark):
 def test_warc_composes_into_html_extract_and_langid(spark):
     from tilecloud_chain_spark.operators.html import html_extract
     from tilecloud_chain_spark.operators.langid import (
-        DEMO_TRAIN, langid_ngram, train_ngram_profiles,
+        DEMO_TRAIN, langid_ngram_udf, train_ngram_profiles,
     )
 
     page = (
@@ -179,7 +179,7 @@ def test_warc_composes_into_html_extract_and_langid(spark):
     assert row.n_blocks_kept == 1 and row.n_blocks_dropped == 1  # nav dropped
     profiles = train_ngram_profiles(
         spark.createDataFrame(DEMO_TRAIN, "lang string, text string"))
-    lang = langid_ngram(
+    lang = langid_ngram_udf(
         clean.select("doc_id", F.col("clean_text").alias("text")), profiles
     ).collect()[0]
     assert lang.lang_pred == "en"

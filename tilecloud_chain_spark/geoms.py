@@ -109,13 +109,3 @@ def resolve_geoms(
             if (min_r is None or min_r <= res) and (max_r is None or max_r >= res):
                 out[z] = geom
     return out
-
-
-def near_window(
-    grid: Grid, layer: Layer, zoom_ref: int, x_m: float, y_m: float, n_metatiles: float = 8
-) -> tuple[float, float, float, float]:
-    """FL6 ``--near``: an N-metatile window centered on a point
-    (tilecloud_chain/__init__.py:1707-1755 bbox branch)."""
-    span = grid.span(zoom_ref, layer.meta_size if layer.meta else 1)
-    half = n_metatiles * span / 2
-    return (x_m - half, y_m - half, x_m + half, y_m + half)

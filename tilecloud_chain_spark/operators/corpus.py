@@ -12,12 +12,12 @@ coordinates. Stage helpers are single-source: the resumable staged plan
 the staged result is row-identical to this operator (gate-pinned).
 
 Scale shape: every stage is the already-scale-shaped operator it wraps —
-one Arrow stage for extraction, broadcast-joined micro-integer models for
-langid/LM, pure-Column quality/PII, collapsed-LSH star edges + CC for
-near-dup, broadcast eval shingles for decontamination, distributed prefix
-sum for packing. The composition adds only narrow flag-table joins keyed
-by doc_id (hash joins on a single long key — no wide rows in any
-shuffle)."""
+one Arrow stage for extraction, one Arrow pass scoring langid/LM against
+the collected micro-integer models, pure-Column quality/PII,
+collapsed-LSH star edges + CC for near-dup, broadcast eval shingles for
+decontamination, distributed prefix sum for packing. The composition
+adds only narrow flag-table joins keyed by doc_id (hash joins on a single
+long key — no wide rows in any shuffle)."""
 
 from __future__ import annotations
 
@@ -74,13 +74,9 @@ def redact_stage(extracted: DataFrame) -> DataFrame:
 
 
 def lang_stage(extracted: DataFrame, profiles: DataFrame) -> DataFrame:
-    """(doc_id, lang_pred, lang_score) over the extracted clean text.
-
-    Runs the Arrow SCALE twin (broadcast profile dict, no gram explode,
-    no shuffle) — property-tested identical to the SQL-expressible
-    ``langid_ngram``, so the composed DuckDB oracle (which recomputes the
-    SQL form) still matches hash-exactly. At sf0.1 the SQL form's gram
-    explode + profile join costs ~16 s against the twin's ~1 s."""
+    """(doc_id, lang_pred, lang_score) over the extracted clean text, scored
+    in one Arrow pass (broadcast profile dict, no gram explode, no
+    shuffle)."""
     return langid_ngram_udf(
         extracted.select("doc_id", F.col("clean_text").alias("text")),
         profiles,
@@ -93,9 +89,8 @@ def lm_stage(
     prefix_backoff: DataFrame,
     keep_threshold_micro: int = LM.KEEP_THRESHOLD_MICRO,
 ) -> DataFrame:
-    """(doc_id, lm_keep) — perplexity gate over the extracted clean text
-    (Arrow scale twin: broadcast weight dicts, no bigram explode —
-    property-tested identical to ``lm_score``, oracle-compatible)."""
+    """(doc_id, lm_keep) — perplexity gate over the extracted clean text,
+    scored in one Arrow pass (broadcast weight dicts, no bigram explode)."""
     return LM.lm_score_udf(
         extracted.select("doc_id", F.col("clean_text").alias("text")),
         bigram_weights, prefix_backoff,
@@ -124,31 +119,19 @@ def scored_rows_stage(
     lm_model: tuple[DataFrame, DataFrame],
     *,
     lm_threshold_micro: int = LM.KEEP_THRESHOLD_MICRO,
-    min_tokens: int = 5,
-    max_repetition: float = 0.8,
-    scores_only: bool = False,
 ) -> DataFrame:
-    """All ROW-LOCAL stages of the admission decision in one pass:
-    (doc_id, n_blocks_kept, lang_pred, lang_score, lm_keep, quality_keep,
-    text, n_pii) — ``text`` is the PII-redacted clean text.
+    """The composed operator's Arrow scoring pass: (doc_id, n_blocks_kept,
+    lang_pred, lang_score, lm_keep).
 
-    The composed operator's fast path: langid and LM perplexity share ONE
-    Arrow stage (one JVM->Python->JVM round trip over the clean text
-    instead of two — the scoring closures are the exact ones the
-    individual twins build, factored single-source so they cannot
-    diverge), and redaction / PII counts / the quality floor are codegen
-    column math layered above it. Replaces three separate stage scans +
-    their four doc_id flag joins in ``compose_corpus_flags`` — per-stage
+    langid and LM perplexity share ONE Arrow stage (one JVM->Python->JVM
+    round trip over the clean text instead of two — the scoring closures
+    are the exact ones :func:`lang_stage` and :func:`lm_stage` build,
+    factored single-source so they cannot diverge). The clean text
+    crosses the Arrow boundary inward only; the redaction / quality
+    columns ride a separate JVM-only pin in ``corpus_admission``, so this
+    pass can run CONCURRENTLY with the dedup chain. Per-stage
     resumability (the staged plan) still composes the individual stage
-    helpers.
-
-    ``scores_only=True`` returns just (doc_id, n_blocks_kept, lang_pred,
-    lang_score, lm_keep) and — the point — does NOT pass ``clean_text``
-    back out of the Python stage: the text crosses the Arrow boundary
-    inward only, halving the stage's return bytes (guide §4.1 column
-    discipline). Used by ``corpus_admission`` since r9, whose redaction/
-    quality columns ride a separate JVM-only pin so this Arrow pass can
-    run CONCURRENTLY with the dedup chain."""
+    helpers."""
     import pandas as pd
 
     from tilecloud_chain_spark.operators.langid import _profile_scorer
@@ -180,24 +163,17 @@ def scored_rows_stage(
                 scores.append(s)
                 lp, n = lm_one(t)
                 keeps.append(True if n == 0 else lp >= thr * n)
-            out = pdf.drop(columns=["clean_text"]) if scores_only else pdf.copy()
+            out = pdf.drop(columns=["clean_text"])
             out["lang_pred"] = preds
             out["lang_score"] = pd.array(scores, dtype="float64")
             out["lm_keep"] = pd.array(keeps, dtype="bool")
             yield out
 
     dt = dict(extracted.dtypes)
-    head = f"doc_id {dt['doc_id']}, n_blocks_kept {dt['n_blocks_kept']}, "
-    tail = "lang_pred string, lang_score double, lm_keep boolean"
-    src = extracted.select("doc_id", "n_blocks_kept", "clean_text")
-    if scores_only:
-        return src.mapInPandas(run, head + tail)
-    scored = src.mapInPandas(run, head + "clean_text string, " + tail)
-    c = F.col("clean_text")
-    return scored.select(
-        "doc_id", "n_blocks_kept", "lang_pred", "lang_score", "lm_keep",
-        _quality_col(c, min_tokens, max_repetition),
-        *_redacted_cols(c),
+    return extracted.select("doc_id", "n_blocks_kept", "clean_text").mapInPandas(
+        run,
+        f"doc_id {dt['doc_id']}, n_blocks_kept {dt['n_blocks_kept']}, "
+        "lang_pred string, lang_score double, lm_keep boolean",
     )
 
 
@@ -246,16 +222,26 @@ def compose_corpus_flags(
         .join(redacted.select("doc_id", "n_pii"), "doc_id")
         .join(dedup_flags, "doc_id")
     )
+    return _admission_row(out, decontam, lang_allow)
+
+
+def _admission_row(
+    flags: DataFrame, decontam: DataFrame | None, lang_allow: tuple[str, ...]
+) -> DataFrame:
+    """The admission rule, single-source for :func:`compose_corpus_flags`
+    and :func:`corpus_admission`: joins the decontamination flags (literal
+    True without an eval set) onto ``flags`` — which carries every other
+    stage column — and selects the 12-column admission row."""
     if decontam is not None:
-        out = out.join(decontam, "doc_id")
+        flags = flags.join(decontam, "doc_id")
     else:
-        out = out.withColumn("decontam_keep", F.lit(True))
+        flags = flags.withColumn("decontam_keep", F.lit(True))
     lang_keep = F.col("lang_pred").isin(*lang_allow)
     admitted = (
         lang_keep & F.col("lm_keep") & F.col("quality_keep")
         & F.col("exact_keep") & F.col("neardup_keep") & F.col("decontam_keep")
     )
-    return out.select(
+    return flags.select(
         "doc_id", "n_blocks_kept", "lang_pred", "lang_score",
         lang_keep.alias("lang_keep"), "lm_keep", "quality_keep", "n_pii",
         "exact_keep", "neardup_keep", "decontam_keep",
@@ -342,8 +328,8 @@ def corpus_admission(
     # (guide-standard concurrent driver jobs: the scheduler back-fills
     # executors freed by one chain's stragglers with the others' tasks;
     # actions are only sequential when driver code calls them
-    # sequentially): the Arrow scoring pass (scores_only — clean text
-    # crosses the boundary inward only), the dedup CC chain, and the
+    # sequentially): the Arrow scoring pass (clean text crosses the
+    # boundary inward only), the dedup CC chain, and the
     # decontamination probe. Scoring and decontam are eagerly pinned
     # inside their threads so their stages actually execute there rather
     # than lazily inside the flags join below.
@@ -358,7 +344,7 @@ def corpus_admission(
         model = lm_model() if callable(lm_model) else lm_model
         return scored_rows_stage(
             extracted, langid_profiles, model,
-            lm_threshold_micro=lm_threshold_micro, scores_only=True,
+            lm_threshold_micro=lm_threshold_micro,
         ).localCheckpoint(eager=True)
 
     with ThreadPoolExecutor(max_workers=3) as pool:
@@ -378,21 +364,7 @@ def corpus_admission(
         .join(red.select("doc_id", "n_pii", "quality_keep"), "doc_id")
         .join(dedup_flags, "doc_id")
     )
-    if decontam_flags is not None:
-        out = out.join(decontam_flags, "doc_id")
-    else:
-        out = out.withColumn("decontam_keep", F.lit(True))
-    lang_keep = F.col("lang_pred").isin(*lang_allow)
-    admitted = (
-        lang_keep & F.col("lm_keep") & F.col("quality_keep")
-        & F.col("exact_keep") & F.col("neardup_keep") & F.col("decontam_keep")
-    )
-    flags = out.select(
-        "doc_id", "n_blocks_kept", "lang_pred", "lang_score",
-        lang_keep.alias("lang_keep"), "lm_keep", "quality_keep", "n_pii",
-        "exact_keep", "neardup_keep", "decontam_keep",
-        admitted.alias("admitted"),
-    )
+    flags = _admission_row(out, decontam_flags, lang_allow)
     # consumed twice (pack filter + final join) — pin the narrow flag table
     flags = flags.localCheckpoint(eager=False)
     packed = pack_stage(redacted, flags, chunk_tokens)

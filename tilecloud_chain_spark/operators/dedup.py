@@ -11,9 +11,9 @@ the correctness oracle.
 
 Scale shape:
 - exact dedup: one hash-shuffle groupBy, map-side partial aggregation;
-- MinHash-LSH: shingle explode -> per-doc signature agg -> band explode ->
-  self-join on (band, band_hash) buckets -> exact-Jaccard verify of the
-  candidate pairs only (never all-pairs);
+- MinHash-LSH: per-doc signatures in one Arrow pass (no shingle explode)
+  -> band explode -> self-join on (band, band_hash) buckets ->
+  exact-Jaccard verify of the candidate pairs only (never all-pairs);
 - SimHash: 64-bit majority over token hashes via bit-slicing (pandas UDF,
   Arrow-batched) + hamming-radius candidate pairing;
 - embedding cosine near-dup lives in operators.similarity.
@@ -56,8 +56,8 @@ def _shingle_base(df: DataFrame, k: int, text_col: str, id_col: str):
     shingle-array expression over it.
 
     Docs with fewer than k tokens contribute one whole-text shingle (same
-    rule as the python-worker twin) — guarded with a CASE so ANSI mode's
-    strict ``element_at`` never sees an out-of-bounds index.
+    rule as :func:`minhash_signatures_udf`) — guarded with a CASE so ANSI
+    mode's strict ``element_at`` never sees an out-of-bounds index.
 
     The token array is materialized as its own projection FIRST: Catalyst
     does not common-subexpression-eliminate inside higher-order-function
@@ -106,8 +106,8 @@ def shingles(df: DataFrame, k: int = 3, text_col: str = "text", id_col: str = "d
     generator child is a plain attribute, and predicate pushdown then
     substitutes the whole tokenize+transform expression into that filter —
     the entire shingle computation runs TWICE per row at the scan (measured
-    0.8 s -> 10 s on the sf0.1 MinHash SQL twin when this was refactored
-    through an attribute)."""
+    0.8 s -> 10 s on an sf0.1 shingle-table MinHash when this was
+    refactored through an attribute)."""
     base, sh = _shingle_base(df, k, text_col, id_col)
     return base.select("id", F.explode(sh).alias("shingle")).distinct()
 
@@ -211,24 +211,6 @@ def jaccard_pairs(
 # --------------------------------------------------------------------------
 
 
-def minhash_signatures(
-    df: DataFrame,
-    num_hashes: int = 16,
-    k: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Per-doc MinHash signature: sig_i = min(md5(i || ':' || shingle))
-    (lexicographic min over hex — engine-portable). Output: id, sig array."""
-    sh = shingles(df, k, text_col, id_col)
-    aggs = [
-        F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("shingle")))).alias(f"h{i}")
-        for i in range(num_hashes)
-    ]
-    sig = sh.groupBy("id").agg(*aggs)
-    return sig.select("id", F.array(*[f"h{i}" for i in range(num_hashes)]).alias("sig"))
-
-
 def lsh_candidate_pairs(
     sig: DataFrame, bands: int = 8, rows_per_band: int = 2,
     max_bucket: int | None = None, sig_materialized: bool = False,
@@ -306,16 +288,14 @@ def minhash_dedup_pairs(
     k: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-    use_scale_path: bool = True,
     collapse_exact: bool = True,
     exact_pairs: str = "expand",
     max_bucket: int | None = None,
 ) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline: signatures -> banded buckets ->
     candidate pairs -> exact-Jaccard verification (only candidates pay the
-    verification join). ``use_scale_path`` computes signatures with the
-    python-worker twin (no shingle explode/shuffle — the 100 TB plan);
-    False uses the SQL-expressible form (value-identical, oracle parity).
+    verification join). Signatures come from :func:`minhash_signatures_udf`
+    (Arrow batches, no shingle explode or shuffle).
 
     ``collapse_exact`` (default True — the degenerate-bucket fix): group
     docs by md5(text) first and run the whole MinHash/LSH/verify pipeline on
@@ -349,15 +329,14 @@ def minhash_dedup_pairs(
     # every downstream join/signature/verify stage inherits the partitioning,
     # so no probe ever lands on a join-fed plan
     df = _ensure_parallelism(df)
-    sig_fn = minhash_signatures_udf if use_scale_path else minhash_signatures
     if not collapse_exact:
-        sig = sig_fn(df, num_hashes, k, text_col, id_col)
+        sig = minhash_signatures_udf(df, num_hashes, k, text_col, id_col)
         cand = lsh_candidate_pairs(sig, bands, rows_per_band, max_bucket)
         return jaccard_pairs(df, threshold, k, text_col, id_col, candidates=cand)
 
     rep_pairs, mem = _collapsed_rep_pairs(
         df, threshold, num_hashes, bands, rows_per_band, k, text_col, id_col,
-        sig_fn, max_bucket,
+        max_bucket,
     )
     one = F.round(F.lit(1.0), 6)
     if exact_pairs == "star":
@@ -406,7 +385,6 @@ def _collapsed_rep_pairs(
     k: int,
     text_col: str,
     id_col: str,
-    sig_fn,
     max_bucket: int | None,
 ) -> tuple[DataFrame, DataFrame]:
     """Shared collapsed-LSH core: (rep_pairs, mem) where ``rep_pairs`` are
@@ -447,7 +425,9 @@ def _collapsed_rep_pairs(
     # band projection deriving from it is cheap JVM column math that each
     # banding self-join side can re-run from the pinned signatures, which
     # drops one dedicated checkpoint job per call
-    sig = sig_fn(reps, num_hashes, k, text_col, id_col).localCheckpoint(eager=True)
+    sig = minhash_signatures_udf(
+        reps, num_hashes, k, text_col, id_col
+    ).localCheckpoint(eager=True)
     # LAZY pin for the candidate list: the verify stage references it twice
     # (the id-restriction semi-join and the pair join) — the pin keeps the
     # band self-join single-execution, while its final post-shuffle
@@ -468,12 +448,16 @@ def minhash_signatures_udf(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Scale-path twin of :func:`minhash_signatures`: identical semantics
-    (sig_i = lexicographic min of md5(f"{i}:{shingle}") hex), computed inside
-    Arrow-batched python workers with C md5 — no shingle explode/shuffle at
-    all. One pass over each document; the only shuffle left in a dedup
-    pipeline is the band-bucket join. Property-tested equal to the
-    SQL-expressible version.
+    """Per-doc MinHash signature: (id, sig array<string>) with sig_i = the
+    lexicographic min of md5(f"{i}:{shingle}") hex over the doc's distinct
+    k-token shingles (order-isomorphic to the numeric min, and
+    engine-portable). Computed inside Arrow-batched python workers with C
+    md5 — no shingle explode/shuffle at all. One pass over each document;
+    the only shuffle left in a dedup pipeline is the band-bucket join.
+
+    Tokens are :func:`operators.text.tokens` exactly: lowercase, split on
+    ASCII whitespace (the regex ``\\s`` class — Python's str.split() would
+    also split on U+3000, NBSP, ...), empty tokens dropped.
 
     Parallelism guard: a narrow input (e.g. one small parquet file => one
     partition) would run the whole compute-bound signature stage on ONE
@@ -482,10 +466,13 @@ def minhash_signatures_udf(
     on local[32]). The gate only ever fires on tiny inputs — at 100 TB the
     scan already yields orders of magnitude more partitions than cores and
     no shuffle is added."""
+    import re
+
     import pandas as pd
 
     nh = int(num_hashes)
     kk = int(k)
+    ws = re.compile(r"[ \t\n\x0b\f\r]+")
 
     def compute(batches):
         import hashlib
@@ -496,7 +483,7 @@ def minhash_signatures_udf(
             ids = pdf[id_col]
             sigs: list[list[str]] = []
             for t in pdf[text_col]:
-                toks = [w for w in (t or "").lower().split() if w]
+                toks = [w for w in ws.split((t or "").lower()) if w]
                 if len(toks) >= kk:
                     sh = {
                         " ".join(toks[i : i + kk]).encode()
@@ -731,18 +718,6 @@ def hash_block(col, lo: int, hi: int):
     if hi - lo >= 64:
         return col
     return F.shiftrightunsigned(col, lo).bitwiseAND(F.lit((1 << (hi - lo)) - 1))
-
-
-def hamming_block_bounds(max_hamming: int) -> list[tuple[int, int]]:
-    """The ``max_hamming + 1`` contiguous bit-slices of a 64-bit hash used
-    for pigeonhole blocking (a pair within the radius agrees exactly on at
-    least one slice). Retained for the contiguous-block consumers
-    (``sources/media.py``); the shared block join below uses INTERLEAVED
-    groups instead — see :func:`interleaved_positions`."""
-    nb = int(max_hamming) + 1
-    if not 1 <= nb <= 64:
-        raise ValueError(f"max_hamming must be in [0, 63], got {max_hamming}")
-    return [(i * 64 // nb, (i + 1) * 64 // nb) for i in range(nb)]
 
 
 def interleaved_positions(nb: int, positions: list[int] | None = None) -> list[list[int]]:
@@ -1360,7 +1335,7 @@ def dedup_clusters(
     df = _ensure_parallelism(df)
     rep_pairs, mem = _collapsed_rep_pairs(
         df, threshold, num_hashes, bands, rows_per_band, k, text_col, id_col,
-        minhash_signatures_udf, None,
+        None,
     )
     cc = connected_components(rep_pairs, emit_singletons=False)
     # mem is one row per input row by construction (keyed ⋈ unique-per-hash
@@ -1406,7 +1381,7 @@ def dedup_keep_flags(
     df = _ensure_parallelism(df)
     rep_pairs, mem = _collapsed_rep_pairs(
         df, threshold, num_hashes, bands, rows_per_band, k, text_col, id_col,
-        minhash_signatures_udf, None,
+        None,
     )
     cc = connected_components(rep_pairs, emit_singletons=False)
     labeled = (

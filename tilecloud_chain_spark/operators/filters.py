@@ -29,7 +29,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from tilecloud_chain_spark.config import Grid, Layer
+from tilecloud_chain_spark.config import Grid
 from tilecloud_chain_spark.functions import gridmath as GM
 from tilecloud_chain_spark.geometry import Geom
 
@@ -79,15 +79,6 @@ def geom_intersect_filter(
     return df.filter(pred)
 
 
-def layer_geom_filter(df: DataFrame, grid: Grid, layer: Layer, geoms: dict[int, Geom],
-                      metatiles: bool = False) -> DataFrame:
-    """FL1 with the reference's layer buffer rule:
-    px_buffer + meta_buffer when the layer is metatiled, else 0."""
-    buffer_px = layer.filter_buffer_px() if metatiles else 0.0
-    n = "n" if metatiles and layer.meta else 1
-    return geom_intersect_filter(df, grid, geoms, buffer_px=buffer_px, n=n)
-
-
 def hash_drop(
     df: DataFrame,
     empty_hash: str | None,
@@ -107,11 +98,6 @@ def hash_drop(
     if keep_col is not None:
         return df.withColumn(keep_col, pred)
     return df.filter(pred)
-
-
-def drop_empty(df: DataFrame, data_col: str = "data") -> DataFrame:
-    """FL3 — drop tiles with no payload."""
-    return df.filter(F.col(data_col).isNotNull() & (F.length(F.col(data_col)) > 0))
 
 
 def process_filter(

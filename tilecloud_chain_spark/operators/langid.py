@@ -8,7 +8,7 @@ weights; a document is scored per language by summing the weights of its
 n-gram occurrences (a fixed floor penalty for grams outside the profile)
 and normalizing by the document's gram count. Profiles are PLUGGABLE — any
 (lang, gram, w_micro) DataFrame trained on any corpus plugs into
-:func:`langid_ngram`.
+:func:`langid_ngram_udf`.
 
 Engine-portability: weights are MICRO-integers (``round(ln(p) * 1e6)`` as
 BIGINT), so every aggregation is an exact integer sum — float group-sums
@@ -17,16 +17,16 @@ not — and the whole train+classify pipeline has an exact ANSI-SQL oracle.
 
 Scale shape: training is one explode + groupBy over the training corpus
 (linear, one shuffle) + a per-language top-K window over the (lang, gram)
-counts table (small). Classification's SQL form is one explode + two
-groupBys; the scale path (:func:`langid_ngram_udf`) scores inside Arrow
-batches against the broadcast profile dict — no gram explode, no shuffle,
-one pass per document (property-tested equal to the SQL form).
+counts table (small). Classification (:func:`langid_ngram_udf`) scores
+inside Arrow batches against the broadcast profile dict — no gram
+explode, no shuffle, one pass per document. Its correctness reference is
+the DuckDB oracle of the ``langid_ngram`` gate, which recomputes training
+and scoring in SQL.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
-from pyspark.sql.functions import broadcast
 from pyspark.sql.window import Window
 
 #: floor log-probability (micro units) for grams absent from a profile;
@@ -70,11 +70,11 @@ DEMO_TRAIN = [
 
 
 def _round6(x: float) -> float:
-    """Spark-parity rounding: F.round applies HALF_UP to the SHORTEST
+    """SQL-parity rounding: F.round applies HALF_UP to the SHORTEST
     DECIMAL representation of the double (BigDecimal.valueOf), whereas
     Python's round() is banker's on the binary value — they disagree on
-    exact .5 ties (e.g. -12.5 micro), which would break the UDF-twin
-    set-equality on tie-hitting corpora."""
+    exact .5 ties (e.g. -12.5 micro), which would break equality with the
+    SQL-rounded scores on tie-hitting corpora."""
     from decimal import ROUND_HALF_UP, Decimal
 
     return float(Decimal(repr(x)).quantize(Decimal("0.000001"), ROUND_HALF_UP))
@@ -120,78 +120,10 @@ def train_ngram_profiles(
     )
 
 
-def langid_ngram(
-    df: DataFrame,
-    profiles: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    miss_penalty_micro: int = MISS_PENALTY_MICRO,
-) -> DataFrame:
-    """Classify each document against the profile table (SQL-expressible
-    form). Output: (id_col, lang_pred, score) — score is the winning
-    language's mean per-gram log-probability; 'und' / 0.0 for documents
-    with no n-grams. Ties break lexicographically on language."""
-    grams = (
-        df.select(
-            F.col(id_col).alias("id"),
-            F.explode(char_ngrams(F.col(text_col), n)).alias("gram"),
-        )
-        .groupBy("id", "gram")
-        .agg(F.count("*").alias("c"))
-    )
-    # n_grams derives from the same explode (sum of per-gram counts) — a
-    # second F.size(char_ngrams(...)) branch would normalize + gram-build
-    # every document twice; gram-less docs come back via the id left join
-    doc_n = (
-        df.select(F.col(id_col).alias("id"))
-        .join(grams.groupBy("id").agg(F.sum("c").alias("_ng")), "id", "left")
-        .select("id", F.coalesce("_ng", F.lit(0)).alias("n_grams"))
-    )
-    matched = (
-        grams.join(broadcast(profiles), "gram")
-        .groupBy("id", "lang")
-        .agg(
-            F.sum(F.col("c") * F.col("w_micro")).alias("mw"),
-            F.sum("c").alias("mc"),
-        )
-    )
-    langs = profiles.select("lang").distinct()
-    scored = (
-        doc_n.crossJoin(broadcast(langs))
-        .join(matched, ["id", "lang"], "left")
-        .select(
-            "id", "lang", "n_grams",
-            (
-                F.coalesce("mw", F.lit(0))
-                + (F.col("n_grams") - F.coalesce("mc", F.lit(0)))
-                * F.lit(int(miss_penalty_micro))
-            ).alias("score_micro"),
-        )
-    )
-    win = Window.partitionBy("id").orderBy(
-        F.col("score_micro").desc(), F.col("lang").asc()
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(win))
-        .filter(F.col("rn") == 1)
-        .select(
-            F.col("id").alias(id_col),
-            F.when(F.col("n_grams") == 0, F.lit("und"))
-            .otherwise(F.col("lang")).alias("lang_pred"),
-            F.when(F.col("n_grams") == 0, F.lit(0.0)).otherwise(
-                F.round(
-                    F.col("score_micro") / F.col("n_grams") / F.lit(1e6), 6
-                )
-            ).alias("score"),
-        )
-    )
-
-
 def _profile_scorer(prof_rows, n: int = 3,
                     miss_penalty_micro: int = MISS_PENALTY_MICRO):
     """Build the per-text scoring closure (text -> (lang_pred, score))
-    from COLLECTED profile rows — the single source of the Arrow-twin
+    from COLLECTED profile rows — the single source of the langid
     numerics, shared by :func:`langid_ngram_udf` and the fused corpus row
     stage (``operators/corpus.py``) so the two cannot diverge. Construct
     INSIDE the worker function (once per task) — the closure holds the
@@ -219,9 +151,9 @@ def _profile_scorer(prof_rows, n: int = 3,
                 table[gram] = vec
             vec[li] = wm
     nn = int(n)
-    # EXACT Spark-semantics normalization, or the twin silently diverges
-    # from the SQL form on multi-line/tabbed text: Spark F.trim strips
-    # SPACES only (not \n\t), and Java's \s is the ASCII class — Python's
+    # EXACT SQL-semantics normalization, or scoring silently diverges from
+    # the oracle on multi-line/tabbed text: SQL trim strips SPACES only
+    # (not \n\t), and the regex \s is the ASCII class — Python's
     # strip()/re \s additionally cover Unicode whitespace (U+00A0 etc.)
     ws = re.compile(r"[ \t\n\x0b\f\r]+")
 
@@ -255,10 +187,14 @@ def langid_ngram_udf(
     n: int = 3,
     miss_penalty_micro: int = MISS_PENALTY_MICRO,
 ) -> DataFrame:
-    """Scale-path twin of :func:`langid_ngram`: profiles collected once
-    (bounded: langs x top_k rows) and broadcast inside an Arrow-batched
-    stage; each document is scored in one pass with NO gram explode and no
-    shuffle. Identical output (property-tested)."""
+    """Classify each document against the profile table. Output:
+    (id_col, lang_pred, score) — score is the winning language's mean
+    per-gram log-probability (6dp); 'und' / 0.0 for documents with no
+    n-grams. Ties break lexicographically on language.
+
+    Profiles are collected once (bounded: langs x top_k rows) and broadcast
+    inside an Arrow-batched stage; each document is scored in one pass with
+    NO gram explode and no shuffle."""
     import pandas as pd
 
     prof_rows = profiles.collect()  # bounded: len(langs) * top_k

@@ -24,10 +24,11 @@ oracle; the keep decision compares integers (``lp_micro >= threshold *
 n_bigrams``), never floats.
 
 Scale shape: training is two explode+groupBy passes over the (small)
-reference corpus; scoring's SQL form is one bigram explode + two broadcast
-joins + one groupBy; the scale path (:func:`lm_score_udf`) scores inside
-Arrow batches against the broadcast weight dicts — no explode, no
-shuffle, one pass per document (property-tested equal to the SQL form).
+reference corpus; bigram scoring (:func:`lm_score_udf`) runs inside Arrow
+batches against the broadcast weight dicts — no explode, no shuffle, one
+pass per document. Trigram scoring (:func:`lm3_score`) is one trigram
+explode + three broadcast joins + one groupBy. Both are gated against
+DuckDB oracles that retrain and rescore in SQL.
 """
 
 from __future__ import annotations
@@ -106,7 +107,7 @@ def train_bigram_lm(
     aggregate — is materialized ONCE (lazy localCheckpoint: AQE executes
     its shuffle stages here, the final stage rides the first consumer's
     job) and BOTH outputs derive from it: previously each weight table
-    (and every ``collect()``/broadcast of it — the scale twins collect
+    (and every ``collect()``/broadcast of it — the scoring stages collect
     both) re-ran the whole explode chain, and the vocabulary size was a
     third full eager pass. ``vocab_df`` lets :func:`train_trigram_lm`
     share one vocabulary subplan across its levels."""
@@ -137,67 +138,18 @@ def train_bigram_lm(
     return bw, pw
 
 
-def lm_score(
-    df: DataFrame,
-    bigram_weights: DataFrame,
-    prefix_backoff: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    keep_threshold_micro: int = KEEP_THRESHOLD_MICRO,
-    miss_penalty_micro: int = MISS_PENALTY_MICRO,
-) -> DataFrame:
-    """Score + filter (SQL-expressible form): (id_col, lp_micro,
-    n_bigrams, avg_logprob, keep) — ``keep`` is the INTEGER comparison
-    ``lp_micro >= keep_threshold_micro * n_bigrams`` (exact cross-engine);
-    documents with <2 tokens score 0/0 and keep (nothing to judge).
-    ``avg_logprob`` = mean per-bigram log-prob (6dp), the human-readable
-    twin of the integer decision."""
-    pairs = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(_bigram_pairs(F.col(text_col))).alias("p"),
-    ).select("id", "p.w1", "p.w2")
-    scored = (
-        pairs.join(broadcast(bigram_weights), ["w1", "w2"], "left")
-        .join(broadcast(prefix_backoff), "w1", "left")
-        .select(
-            "id",
-            F.coalesce(
-                "w_micro", "backoff_micro", F.lit(int(miss_penalty_micro))
-            ).alias("s"),
-        )
-        .groupBy("id")
-        .agg(F.sum("s").alias("_lp"), F.count("*").alias("_n"))
-    )
-    out = (
-        df.select(F.col(id_col).alias("id"))
-        .join(scored, "id", "left")
-        .select(
-            F.col("id").alias(id_col),
-            F.coalesce("_lp", F.lit(0)).cast("long").alias("lp_micro"),
-            F.coalesce("_n", F.lit(0)).cast("int").alias("n_bigrams"),
-            F.when(F.col("_n").isNull(), F.lit(0.0)).otherwise(
-                F.round(F.col("_lp") / F.col("_n") / F.lit(1e6), 6)
-            ).alias("avg_logprob"),
-            F.coalesce(
-                F.col("_lp") >= F.lit(int(keep_threshold_micro)) * F.col("_n"),
-                F.lit(True),
-            ).alias("keep"),
-        )
-    )
-    return out
-
-
 def _bigram_scorer(bw_rows, pw_rows, miss_penalty_micro: int = MISS_PENALTY_MICRO):
     """Build the per-text scoring closure (text -> (lp_micro, n_bigrams))
-    from COLLECTED weight rows — the single source of the Arrow-twin
+    from COLLECTED weight rows — the single source of the bigram-LM
     numerics, shared by :func:`lm_score_udf` and the fused corpus row
     stage (``operators/corpus.py``). Construct inside the worker function
     (once per task)."""
     import re
 
-    # Java-regex \s parity: Spark's tokens() splits on ASCII whitespace
-    # only; Python str.split() is Unicode-wide (NBSP, U+2028, ...) and
-    # would diverge on real crawl text (same rule as quality_classify_udf).
+    # regex \s parity: Spark's tokens() and the SQL oracle split on ASCII
+    # whitespace only; Python str.split() is Unicode-wide (NBSP, U+2028,
+    # ...) and would diverge on real crawl text (same rule as
+    # quality_classify_udf).
     ws = re.compile(r"[ \t\n\x0b\f\r]+")
     bmap = {(r["w1"], r["w2"]): int(r["w_micro"]) for r in bw_rows}
     pmap = {r["w1"]: int(r["backoff_micro"]) for r in pw_rows}
@@ -226,11 +178,16 @@ def lm_score_udf(
     keep_threshold_micro: int = KEEP_THRESHOLD_MICRO,
     miss_penalty_micro: int = MISS_PENALTY_MICRO,
 ) -> DataFrame:
-    """The 100 TB scale path: identical output to :func:`lm_score`
-    (property-tested), but scoring runs inside Arrow batches against the
-    broadcast weight dicts — no bigram explode, no shuffle, one pass per
-    document. The weight tables are reference-corpus-sized (bounded by
-    its bigram vocabulary), the standard broadcast-dimension assumption."""
+    """Score + filter: (id_col, lp_micro, n_bigrams, avg_logprob, keep) —
+    ``keep`` is the INTEGER comparison ``lp_micro >= keep_threshold_micro
+    * n_bigrams`` (exact cross-engine); documents with <2 tokens score 0/0
+    and keep (nothing to judge). ``avg_logprob`` = mean per-bigram
+    log-prob (6dp), the human-readable view of the integer decision.
+
+    Scoring runs inside Arrow batches against the broadcast weight dicts —
+    no bigram explode, no shuffle, one pass per document. The weight
+    tables are reference-corpus-sized (bounded by its bigram vocabulary),
+    the standard broadcast-dimension assumption."""
     import pandas as pd
 
     bw_rows = bigram_weights.collect()
@@ -240,7 +197,7 @@ def lm_score_udf(
     id_type = dict(df.dtypes)[id_col]
 
     def run(batches):
-        from decimal import ROUND_HALF_UP, Decimal
+        from tilecloud_chain_spark.operators.langid import _round6
 
         score_one = _bigram_scorer(bw_rows, pw_rows, miss)
         for pdf in batches:
@@ -253,12 +210,7 @@ def lm_score_udf(
                     avgs.append(0.0)
                     keeps.append(True)
                 else:
-                    # Spark F.round parity: HALF_UP on the shortest decimal
-                    # repr (see langid._round6)
-                    avgs.append(float(
-                        Decimal(repr(lp / n / 1e6)).quantize(
-                            Decimal("0.000001"), ROUND_HALF_UP)
-                    ))
+                    avgs.append(_round6(lp / n / 1e6))
                     keeps.append(lp >= thr * n)
             yield pd.DataFrame({
                 id_col: pdf[id_col],
@@ -414,84 +366,6 @@ def lm3_score(
     )
 
 
-def lm3_score_udf(
-    df: DataFrame,
-    trigram_weights: DataFrame,
-    bigram_weights: DataFrame,
-    prefix_backoff: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    keep_threshold_micro: int = KEEP_THRESHOLD_MICRO,
-    miss_penalty_micro: int = MISS_PENALTY_MICRO,
-    backoff_alpha_micro: int = BACKOFF_ALPHA_MICRO,
-) -> DataFrame:
-    """The 100 TB scale twin of :func:`lm3_score` (property-tested equal):
-    no trigram explode, no shuffle — one Arrow pass per document against
-    the broadcast weight dicts (reference-corpus-sized, the standard
-    broadcast-dimension assumption)."""
-    import re
-
-    import pandas as pd
-
-    # ASCII-whitespace split for Java-regex \s parity (see lm_score_udf)
-    ws = re.compile(r"[ \t\n\x0b\f\r]+")
-    tmap = {(r["w1"], r["w2"], r["w3"]): int(r["t_micro"])
-            for r in trigram_weights.collect()}
-    bmap = {(r["w1"], r["w2"]): int(r["w_micro"])
-            for r in bigram_weights.collect()}
-    pmap = {r["w1"]: int(r["backoff_micro"])
-            for r in prefix_backoff.collect()}
-    miss = int(miss_penalty_micro)
-    thr = int(keep_threshold_micro)
-    alpha = int(backoff_alpha_micro)
-    id_type = dict(df.dtypes)[id_col]
-
-    def run(batches):
-        from decimal import ROUND_HALF_UP, Decimal
-
-        for pdf in batches:
-            lps, ns, avgs, keeps = [], [], [], []
-            for t in pdf[text_col]:
-                toks = [w for w in ws.split((t or "").lower()) if w]
-                lp = 0
-                n = len(toks) - 2 if len(toks) >= 3 else 0
-                for i in range(n):
-                    w = tmap.get((toks[i], toks[i + 1], toks[i + 2]))
-                    if w is None:
-                        b = bmap.get((toks[i + 1], toks[i + 2]))
-                        if b is not None:
-                            w = b + alpha
-                        else:
-                            p = pmap.get(toks[i + 1])
-                            w = p + alpha if p is not None else miss
-                    lp += w
-                lps.append(lp)
-                ns.append(n)
-                if n == 0:
-                    avgs.append(0.0)
-                    keeps.append(True)
-                else:
-                    avgs.append(float(
-                        Decimal(repr(lp / n / 1e6)).quantize(
-                            Decimal("0.000001"), ROUND_HALF_UP)
-                    ))
-                    keeps.append(lp >= thr * n)
-            yield pd.DataFrame({
-                id_col: pdf[id_col],
-                "lp_micro": pd.array(lps, dtype="int64"),
-                "n_trigrams": pd.array(ns, dtype="int32"),
-                "avg_logprob": pd.array(avgs, dtype="float64"),
-                "keep": pd.array(keeps, dtype="bool"),
-            })
-
-    src = _ensure_parallelism(df.select(id_col, text_col))
-    return src.mapInPandas(
-        run,
-        f"{id_col} {id_type}, lp_micro long, n_trigrams int, "
-        "avg_logprob double, keep boolean",
-    )
-
-
 def lm_perplexity_buckets(
     df: DataFrame,
     bigram_weights: DataFrame,
@@ -515,7 +389,7 @@ def lm_perplexity_buckets(
     deterministic order, and integer bucket arithmetic — cross-engine
     exact, where interpolated percentile thresholds are not.
 
-    Scale shape: scoring is :func:`lm_score` (broadcast model joins); the
+    Scale shape: scoring is :func:`lm_score_udf` (one Arrow pass); the
     global rank uses the engine's distributed prefix-sum ranking (range
     repartition + per-partition offsets — NEVER a single-partition global
     window; ``image_curation._distributed_rank``), so the only full-data
@@ -524,12 +398,12 @@ def lm_perplexity_buckets(
         raise ValueError(f"need {n_buckets} labels, got {labels!r}")
     # the ranking helper lives with the other prefix-sum users; imported
     # in-function (module layering: image_curation must not load for
-    # plain lm_score users)
+    # plain lm_score_udf users)
     from tilecloud_chain_spark.operators.image_curation import (
         _distributed_rank,
     )
 
-    scored = lm_score(
+    scored = lm_score_udf(
         df, bigram_weights, prefix_backoff,
         id_col=id_col, text_col=text_col,
         miss_penalty_micro=miss_penalty_micro,

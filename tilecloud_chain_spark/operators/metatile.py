@@ -54,13 +54,3 @@ def with_parent(df: DataFrame, n: int) -> DataFrame:
     return df.withColumn("meta_x", GM.metatile_anchor(F.col("x"), n)).withColumn(
         "meta_y", GM.metatile_anchor(F.col("y"), n)
     )
-
-
-def parent_completion(df: DataFrame) -> DataFrame:
-    """J3 — per-metatile child accounting: the Spark analog of the
-    ``elapsed_togenerate`` countdown (generate.py:313-319,354-367) is a
-    groupBy over children; a parent is complete when all its children are
-    in a terminal state (here: simply counted)."""
-    return df.groupBy("z", "meta_x", "meta_y").agg(
-        F.count("*").alias("children"),
-    )

@@ -12,7 +12,7 @@ bigrams) with log-frequency weights; a document scores per label by
 summing weights over its feature occurrences (fixed floor penalty for
 features outside the profile), normalized by its feature count. Profiles
 are PLUGGABLE — any (label, feat, w_micro) DataFrame trained on any
-labeled corpus plugs into :func:`quality_classify`.
+labeled corpus plugs into :func:`quality_classify_udf`.
 
 Engine-portability: weights are MICRO-integers (``round(ln(p) * 1e6)`` as
 BIGINT), so every aggregation is an exact integer sum and the whole
@@ -20,17 +20,15 @@ train+classify pipeline has an exact ANSI-SQL oracle (gate entry
 ``quality_score_docs``).
 
 Scale shape: training is one explode + groupBy over the (small) labeled
-corpus + a per-label top-K window. Classification's SQL form is one
-feature explode + two groupBys; the scale path
+corpus + a per-label top-K window. Classification
 (:func:`quality_classify_udf`) scores inside Arrow batches against the
 broadcast profile dict — no feature explode, no shuffle, one pass per
-document (property-tested equal to the SQL form).
+document.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
-from pyspark.sql.functions import broadcast
 from pyspark.sql.window import Window
 
 from tilecloud_chain_spark.operators.text import tokens
@@ -112,75 +110,6 @@ def train_quality_profiles(
     )
 
 
-def quality_classify(
-    df: DataFrame,
-    profiles: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    miss_penalty_micro: int = MISS_PENALTY_MICRO,
-) -> DataFrame:
-    """Classify each document against the profile table (SQL-expressible
-    form). Output: (id_col, label, score) — score is the winning label's
-    mean per-feature log-probability; 'und' / 0.0 for documents with no
-    features. Ties break lexicographically on label."""
-    feats = (
-        df.select(
-            F.col(id_col).alias("id"),
-            F.explode(features(F.col(text_col))).alias("feat"),
-        )
-        .groupBy("id", "feat")
-        .agg(F.count("*").alias("c"))
-    )
-    # n_feats derives from the SAME explode (sum of per-feature counts) —
-    # a second F.size(features(...)) branch would tokenize and
-    # feature-build every document twice and re-scan the source (the
-    # tokenize-once rule test_shingle_pipeline_tokenizes_once guards
-    # elsewhere); zero-feature docs come back via the id left join
-    doc_n = (
-        df.select(F.col(id_col).alias("id"))
-        .join(feats.groupBy("id").agg(F.sum("c").alias("_nf")), "id", "left")
-        .select("id", F.coalesce("_nf", F.lit(0)).alias("n_feats"))
-    )
-    matched = (
-        feats.join(broadcast(profiles), "feat")
-        .groupBy("id", "label")
-        .agg(
-            F.sum(F.col("c") * F.col("w_micro")).alias("mw"),
-            F.sum("c").alias("mc"),
-        )
-    )
-    labels = profiles.select("label").distinct()
-    scored = (
-        doc_n.crossJoin(broadcast(labels))
-        .join(matched, ["id", "label"], "left")
-        .select(
-            "id", "label", "n_feats",
-            (
-                F.coalesce("mw", F.lit(0))
-                + (F.col("n_feats") - F.coalesce("mc", F.lit(0)))
-                * F.lit(int(miss_penalty_micro))
-            ).alias("score_micro"),
-        )
-    )
-    win = Window.partitionBy("id").orderBy(
-        F.col("score_micro").desc(), F.col("label").asc()
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(win))
-        .filter(F.col("rn") == 1)
-        .select(
-            F.col("id").alias(id_col),
-            F.when(F.col("n_feats") == 0, F.lit("und"))
-            .otherwise(F.col("label")).alias("label"),
-            F.when(F.col("n_feats") == 0, F.lit(0.0)).otherwise(
-                F.round(
-                    F.col("score_micro") / F.col("n_feats") / F.lit(1e6), 6
-                )
-            ).alias("score"),
-        )
-    )
-
-
 def quality_classify_udf(
     df: DataFrame,
     profiles: DataFrame,
@@ -188,14 +117,18 @@ def quality_classify_udf(
     text_col: str = "text",
     miss_penalty_micro: int = MISS_PENALTY_MICRO,
 ) -> DataFrame:
-    """Scale-path twin of :func:`quality_classify`: profiles collected once
-    (bounded: labels x top_k rows) and broadcast inside an Arrow-batched
-    stage; each document is scored in one pass with NO feature explode and
-    no shuffle. Identical output (property-tested).
+    """Classify each document against the profile table. Output:
+    (id_col, label, score) — score is the winning label's mean per-feature
+    log-probability (6dp); 'und' / 0.0 for documents with no features.
+    Ties break lexicographically on label.
 
-    Tokenization matches the Column form exactly: Java's ``\\s`` is the
-    ASCII whitespace class and ``F.trim`` strips spaces only, so the python
-    twin must not use str.split()/strip() (Unicode-wide)."""
+    Profiles are collected once (bounded: labels x top_k rows) and
+    broadcast inside an Arrow-batched stage; each document is scored in
+    one pass with NO feature explode and no shuffle.
+
+    Tokenization matches :func:`features` and the SQL oracle exactly: the
+    regex ``\\s`` is the ASCII whitespace class and SQL ``trim`` strips
+    spaces only, so this must not use str.split()/strip() (Unicode-wide)."""
     import re
 
     import numpy as np

@@ -11,7 +11,7 @@ Stage graph (each stage one ``run_stage`` call, keyed zoom=0):
 
     extract   html_extract          -> (doc_id, clean_text, n_blocks_*)
     redact    PII scrub             -> (doc_id, text, n_pii)
-    lang      langid_ngram          -> (doc_id, lang_pred, lang_score)
+    lang      langid_ngram_udf      -> (doc_id, lang_pred, lang_score)
     lm        bigram-LM perplexity  -> (doc_id, lm_keep)
     quality   token/repetition rule -> (doc_id, quality_keep)
     dedup     exact + LSH-CC        -> (doc_id, exact_keep, neardup_keep)

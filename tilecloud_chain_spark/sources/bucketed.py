@@ -30,10 +30,6 @@ def write_bucketed(
     w.saveAsTable(table)
 
 
-def read_table(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)
-
-
 def cell_join_bucketed(
     spark: SparkSession, left_table: str, right_table: str, key: str = "cell"
 ) -> DataFrame:
