@@ -930,7 +930,6 @@ def q_corpus_admission_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tilecloud_chain_spark.plans.corpus import admission_table, curate_corpus
 
     pages, profiles, lm_model, eval_df, _ext = _corpus_inputs(spark, sf_dir)
-    lm_model = lm_model()  # the staged plan consumes the trained tables
     root = os.path.join(tempfile.gettempdir(), "corpus_gate_store")
     shutil.rmtree(root, ignore_errors=True)
     store = CheckpointStore(spark, root)
@@ -1443,7 +1442,6 @@ def q_image_admission_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
     job = curate_images(
         spark, imgs, store, eval_df=ev, clip_pairs=pairs,
         clip_threshold=0.1, dedup_hamming=6, decontam_hamming=2, batch_size=8,
-        with_schedule=False,  # the gate compares the admission table only
     )
     return admission_table(store, job)
 

@@ -1,7 +1,10 @@
 """Resumable staged corpus-admission plan (plans/corpus.py): staged
 output equals the single-shot composed operator (operators/corpus.py),
 per-partition lineage is recorded for every stage, a killed run resumes
-exactly, and a resume with different parameters is refused."""
+exactly, and a resume with different parameters or another stage graph
+is refused."""
+
+import json
 
 import pytest
 from pyspark.sql import functions as F
@@ -17,7 +20,8 @@ from tilecloud_chain_spark.plans.corpus import admission_table, curate_corpus
 N = 40
 
 
-def _fixture(spark):
+@pytest.fixture(scope="module")
+def inputs(spark):
     """40 crawl pages with per-doc varied word banks (so cross-doc shingle
     Jaccard stays below the near-dup threshold except where intended):
     exact clones (i%9==4 copies page i-1, PII included), near clones
@@ -75,14 +79,23 @@ def _rows(df):
     return sorted(map(tuple, df.collect()))
 
 
-def test_staged_plan_equals_composed_operator(spark, tmp_path):
-    pages, profiles, lm_model, eval_df = _fixture(spark)
-    store = CheckpointStore(spark, str(tmp_path))
-    job = curate_corpus(spark, pages, store, profiles, lm_model, eval_df,
-                        **_KW)
-    want = _rows(corpus_admission(pages, profiles, lm_model, eval_df, **_KW))
-    got = _rows(admission_table(store, job))
-    assert got == want
+@pytest.fixture(scope="module")
+def want(inputs):
+    """The composed operator's result — the reference every staged run
+    must reproduce."""
+    return _rows(corpus_admission(*inputs, **_KW))
+
+
+@pytest.fixture(scope="module")
+def staged(spark, inputs, tmp_path_factory):
+    """One finished staged job: (store, job_id)."""
+    store = CheckpointStore(spark, str(tmp_path_factory.mktemp("corpus")))
+    return store, curate_corpus(spark, inputs[0], store, *inputs[1:], **_KW)
+
+
+def test_staged_plan_equals_composed_operator(staged, want):
+    store, job = staged
+    assert _rows(admission_table(store, job)) == want
     # fixture sanity: every axis varies
     adm = admission_table(store, job)
     assert 0 < adm.filter("admitted").count() < N
@@ -93,8 +106,8 @@ def test_staged_plan_equals_composed_operator(spark, tmp_path):
     assert adm.filter("NOT decontam_keep").count() > 0
     assert adm.filter("admitted AND chunk_first IS NOT NULL").count() > 0
     # every stage recorded lineage covering all docs
-    for stage in ("extract", "redact", "lang", "lm", "quality", "dedup",
-                  "decontam", "admitted"):
+    for stage in ("extract", "rows", "score", "dedup", "decontam",
+                  "admitted"):
         lin = store.lineage(job, stage)
         agg = lin.agg(F.sum("row_count").alias("rows"),
                       F.min("cell_min").alias("lo")).collect()[0]
@@ -102,38 +115,54 @@ def test_staged_plan_equals_composed_operator(spark, tmp_path):
         assert agg["lo"] == 0, stage
 
 
-def test_rerun_same_job_skips_and_param_change_refused(spark, tmp_path):
-    pages, profiles, lm_model, eval_df = _fixture(spark)
-    store = CheckpointStore(spark, str(tmp_path))
-    job = curate_corpus(spark, pages, store, profiles, lm_model, eval_df,
-                        **_KW)
-    first = _rows(admission_table(store, job))
-    job2 = curate_corpus(spark, pages, store, profiles, lm_model, eval_df,
-                         job_id=job, **_KW)
+def test_rerun_same_job_skips_and_param_change_refused(spark, inputs,
+                                                       staged, want):
+    store, job = staged
+    pages, rest = inputs[0], inputs[1:]
+    job2 = curate_corpus(spark, pages, store, *rest, job_id=job, **_KW)
     assert job2 == job
-    assert _rows(admission_table(store, job)) == first
+    assert _rows(admission_table(store, job)) == want
     with pytest.raises(ValueError, match="different parameters"):
-        curate_corpus(spark, pages, store, profiles, lm_model, eval_df,
+        curate_corpus(spark, pages, store, *rest,
                       job_id=job, lang_allow=("en",),
                       lm_threshold_micro=-5_000_000, chunk_tokens=32)
 
 
-def test_kill_mid_run_resumes_exactly(spark, tmp_path):
+def test_resume_across_stage_graphs_refused(spark, inputs, staged):
+    """A job whose marker records another stage graph — here the earlier
+    9-stage text graph, whose committed ``redact`` output has no
+    ``quality_keep`` column — is not resumed."""
+    store, job = staged
+    name, params = store.job(job)["command"].split(" ", 1)
+    old = json.loads(params)
+    assert old["nodes"] == ["extract", "rows", "score", "dedup", "decontam",
+                            "admitted", "pack"]
+    old["nodes"] = ["extract", "redact", "lang", "lm", "quality", "dedup",
+                    "decontam", "admitted", "pack"]
+    doctored = store.create_job(
+        name, command=f"{name} {json.dumps(old, sort_keys=True)}")
+    with pytest.raises(ValueError, match="different parameters"):
+        curate_corpus(spark, inputs[0], store, *inputs[1:],
+                      job_id=doctored, **_KW)
+
+
+def test_kill_mid_run_resumes_exactly(spark, inputs, want, tmp_path):
     import os
 
-    pages, profiles, lm_model, eval_df = _fixture(spark)
+    pages, profiles, lm_model, eval_df = inputs
     store = CheckpointStore(spark, str(tmp_path))
-    # an eval set with a wrong column name kills the decontam stage after
-    # extract/redact/lang/lm/quality/dedup have committed
+    # an eval set with a wrong column name kills the decontam stage; its
+    # wave siblings score and dedup still commit
     bad_eval = eval_df.withColumnRenamed("text", "wrong_name")
     with pytest.raises(Exception):
         curate_corpus(spark, pages, store, profiles, lm_model, bad_eval,
                       **_KW)
     job = [d.split("=", 1)[1]
            for d in os.listdir(f"{tmp_path}/stages")][0]
-    assert store.stage_status(job, "extract", 0) == "done"
-    assert store.stage_status(job, "dedup", 0) == "done"
+    for stage in ("extract", "rows", "score", "dedup"):
+        assert store.stage_status(job, stage, 0) == "done", stage
     assert store.stage_status(job, "decontam", 0) == "error"
+    assert store.stage_status(job, "admitted", 0) == "created"
     extract_before = store.lineage(job, "extract").agg(
         F.sum("wall_ms")).collect()[0][0]
     # resume with the corrected input: committed stages skipped
@@ -143,5 +172,4 @@ def test_kill_mid_run_resumes_exactly(spark, tmp_path):
     extract_after = store.lineage(job, "extract").agg(
         F.sum("wall_ms")).collect()[0][0]
     assert extract_after == extract_before  # extraction ran exactly once
-    want = _rows(corpus_admission(pages, profiles, lm_model, eval_df, **_KW))
     assert _rows(admission_table(store, job)) == want

@@ -10,7 +10,8 @@ from tilecloud_chain_spark.operators.image_curation import image_admission
 from tilecloud_chain_spark.plans.curation import admission_table, curate_images
 
 
-def _fixture(spark):
+@pytest.fixture(scope="module")
+def inputs(spark):
     """30 images with caption dups, phash near-dups, eval hits, and clip
     pairs for the first ten ids (even aligned / odd misaligned)."""
     import numpy as np
@@ -47,17 +48,30 @@ def _result_rows(df):
     )
 
 
-def test_staged_plan_equals_composed_operator(spark, tmp_path):
-    imgs, ev, pairs = _fixture(spark)
-    store = CheckpointStore(spark, str(tmp_path))
-    job = curate_images(
-        spark, imgs, store, eval_df=ev, clip_pairs=pairs,
-        clip_threshold=0.5, dedup_hamming=6, decontam_hamming=2, batch_size=4,
-    )
-    want = _result_rows(image_admission(
-        imgs, eval_df=ev, clip_pairs=pairs,
-        clip_threshold=0.5, dedup_hamming=6, decontam_hamming=2, batch_size=4,
-    ))
+_KW = dict(clip_threshold=0.5, dedup_hamming=6, decontam_hamming=2,
+           batch_size=4)
+
+
+@pytest.fixture(scope="module")
+def want(inputs):
+    """The composed operator's result — the reference every staged run
+    must reproduce."""
+    imgs, ev, pairs = inputs
+    return _result_rows(image_admission(imgs, eval_df=ev, clip_pairs=pairs,
+                                        **_KW))
+
+
+@pytest.fixture(scope="module")
+def staged(spark, inputs, tmp_path_factory):
+    """One finished staged job: (store, job_id)."""
+    imgs, ev, pairs = inputs
+    store = CheckpointStore(spark, str(tmp_path_factory.mktemp("curation")))
+    return store, curate_images(spark, imgs, store, eval_df=ev,
+                                clip_pairs=pairs, **_KW)
+
+
+def test_staged_plan_equals_composed_operator(staged, want):
+    store, job = staged
     assert _result_rows(admission_table(store, job)) == want
     # every stage recorded lineage covering the full id range
     for stage, n in (("dedup", 30), ("decontam", 30), ("clip", 10),
@@ -78,57 +92,57 @@ def test_staged_plan_equals_composed_operator(spark, tmp_path):
     assert sched.count() == n_batches
 
 
-def test_rerun_same_job_skips_every_stage(spark, tmp_path):
-    imgs, ev, pairs = _fixture(spark)
-    store = CheckpointStore(spark, str(tmp_path))
-    job = curate_images(spark, imgs, store, eval_df=ev, clip_pairs=pairs)
-    first = _result_rows(admission_table(store, job))
+def test_rerun_same_job_skips_every_stage(spark, inputs, staged, want):
+    imgs, ev, pairs = inputs
+    store, job = staged
     walls = {
         s: store.stage_status(job, s, 0)
         for s in ("dedup", "decontam", "clip", "admitted", "batches", "schedule")
     }
     assert set(walls.values()) == {"done"}
     job2 = curate_images(
-        spark, imgs, store, eval_df=ev, clip_pairs=pairs, job_id=job
+        spark, imgs, store, eval_df=ev, clip_pairs=pairs, job_id=job, **_KW
     )
     assert job2 == job
-    assert _result_rows(admission_table(store, job)) == first
+    assert _result_rows(admission_table(store, job)) == want
 
 
-def test_kill_mid_run_resumes_exactly(spark, tmp_path):
-    imgs, ev, pairs = _fixture(spark)
+def test_kill_mid_run_resumes_exactly(spark, inputs, want, tmp_path):
+    imgs, ev, pairs = inputs
     store = CheckpointStore(spark, str(tmp_path))
+    # clip fails; its wave siblings dedup and decontam still commit
     bad_pairs = pairs.withColumnRenamed("img_vec", "wrong_name")
     with pytest.raises(Exception):
-        curate_images(spark, imgs, store, eval_df=ev, clip_pairs=bad_pairs)
+        curate_images(spark, imgs, store, eval_df=ev, clip_pairs=bad_pairs,
+                      **_KW)
     # find the job that got partway
     jobs = [d.split("=", 1)[1] for d in
             __import__("os").listdir(f"{tmp_path}/stages")]
     job = jobs[0]
     assert store.stage_status(job, "dedup", 0) == "done"
+    assert store.stage_status(job, "decontam", 0) == "done"
     assert store.stage_status(job, "clip", 0) == "error"
+    assert store.stage_status(job, "admitted", 0) == "created"
     dedup_before = store.lineage(job, "dedup").agg(
         F.sum("wall_ms")).collect()[0][0]
     # resume with the corrected input: dedup/decontam skipped, clip reruns
-    curate_images(spark, imgs, store, eval_df=ev, clip_pairs=pairs, job_id=job)
+    curate_images(spark, imgs, store, eval_df=ev, clip_pairs=pairs,
+                  job_id=job, **_KW)
     assert store.stage_status(job, "schedule", 0) == "done"
     # the committed dedup stage was NOT re-executed (same lineage bytes)
     dedup_after = store.lineage(job, "dedup").agg(
         F.sum("wall_ms")).collect()[0][0]
     assert dedup_after == dedup_before
-    want = _result_rows(image_admission(imgs, eval_df=ev, clip_pairs=pairs))
     assert _result_rows(admission_table(store, job)) == want
 
 
-def test_resume_with_different_params_is_refused(spark, tmp_path):
-    imgs, ev, pairs = _fixture(spark)
-    store = CheckpointStore(spark, str(tmp_path))
-    job = curate_images(spark, imgs, store, eval_df=ev, clip_pairs=pairs,
-                        dedup_hamming=6)
+def test_resume_with_different_params_is_refused(spark, inputs, staged):
+    imgs, ev, pairs = inputs
+    store, job = staged
     with pytest.raises(ValueError, match="different parameters"):
         curate_images(spark, imgs, store, eval_df=ev, clip_pairs=pairs,
-                      dedup_hamming=10, job_id=job)
+                      job_id=job, **{**_KW, "dedup_hamming": 10})
     # dropping an optional input also changes the recorded shape
     with pytest.raises(ValueError, match="different parameters"):
         curate_images(spark, imgs, store, eval_df=None, clip_pairs=pairs,
-                      job_id=job)
+                      job_id=job, **_KW)

@@ -98,3 +98,19 @@ def test_consumers_never_emit_oversized_literal_map(spark):
     for m in re.finditer(r"map\(((?:[^()]|\([^()]*\))*)\)", plan):
         entries = m.group(1).count(",") // 2 + 1
         assert entries <= LITERAL_OFFSETS_MAX, plan
+
+
+def test_rank_core_refuses_a_run_split_across_partitions(spark):
+    """The rank core reads positions off ``monotonically_increasing_id``,
+    consecutive only inside one physical partition: a ``_pid`` run split
+    across two partitions breaks its contract and must raise, not
+    misrank."""
+    from tilecloud_chain_spark.operators.image_curation import (
+        _ranked_over_buckets,
+    )
+
+    base = spark.range(0, 10, numPartitions=2).withColumn("_pid", F.lit(0))
+    with pytest.raises(RuntimeError, match="not consecutive"):
+        _ranked_over_buckets(base, [], ["id"])
+    # the same rows in one partition satisfy it
+    _, pos = _ranked_over_buckets(base.coalesce(1), [], ["id"])

@@ -133,6 +133,24 @@ class CheckpointStore:
         )
         return job_id
 
+    def open_job(self, name: str, params: dict, job_id: str | None = None) -> str:
+        """Create a job recording ``params`` in its marker, or — given a
+        ``job_id`` — check that the job was created with the same
+        ``params`` and return it. A resume with different parameters is
+        refused: the new values would be silently ignored for committed
+        stages, or a mid-run kill would yield a mixed-parameter result."""
+        command = f"{name} {json.dumps(params, sort_keys=True)}"
+        if job_id is None:
+            return self.create_job(name, command=command)
+        prev = self.job(job_id).get("command", "")
+        if prev != command:
+            raise ValueError(
+                f"job {job_id} was created with different parameters — "
+                f"resume must reuse them (or start a new job).\n"
+                f"  recorded: {prev}\n  requested: {command}"
+            )
+        return job_id
+
     def job(self, job_id: str) -> dict:
         with open(os.path.join(self.root, "jobs", f"{job_id}.json")) as f:
             return json.load(f)

@@ -350,13 +350,14 @@ def cmd_curate_images(args) -> int:
 
 def cmd_curate_corpus(args) -> int:
     """Run (or resume with --job-id) the staged corpus-admission plan over
-    a crawl-shaped parquet table (doc_id, html): extract -> redact ->
-    langid / LM / quality -> dedup -> decontaminate -> admitted -> pack,
-    each stage checkpointed with per-partition lineage so a killed
-    spark-submit resumes exactly. The language-ID profiles train on the
-    embedded 9-language demo corpus (pass --langid-train for your own) and
-    the LM trains on the doc_id%7 slice of the extracted text — both
-    deterministic, so a resume retrains identical weights."""
+    a crawl-shaped parquet table (doc_id, html): extract -> rows (PII
+    redaction + quality floor) -> {score (langid + LM), dedup,
+    decontaminate} -> admitted -> pack, each stage checkpointed with
+    per-partition lineage (score, dedup and decontaminate concurrently)
+    so a killed spark-submit resumes exactly. The language-ID profiles
+    train on the embedded 9-language demo corpus (pass --langid-train for
+    your own) and the LM trains on the doc_id%7 slice of the extracted
+    text — both deterministic, so a resume retrains identical weights."""
     from pyspark.sql import functions as F
 
     from tilecloud_chain_spark.checkpoint import CheckpointStore

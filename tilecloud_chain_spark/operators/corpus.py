@@ -1,15 +1,18 @@
-"""The composed text-corpus admission capstone (r8 — the text-side twin
-of ``operators/image_curation.py:image_admission``): one call that runs
-the full crawl-to-training-corpus decision a real LLM data pipeline makes,
+"""The text-corpus admission capstone (r8 — the text-side twin of
+``operators/image_curation.py:image_admission``): the full
+crawl-to-training-corpus decision a real LLM data pipeline makes,
 
-    html_extract -> langid -> lm perplexity -> quality -> PII redaction
-    -> exact + near dedup -> benchmark decontamination -> shard packing
+    html_extract -> PII redaction + quality floor -> langid + LM
+    perplexity / exact + near dedup / benchmark decontamination
+    -> admission -> shard packing
 
-and returns ONE row per document with every stage flag, the final
+returning ONE row per document with every stage flag, the final
 ``admitted`` boolean, and (for admitted docs) the token-stream packing
-coordinates. Stage helpers are single-source: the resumable staged plan
-(``plans/corpus.py:curate_corpus``) composes exactly these functions, so
-the staged result is row-identical to this operator (gate-pinned).
+coordinates. The stage graph is declared once (:func:`corpus_graph`:
+extract -> rows -> {score, dedup, decontam} -> admitted -> pack) and run
+by ``plans/graph.py`` either in memory (:func:`corpus_admission`) or
+through the CheckpointStore (``plans/corpus.py:curate_corpus``), so the
+staged result is row-identical to this operator (gate-pinned).
 
 Scale shape: every stage is the already-scale-shaped operator it wraps —
 one Arrow stage for extraction, one Arrow pass scoring langid/LM against
@@ -17,7 +20,13 @@ the collected micro-integer models, pure-Column quality/PII,
 collapsed-LSH star edges + CC for near-dup, broadcast eval shingles for
 decontamination, distributed prefix sum for packing. The composition
 adds only narrow flag-table joins keyed by doc_id (hash joins on a single
-long key — no wide rows in any shuffle)."""
+long key — no wide rows in any shuffle).
+
+The per-stage helpers :func:`redact_stage`, :func:`lang_stage`,
+:func:`lm_stage`, :func:`quality_stage` and :func:`compose_corpus_flags`
+are not part of the graph: they are the independent stage-by-stage
+reference the benchmark's text check (``perfbench/workloads.py``)
+compares the graph against."""
 
 from __future__ import annotations
 
@@ -28,6 +37,7 @@ from tilecloud_chain_spark.operators import lm as LM
 from tilecloud_chain_spark.operators import text as TX
 from tilecloud_chain_spark.operators.html import html_extract
 from tilecloud_chain_spark.operators.langid import langid_ngram_udf
+from tilecloud_chain_spark.plans.graph import Node, run
 
 
 def extract_stage(
@@ -48,8 +58,8 @@ def extract_stage(
 
 def _redacted_cols(c) -> tuple:
     """The redaction projection, single-source for :func:`redact_stage`
-    and the composed operator's fused row pin: (text, n_pii) columns over
-    the clean-text column ``c``."""
+    and the graph's ``rows`` node: (text, n_pii) columns over the
+    clean-text column ``c``."""
     pii = TX.pii_counts(c)
     return (
         TX.redact_pii(c).alias("text"),
@@ -60,7 +70,7 @@ def _redacted_cols(c) -> tuple:
 def _quality_col(c, min_tokens: int, max_repetition: float):
     """The corpus-hygiene floor rule as one boolean Column over the
     clean-text column ``c`` — single-source for :func:`quality_stage` and
-    the composed operator's fused row pin."""
+    the graph's ``rows`` node."""
     return (
         (TX.token_count(c) >= min_tokens)
         & (TX.repetition_ratio(c) <= F.lit(max_repetition))
@@ -69,14 +79,15 @@ def _quality_col(c, min_tokens: int, max_repetition: float):
 
 def redact_stage(extracted: DataFrame) -> DataFrame:
     """(doc_id, text, n_pii) — PII-scrubbed clean text; ``n_pii`` is the
-    total typed-match count (audit column)."""
+    total typed-match count (audit column). Per-stage reference, not a
+    graph node (module docstring)."""
     return extracted.select("doc_id", *_redacted_cols(F.col("clean_text")))
 
 
 def lang_stage(extracted: DataFrame, profiles: DataFrame) -> DataFrame:
     """(doc_id, lang_pred, lang_score) over the extracted clean text, scored
     in one Arrow pass (broadcast profile dict, no gram explode, no
-    shuffle)."""
+    shuffle). Per-stage reference, not a graph node (module docstring)."""
     return langid_ngram_udf(
         extracted.select("doc_id", F.col("clean_text").alias("text")),
         profiles,
@@ -90,7 +101,8 @@ def lm_stage(
     keep_threshold_micro: int = LM.KEEP_THRESHOLD_MICRO,
 ) -> DataFrame:
     """(doc_id, lm_keep) — perplexity gate over the extracted clean text,
-    scored in one Arrow pass (broadcast weight dicts, no bigram explode)."""
+    scored in one Arrow pass (broadcast weight dicts, no bigram explode).
+    Per-stage reference, not a graph node (module docstring)."""
     return LM.lm_score_udf(
         extracted.select("doc_id", F.col("clean_text").alias("text")),
         bigram_weights, prefix_backoff,
@@ -106,7 +118,8 @@ def quality_stage(
     """(doc_id, quality_keep) — the corpus-hygiene floor rule (token count
     + repetition ratio, the ``clean_corpus`` convention); the full Gopher
     rule set stays available as ``text.gopher_keep`` for corpora long
-    enough to clear its 50-token floor."""
+    enough to clear its 50-token floor. Per-stage reference, not a graph
+    node (module docstring)."""
     return extracted.select(
         "doc_id",
         _quality_col(F.col("clean_text"), min_tokens, max_repetition),
@@ -120,18 +133,16 @@ def scored_rows_stage(
     *,
     lm_threshold_micro: int = LM.KEEP_THRESHOLD_MICRO,
 ) -> DataFrame:
-    """The composed operator's Arrow scoring pass: (doc_id, n_blocks_kept,
-    lang_pred, lang_score, lm_keep).
+    """The graph's Arrow scoring pass: (doc_id, n_blocks_kept, lang_pred,
+    lang_score, lm_keep).
 
     langid and LM perplexity share ONE Arrow stage (one JVM->Python->JVM
     round trip over the clean text instead of two — the scoring closures
     are the exact ones :func:`lang_stage` and :func:`lm_stage` build,
     factored single-source so they cannot diverge). The clean text
     crosses the Arrow boundary inward only; the redaction / quality
-    columns ride a separate JVM-only pin in ``corpus_admission``, so this
-    pass can run CONCURRENTLY with the dedup chain. Per-stage
-    resumability (the staged plan) still composes the individual stage
-    helpers."""
+    columns come from the graph's JVM-only ``rows`` node, so this pass
+    runs CONCURRENTLY with the dedup chain."""
     import pandas as pd
 
     from tilecloud_chain_spark.operators.langid import _profile_scorer
@@ -213,7 +224,8 @@ def compose_corpus_flags(
     """Join the narrow flag tables into the admission row (every stage
     flag + the final boolean). ``decontam`` may be None (no eval set) —
     the flag column is then literal True, mirroring the image capstone's
-    optional stages."""
+    optional stages. Per-stage reference, not a graph node (module
+    docstring)."""
     out = (
         extracted.select("doc_id", "n_blocks_kept")
         .join(lang, "doc_id")
@@ -229,7 +241,7 @@ def _admission_row(
     flags: DataFrame, decontam: DataFrame | None, lang_allow: tuple[str, ...]
 ) -> DataFrame:
     """The admission rule, single-source for :func:`compose_corpus_flags`
-    and :func:`corpus_admission`: joins the decontamination flags (literal
+    and the graph's ``admitted`` node: joins the decontamination flags (literal
     True without an eval set) onto ``flags`` — which carries every other
     stage column — and selects the 12-column admission row."""
     if decontam is not None:
@@ -270,6 +282,71 @@ def assemble_corpus_admission(flags: DataFrame, packed: DataFrame) -> DataFrame:
     return flags.join(packed, "doc_id", "left")
 
 
+
+
+def corpus_graph(pages, langid_profiles, lm_model, eval_df, *, lang_allow,
+                 lm_threshold_micro, min_tokens, max_repetition,
+                 near_threshold, decontam_n, chunk_tokens, max_link_density,
+                 min_block_chars, stopwords) -> list[Node]:
+    """The text capstone's stage graph, declared once for the composed
+    operator (:func:`corpus_admission`) and the staged plan
+    (``plans/corpus.py:curate_corpus``); ``plans/graph.py`` runs it::
+
+        extract   html_extract                 (doc_id, clean_text, n_blocks_*)
+        rows      redaction + PII + quality    (doc_id, text, n_pii, quality_keep)
+        score     langid + LM, one Arrow pass  + rows' n_pii, quality_keep
+        dedup     exact + LSH-CC               (doc_id, exact_keep, neardup_keep)
+        decontam  eval-shingle overlap         (doc_id, decontam_keep)  [eval_df]
+        admitted  the 12-column admission row
+        pack      token_stream_chunks over the admitted documents
+
+    ``rows`` holds the JVM-only columns dedup, decontam and pack read, so
+    the Arrow scoring pass (clean text crosses the boundary inward only)
+    runs in the same wave as the dedup chain and the decontamination
+    probe. ``lm_model`` is ``train_bigram_lm``'s (bigram_weights,
+    prefix_backoff) or a 0-arg callable returning it; a callable is
+    resolved inside the score node, so the training build (its checkpoint
+    executes the training shuffles) overlaps the dedup chain too. The
+    other parameters are :func:`corpus_admission`'s, which holds their
+    defaults."""
+    def _rows(ins: dict) -> DataFrame:
+        c = F.col("clean_text")
+        return ins["extract"].select(
+            "doc_id", *_redacted_cols(c),
+            _quality_col(c, min_tokens, max_repetition),
+        )
+
+    def _score(ins: dict) -> DataFrame:
+        model = lm_model() if callable(lm_model) else lm_model
+        return scored_rows_stage(
+            ins["extract"], langid_profiles, model,
+            lm_threshold_micro=lm_threshold_micro,
+        ).join(ins["rows"].select("doc_id", "n_pii", "quality_keep"), "doc_id")
+
+    nodes = [
+        Node("extract", (), lambda ins: extract_stage(
+            pages, max_link_density=max_link_density,
+            min_block_chars=min_block_chars, stopwords=stopwords,
+        )),
+        Node("rows", ("extract",), _rows),
+        Node("score", ("extract", "rows"), _score),
+        Node("dedup", ("rows",),
+             lambda ins: dedup_stage(ins["rows"], near_threshold)),
+    ]
+    flags = ("score", "dedup")
+    if eval_df is not None:
+        nodes.append(Node("decontam", ("rows",), lambda ins: decontam_stage(
+            ins["rows"], eval_df, decontam_n)))
+        flags += ("decontam",)
+    return nodes + [
+        Node("admitted", flags, lambda ins: _admission_row(
+            ins["score"].join(ins["dedup"], "doc_id"),
+            ins.get("decontam"), lang_allow)),
+        Node("pack", ("rows", "admitted"), lambda ins: pack_stage(
+            ins["rows"], ins["admitted"], chunk_tokens)),
+    ]
+
+
 def corpus_admission(
     pages: DataFrame,
     langid_profiles: DataFrame,
@@ -288,84 +365,27 @@ def corpus_admission(
     stopwords=None,
     extracted: DataFrame | None = None,
 ) -> DataFrame:
-    """The single-shot composed admission decision (see module docstring).
+    """The single-shot composed admission decision: :func:`corpus_graph`
+    run in memory (see the module docstring).
 
     ``pages``: (doc_id, html); ``langid_profiles``: a trained
     ``train_ngram_profiles`` table; ``lm_model``: ``train_bigram_lm``'s
-    (bigram_weights, prefix_backoff) — or a 0-arg callable returning that
-    tuple, in which case the training plan (and its checkpoint's
-    build-time shuffle execution) is deferred into the scoring thread,
-    overlapped with the dedup chain; ``eval_df``: optional (doc_id, text)
-    benchmark set for decontamination.
+    (bigram_weights, prefix_backoff), or a 0-arg callable returning that
+    tuple; ``eval_df``: optional (doc_id, text) benchmark set for
+    decontamination.
 
     ``extracted``: an ALREADY-materialized ``extract_stage(pages)`` result
     (same extraction parameters) — callers that extracted the pages once
     to fit the LM / build the eval set pass it here so the Arrow
     extraction pass is not run a second time over the identical input."""
-    if extracted is None:
-        extracted = extract_stage(
-            pages, max_link_density=max_link_density,
-            min_block_chars=min_block_chars, stopwords=stopwords,
-        )
-        # the one upstream Python-kernel stage — pin it so the Arrow parse
-        # doesn't re-run per downstream branch
-        extracted = extracted.localCheckpoint(eager=False)
-    # the JVM-only row columns (redaction + PII counts + the quality
-    # floor) pinned FIRST, eagerly, in one codegen pass over the pinned
-    # extraction: dedup, decontamination and packing read only this —
-    # which frees the Arrow SCORING pass (langid + LM, the expensive
-    # Python boundary crossing) to run CONCURRENTLY with the whole dedup
-    # chain below instead of serially ahead of it (r8 shape: score pin,
-    # THEN dedup). Eager because three threads consume it — lazy, they
-    # would race the materialization and run the projection per thread.
-    c = F.col("clean_text")
-    red = extracted.select(
-        "doc_id", *_redacted_cols(c),
-        _quality_col(c, min_tokens, max_repetition),
-    ).localCheckpoint(eager=True)
-    redacted = red.select("doc_id", "text")
-    # three independent chains given (extracted, red) — overlap them
-    # (guide-standard concurrent driver jobs: the scheduler back-fills
-    # executors freed by one chain's stragglers with the others' tasks;
-    # actions are only sequential when driver code calls them
-    # sequentially): the Arrow scoring pass (clean text crosses the
-    # boundary inward only), the dedup CC chain, and the
-    # decontamination probe. Scoring and decontam are eagerly pinned
-    # inside their threads so their stages actually execute there rather
-    # than lazily inside the flags join below.
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _scored():
-        # ``lm_model`` may be a 0-arg thunk: resolving it HERE (not at
-        # call time) runs the training plan construction — whose internal
-        # checkpoint executes the whole training-shuffle chain at build
-        # (AQE) — inside this thread, overlapped with the dedup chain
-        # instead of serially before it
-        model = lm_model() if callable(lm_model) else lm_model
-        return scored_rows_stage(
-            extracted, langid_profiles, model,
-            lm_threshold_micro=lm_threshold_micro,
-        ).localCheckpoint(eager=True)
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        fut_sc = pool.submit(_scored)
-        fut_dd = pool.submit(dedup_stage, redacted, near_threshold)
-        fut_ct = (
-            pool.submit(
-                lambda: decontam_stage(redacted, eval_df, decontam_n)
-                .localCheckpoint(eager=True)
-            )
-            if eval_df is not None else None
-        )
-        scored, dedup_flags = fut_sc.result(), fut_dd.result()
-        decontam_flags = fut_ct.result() if fut_ct is not None else None
-    out = (
-        scored
-        .join(red.select("doc_id", "n_pii", "quality_keep"), "doc_id")
-        .join(dedup_flags, "doc_id")
+    nodes = corpus_graph(
+        pages, langid_profiles, lm_model, eval_df,
+        lang_allow=lang_allow, lm_threshold_micro=lm_threshold_micro,
+        min_tokens=min_tokens, max_repetition=max_repetition,
+        near_threshold=near_threshold, decontam_n=decontam_n,
+        chunk_tokens=chunk_tokens, max_link_density=max_link_density,
+        min_block_chars=min_block_chars, stopwords=stopwords,
     )
-    flags = _admission_row(out, decontam_flags, lang_allow)
-    # consumed twice (pack filter + final join) — pin the narrow flag table
-    flags = flags.localCheckpoint(eager=False)
-    packed = pack_stage(redacted, flags, chunk_tokens)
-    return assemble_corpus_admission(flags, packed)
+    out = run(nodes, ("admitted", "pack"),
+              given=None if extracted is None else {"extract": extracted})
+    return assemble_corpus_admission(out["admitted"], out["pack"])

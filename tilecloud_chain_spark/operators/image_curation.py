@@ -44,7 +44,9 @@ from tilecloud_chain_spark.operators.dedup import (
     gather_bits,
     interleaved_positions,
 )
+from tilecloud_chain_spark.operators.image_dedup import image_caption_dedup
 from tilecloud_chain_spark.operators.similarity import _cosine
+from tilecloud_chain_spark.plans.graph import Node, run
 
 
 # ---------------------------------------------------------------------------
@@ -94,6 +96,9 @@ def phash_decontaminate(
     near-duplicate of an eval image leaks the benchmark.
 
     Output: one row per input image — (id_col, contaminated bool).
+    Precondition: ``id_col`` is unique in ``imgs`` (one row per id). The
+    output keeps the input row count, so a duplicated id yields duplicated
+    flag rows, which multiply any join on ``id_col`` downstream.
 
     Scale shape: the eval set is small (10^3-10^6 hashes) and the corpus
     is 10^12 rows, so the corpus side must never self-join or shuffle its
@@ -228,7 +233,8 @@ def _ranked_over_buckets(
     (task-local counter: within a partition it increments by exactly 1
     per row, so a contiguous sorted run's ids are consecutive) instead
     of a ``row_number`` window: the same driver collect that sizes the
-    base offsets also fetches each run's minimum id, and
+    base offsets also fetches each run's minimum (and maximum, to check
+    the ids are consecutive — a RuntimeError otherwise) id, and
     ``rank = _mid + (group_offset - run_min)`` is plain stored-column
     arithmetic. The r8 window form re-shuffled the WHOLE table by
     (_pid, group) first — the checkpoint's LogicalRDD erases the
@@ -247,8 +253,19 @@ def _ranked_over_buckets(
         # ~0.3-0.5 s each of pure toy-scale scheduling floor)
     )
     agg = base.groupBy("_pid", *group_cols).agg(
-        F.count("*").alias("_n"), F.min("_mid").alias("_mn")
+        F.count("*").alias("_n"), F.min("_mid").alias("_mn"),
+        F.max("_mid").alias("_mx"),
     ).collect()
+    # the consecutive-id reading above holds only when each run sits in
+    # ONE physical partition; a run split across partitions (or a Spark
+    # whose id stops counting by 1 per row) would silently misrank
+    broken = [r for r in agg if r["_mx"] - r["_mn"] + 1 != r["_n"]]
+    if broken:
+        raise RuntimeError(
+            "prefix-sum core contract broken: a (_pid, group) run's "
+            "monotonically_increasing_id values are not consecutive "
+            f"(first run: {broken[0].asDict()})"
+        )
     acc: dict[tuple, int] = {}
     rows: list[tuple] = []
     for r in sorted(
@@ -367,6 +384,10 @@ def epoch_schedule(
     spark = batches.sparkSession
     parts = max(spark.sparkContext.defaultParallelism, 2)
     nbuck = parts * 8
+    # _ok is md5's fixed-width (32 digits) lowercase hex: its first 8
+    # digits, read as an unsigned 32-bit int, are monotone in the string
+    # order, so buckets ascend with _ok. Another key format (mixed case,
+    # variable width) would break that and the core's contract with it.
     pid = F.expr(
         f"CAST(CAST(conv(substring(_ok, 1, 8), 16, 10) AS BIGINT) "
         f"* {nbuck} DIV 4294967296 AS INT)"
@@ -538,6 +559,66 @@ def image_quality_metrics(
 # Composed admission decision (the image twin of the text clean_corpus)
 
 
+def image_graph(imgs, eval_df, clip_pairs, *, clip_threshold, dedup_hamming,
+                caption_near_threshold, decontam_hamming, batch_size, buckets,
+                world_size=8, seed="epoch0", id_col="image_id", w_col="w",
+                h_col="h") -> list[Node]:
+    """The image capstone's stage graph, declared once for the composed
+    operator (:func:`image_admission`, which stops at ``batches``) and the
+    staged plan (``plans/curation.py:curate_images``); ``plans/graph.py``
+    runs it::
+
+        dedup     image_caption_dedup      (id, dup_group, keep)
+        decontam  phash_decontaminate      (id, contaminated)    [eval_df]
+        clip      clip_filter              (id, clip_score, keep) [clip_pairs]
+        admitted  compose_admission_flags  (id, w, h, bucket, flags, admitted)
+        batches   aspect_bucket_pack over the admitted rows
+        schedule  epoch_schedule over the batch keys
+
+    dedup, decontam and clip read only the inputs, so they form one
+    concurrent wave. The parameters are :func:`image_admission`'s and
+    ``curate_images``' (``world_size``, ``seed``), which hold their
+    defaults."""
+    nodes = [Node("dedup", (), lambda ins: image_caption_dedup(
+        imgs, dedup_hamming, id_col=id_col,
+        caption_near_threshold=caption_near_threshold,
+    ).select(id_col, "dup_group", "keep"))]
+    if eval_df is not None:
+        nodes.append(Node("decontam", (), lambda ins: phash_decontaminate(
+            imgs, eval_df, decontam_hamming, id_col=id_col,
+        ).select(id_col, "contaminated")))
+    if clip_pairs is not None:
+        nodes.append(Node("clip", (), lambda ins: clip_filter(
+            clip_pairs, clip_threshold, id_col=id_col,
+        ).select(id_col, "clip_score", "keep")))
+
+    def _admitted(ins: dict) -> DataFrame:
+        base = imgs.select(
+            id_col, w_col, h_col,
+            bucket_expr(w_col, h_col, buckets).alias("bucket"),
+        )
+        ck, ct = ins.get("clip"), ins.get("decontam")
+        return compose_admission_flags(
+            base,
+            ins["dedup"].select(id_col, F.col("keep").alias("dedup_keep")),
+            clip_flags=None if ck is None
+            else ck.select(id_col, F.col("keep").alias("_ck")),
+            contam_flags=None if ct is None
+            else ct.select(id_col, F.col("contaminated").alias("_ct")),
+            id_col=id_col,
+        )
+
+    return nodes + [
+        Node("admitted", tuple(n.name for n in nodes), _admitted),
+        Node("batches", ("admitted",), lambda ins: aspect_bucket_pack(
+            ins["admitted"].filter(F.col("admitted")), batch_size, buckets,
+            id_col=id_col, w_col=w_col, h_col=h_col,
+        ).select(id_col, "bucket", "batch_index", "slot")),
+        Node("schedule", ("batches",), lambda ins: epoch_schedule(
+            ins["batches"], world_size, seed=seed)),
+    ]
+
+
 def image_admission(
     imgs: DataFrame,
     eval_df: DataFrame | None = None,
@@ -556,7 +637,8 @@ def image_admission(
     """The end-to-end admission decision an image training pipeline runs
     over the north-rule table — the image twin of the text
     ``clean_corpus`` composition: one row per image with every stage flag
-    and the final training-batch coordinates.
+    and the final training-batch coordinates. :func:`image_graph` run in
+    memory up to ``batches``.
 
     Stages (each the module's scale-path operator, composed as-is):
 
@@ -589,63 +671,14 @@ def image_admission(
     prefer ``spark.sparkContext.setCheckpointDir`` + the reliable flag on
     ``connected_components`` (see SCALE.md).
     """
-    from tilecloud_chain_spark.operators.image_dedup import image_caption_dedup
-
-    def _dd():
-        return image_caption_dedup(
-            imgs, dedup_hamming, id_col=id_col,
-            caption_near_threshold=caption_near_threshold,
-        ).select(id_col, F.col("keep").alias("dedup_keep"))
-
-    cf = None
-    if clip_pairs is not None:
-        cf = clip_filter(clip_pairs, clip_threshold, id_col=id_col).select(
-            id_col, F.col("keep").alias("_ck")
-        )
-    ct = None
-    if eval_df is not None:
-        # dedup's eager CC chain and the decontamination probe are
-        # independent given ``imgs`` (a scan-derived projection both can
-        # read concurrently) — run them as concurrent driver jobs
-        # (guide-standard back-fill overlap); the decontam flag table is
-        # eagerly pinned inside its thread so its broadcast-join stages
-        # execute there instead of serially inside the flags join
-        from concurrent.futures import ThreadPoolExecutor
-
-        def _ct():
-            return phash_decontaminate(
-                imgs, eval_df, decontam_hamming, id_col=id_col
-            ).select(id_col, F.col("contaminated").alias("_ct")) \
-                .localCheckpoint(eager=True)
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fut_dd, fut_ct = pool.submit(_dd), pool.submit(_ct)
-            dd, ct = fut_dd.result(), fut_ct.result()
-    else:
-        dd = _dd()
-    base = imgs.select(
-        F.col(id_col),
-        F.col(w_col),
-        F.col(h_col),
-        bucket_expr(w_col, h_col, buckets).alias("bucket"),
-    )
-    # LAZY: the packing prefix-sum's counts collect is the first action
-    # over the flag table and materializes the checkpoint in the same job
-    # (eager cost a dedicated blocking pass; the reuse guarantee — CC +
-    # decontam lineage executes once — is unchanged, the checkpoint just
-    # materializes at first consumption)
-    staged = compose_admission_flags(
-        base, dd, clip_flags=cf, contam_flags=ct, id_col=id_col
-    ).localCheckpoint(eager=False)
-    packed = aspect_bucket_pack(
-        staged.filter(F.col("admitted")),
-        batch_size,
-        buckets,
-        id_col=id_col,
-        w_col=w_col,
-        h_col=h_col,
-    ).select(id_col, "batch_index", "slot")
-    return assemble_admission(staged, packed, id_col=id_col)
+    out = run(image_graph(
+        imgs, eval_df, clip_pairs,
+        clip_threshold=clip_threshold, dedup_hamming=dedup_hamming,
+        caption_near_threshold=caption_near_threshold,
+        decontam_hamming=decontam_hamming, batch_size=batch_size,
+        buckets=buckets, id_col=id_col, w_col=w_col, h_col=h_col,
+    ), ("admitted", "batches"))
+    return assemble_admission(out["admitted"], out["batches"], id_col=id_col)
 
 
 def compose_admission_flags(
@@ -693,8 +726,10 @@ def assemble_admission(
     staged: DataFrame, packed: DataFrame, id_col: str = "image_id"
 ) -> DataFrame:
     """Final admission-table shape shared by the operator and the staged
-    plan: flags left-joined with the (id, batch_index, slot) packing of
-    the admitted rows — rejected rows keep their bucket but no slot."""
+    plan: flags left-joined with the (id, batch_index, slot) columns of
+    the admitted rows' packing — rejected rows keep their bucket but no
+    slot."""
+    packed = packed.select(id_col, "batch_index", "slot")
     return staged.join(packed, id_col, "left").select(
         id_col, "clip_keep", "contaminated", "dedup_keep", "admitted",
         "bucket", "batch_index", "slot",

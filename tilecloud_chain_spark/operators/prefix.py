@@ -68,7 +68,7 @@ def attach_offsets(
             x
             for row in sorted(rows)
             for x in (F.lit("|".join(str(v) for v in row[:-1])),
-                      F.lit(int(row[-1])))
+                      F.lit(int(row[-1])).cast("long"))
         ])
         lookup = F.concat_ws("|", *[F.col(k) for k in key_cols])
         return base, off_map[lookup].cast("long")

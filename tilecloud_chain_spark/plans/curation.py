@@ -1,10 +1,11 @@
 """Resumable image-curation plan — the north-rule contract applied to the
-image+caption table: every admission stage checkpoints through the
-:class:`CheckpointStore` with per-partition lineage rows (id range, row
-count, bytes, wall time), so a killed run resumes exactly — done stages
-are skipped, error/uncommitted stages re-execute (the same
-stage-commit/retry semantics as the tile pipeline,
-``plans/pipeline.py:generate_tiles``; reference parity
+image+caption table: the image capstone's stage graph
+(``operators/image_curation.py:image_graph``) run through the
+:class:`CheckpointStore` by ``plans/graph.py``, every stage committed with
+per-partition lineage rows (id range, row count, bytes, wall time), so a
+killed run resumes exactly — done stages are skipped, error/uncommitted
+stages re-execute (the same stage-commit/retry semantics as the tile
+pipeline, ``plans/pipeline.py:generate_tiles``; reference parity
 store/postgresql.py:443-477).
 
 Stage graph (each stage = one ``run_stage`` call, keyed zoom=0):
@@ -16,12 +17,14 @@ Stage graph (each stage = one ``run_stage`` call, keyed zoom=0):
     batches   aspect_bucket_pack over the ADMITTED rows only
     schedule  epoch_schedule over the committed batch table
 
-Later stages read the committed parquet of earlier stages
-(``store.output``), never the live lineage — a resume recomputes
-nothing upstream of the first non-done stage. The final ``admitted``
-output joined with ``batches`` is row-identical to the single-shot
-composed operator (``operators/image_curation.py:image_admission``);
-the driver gate pins that equivalence against the same DuckDB oracle.
+dedup, decontam and clip run concurrently (one wave). Later stages read
+the committed parquet of earlier stages (``store.output``), never the
+live lineage — a resume recomputes nothing upstream of the first
+non-done stage. The final ``admitted`` output joined with ``batches`` is
+row-identical to the single-shot composed operator
+(``operators/image_curation.py:image_admission``), which runs the same
+graph in memory; the ``__spark_entry__`` gates pin that equivalence
+against one DuckDB oracle.
 
 Scale shape: stage outputs are narrow flag tables keyed by the single
 image_id (the lineage 'cell'); image bytes never enter a stage shuffle.
@@ -30,22 +33,24 @@ stage), and the atomic tmp-dir publish makes each stage exactly-once."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from tilecloud_chain_spark.checkpoint import CheckpointStore
 from tilecloud_chain_spark.operators.image_curation import (
     DEFAULT_BUCKETS,
-    aspect_bucket_pack,
     assemble_admission,
-    bucket_expr,
-    clip_filter,
-    compose_admission_flags,
-    epoch_schedule,
-    phash_decontaminate,
+    image_graph,
 )
-from tilecloud_chain_spark.operators.image_dedup import image_caption_dedup
+from tilecloud_chain_spark.plans import graph as G
 
-_Z = 0  # single partition key: curation stages are not zoom-structured
+
+def _cell(df: DataFrame) -> Column:
+    """Lineage cell: the image id; the schedule is keyed by batch, so
+    (bucket, batch_index) packed into one long."""
+    if "image_id" in df.columns:
+        return F.col("image_id")
+    return (F.col("bucket").cast("long") * F.lit(1_000_000_000).cast("long")
+            + F.col("batch_index").cast("long"))
 
 
 def curate_images(
@@ -64,7 +69,6 @@ def curate_images(
     seed: str = "epoch0",
     buckets=DEFAULT_BUCKETS,
     job_id: str | None = None,
-    with_schedule: bool = True,
 ) -> str:
     """Run (or resume) the staged admission pipeline; returns job_id.
 
@@ -72,13 +76,10 @@ def curate_images(
     stages are skipped (their committed parquet is reused), the failed
     stage re-executes. The caller must supply the same inputs on resume —
     the store checkpoints stage OUTPUTS, not the source table. The
-    parameter set is recorded in the job marker at creation and a resume
-    with DIFFERENT parameters is refused — otherwise the new values would
-    be silently ignored for committed stages (or, worse, a mid-run kill
-    would yield a mixed-parameter admission table)."""
-    import json
-
-    params = json.dumps({
+    parameter set and the stage names are recorded in the job marker at
+    creation and a resume with DIFFERENT ones is refused
+    (``CheckpointStore.open_job``)."""
+    params = {
         "clip_threshold": float(clip_threshold),
         "dedup_hamming": int(dedup_hamming),
         "caption_near_threshold": (
@@ -90,91 +91,11 @@ def curate_images(
         "world_size": int(world_size),
         "seed": str(seed),
         "buckets": [list(b) for b in buckets],
-        "has_eval": eval_df is not None,
-        "has_clip": clip_pairs is not None,
-    }, sort_keys=True)
-    command = f"curate_images {params}"
-    if job_id is None:
-        job_id = store.create_job("curate_images", command=command)
-    else:
-        prev = store.job(job_id).get("command", "")
-        if prev != command:
-            raise ValueError(
-                f"job {job_id} was created with different parameters — "
-                f"resume must reuse them (or start a new job).\n"
-                f"  recorded: {prev}\n  requested: {command}"
-            )
-
-    cell = F.col("image_id").alias("cell")
-
-    def _dedup() -> DataFrame:
-        return image_caption_dedup(
-            imgs, dedup_hamming,
-            caption_near_threshold=caption_near_threshold,
-        ).select(
-            "image_id", "dup_group", "keep", cell
-        )
-
-    store.run_stage(job_id, "dedup", _Z, _dedup)
-
-    if eval_df is not None:
-        def _decontam() -> DataFrame:
-            return phash_decontaminate(imgs, eval_df, decontam_hamming).select(
-                "image_id", "contaminated", cell
-            )
-
-        store.run_stage(job_id, "decontam", _Z, _decontam)
-
-    if clip_pairs is not None:
-        def _clip() -> DataFrame:
-            return clip_filter(clip_pairs, clip_threshold).select(
-                "image_id", "clip_score", "keep", cell
-            )
-
-        store.run_stage(job_id, "clip", _Z, _clip)
-
-    def _admitted() -> DataFrame:
-        base = imgs.select(
-            "image_id", "w", "h", bucket_expr("w", "h", buckets).alias("bucket")
-        )
-        dd = store.output(job_id, "dedup", _Z).select(
-            "image_id", F.col("keep").alias("dedup_keep")
-        )
-        cf = None
-        if clip_pairs is not None:
-            cf = store.output(job_id, "clip", _Z).select(
-                "image_id", F.col("keep").alias("_ck")
-            )
-        ct = None
-        if eval_df is not None:
-            ct = store.output(job_id, "decontam", _Z).select(
-                "image_id", F.col("contaminated").alias("_ct")
-            )
-        # the same single-source admission rule as the composed operator
-        return compose_admission_flags(
-            base, dd, clip_flags=cf, contam_flags=ct
-        ).withColumn("cell", F.col("image_id"))
-
-    store.run_stage(job_id, "admitted", _Z, _admitted)
-
-    def _batches() -> DataFrame:
-        adm = store.output(job_id, "admitted", _Z).filter(F.col("admitted"))
-        return aspect_bucket_pack(adm, batch_size, buckets).select(
-            "image_id", "bucket", "batch_index", "slot", cell
-        )
-
-    store.run_stage(job_id, "batches", _Z, _batches)
-
-    def _schedule() -> DataFrame:
-        bk = store.output(job_id, "batches", _Z)
-        return epoch_schedule(bk, world_size, seed=seed).withColumn(
-            "cell",
-            F.col("bucket").cast("long") * F.lit(1_000_000_000).cast("long")
-            + F.col("batch_index").cast("long"),
-        )
-
-    if with_schedule:
-        store.run_stage(job_id, "schedule", _Z, _schedule)
+    }
+    nodes = image_graph(imgs, eval_df, clip_pairs, **params)
+    job_id = store.open_job(
+        "curate_images", {**params, "nodes": [n.name for n in nodes]}, job_id)
+    G.run(nodes, ("schedule",), store=store, job_id=job_id, cell=_cell)
     return job_id
 
 
@@ -183,8 +104,5 @@ def admission_table(store: CheckpointStore, job_id: str) -> DataFrame:
     per image with every stage flag and the training-batch coordinates
     (NULL batch/slot for rejected rows) — row-identical to
     ``image_admission``."""
-    adm = store.output(job_id, "admitted", _Z).drop("cell")
-    packed = store.output(job_id, "batches", _Z).select(
-        "image_id", "batch_index", "slot"
-    )
-    return assemble_admission(adm, packed)
+    return assemble_admission(store.output(job_id, "admitted", G.ZOOM),
+                              store.output(job_id, "batches", G.ZOOM))
