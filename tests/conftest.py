@@ -1,3 +1,4 @@
+import itertools
 import os
 import sys
 
@@ -35,5 +36,34 @@ def duck_rows():
         pdf = pd.DataFrame(list(rows), columns=["doc_id", "text"])
         con.register(view, pdf.astype({"doc_id": "int64", "text": "object"}))
         return con.execute(sql).fetchall()
+
+    return run
+
+
+# job groups stay in the status store for the whole session, so every
+# counted call gets a name no earlier call used
+_JOB_GROUPS = itertools.count()
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn, *args, **kw) -> (result, n_jobs)``: call ``fn`` under
+    a job group of its own and count the Spark jobs that group launched.
+    Selecting by group (not by a before/after job-id window) leaves out
+    jobs other threads run meanwhile; jobs a callable starts from threads
+    it spawns itself carry no group and are not counted. The listener bus
+    is drained before reading, since the status store is fed
+    asynchronously."""
+    sc = spark.sparkContext
+
+    def run(fn, *args, **kw):
+        group = f"count_jobs-{next(_JOB_GROUPS)}"
+        sc.setJobGroup(group, group)
+        try:
+            result = fn(*args, **kw)
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return result, len(sc.statusTracker().getJobIdsForGroup(group))
 
     return run

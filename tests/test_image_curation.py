@@ -407,12 +407,12 @@ def test_image_quality_metrics_real_codec(spark):
 
 
 # ---------------------------------------------------------------------------
-# _distributed_rank (shared prefix-sum helper: 3 call sites)
+# the rank form of the prefix-sum core (operators/prefix.py)
 
 
 from hypothesis import given, settings, strategies as st
 
-from tilecloud_chain_spark.operators.image_curation import _distributed_rank
+from tilecloud_chain_spark.operators.prefix import prefix_sum
 
 
 @settings(max_examples=10, deadline=None)
@@ -426,7 +426,7 @@ def test_distributed_rank_matches_pandas_reference(spark, rows):
     """Grouped dense rank == pandas groupby-rank for arbitrary (group,
     order) data, regardless of how the range partitioner splits it."""
     df = spark.createDataFrame(rows, "g int, v long")
-    base, rank = _distributed_rank(df, group_cols=["g"], order_cols=["v"])
+    base, rank, _ = prefix_sum(df, order_cols=["v"], group_cols=["g"])
     got = {(r.g, r.v): r.rank for r in base.select("g", "v", rank.alias("rank")).collect()}
     want = {}
     by_g = {}
@@ -444,7 +444,7 @@ def test_distributed_rank_matches_pandas_reference(spark, rows):
 def test_distributed_rank_global_matches_sort_order(spark, rows):
     """Empty group_cols = a global dense rank in order-key order."""
     df = spark.createDataFrame([(v,) for v in rows], "v long")
-    base, rank = _distributed_rank(df, group_cols=[], order_cols=["v"])
+    base, rank, _ = prefix_sum(df, order_cols=["v"])
     got = {r.v: r.rank for r in base.select("v", rank.alias("rank")).collect()}
     assert got == {v: i for i, v in enumerate(sorted(rows))}
 

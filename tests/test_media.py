@@ -1,9 +1,7 @@
 """Audio/video multimodal plumbing: typed-metadata schema, distributed
-frame sampling + per-frame phash, windowed audio features, cross-video
-frame dedup — real Spark plumbing over the deterministic fake decoders
-(real codecs are env-gated stubs per the task brief)."""
+frame sampling + per-frame phash, cross-video frame dedup — real Spark
+plumbing over the deterministic fake frame decoder."""
 
-import pytest
 from pyspark.sql import functions as F
 
 from tilecloud_chain_spark.sources import media as M
@@ -21,13 +19,6 @@ def test_media_schema_and_determinism(spark):
          for r in M.synth_media(spark, 20, kind="video").collect()}
     assert a == b and len(a) == 20
     assert all(8 <= nf <= 15 for _, nf in a.values())
-
-
-def test_real_decode_is_env_gated_stub():
-    with pytest.raises(NotImplementedError):
-        M.decode_media(b"xxxx", "audio")
-    with pytest.raises(NotImplementedError):
-        M.decode_media(b"xxxx", "video")
 
 
 def test_sample_frames_counts_and_phash(spark):
@@ -66,17 +57,3 @@ def test_temporal_near_duplicate_frames_detected(spark):
                 brute.add((ma, fa, mb, fb, h))
     got = {(r.media_a, r.frame_a, r.media_b, r.frame_b, r.hamming) for r in pairs.collect()}
     assert got == brute
-
-
-def test_audio_features_windows(spark):
-    media = M.synth_media(spark, 8, kind="audio")
-    feats = M.audio_features(media, window_ms=250)
-    rows = feats.collect()
-    durs = {r.media_id: r.meta.duration_ms for r in media.collect()}
-    by_media = {}
-    for r in rows:
-        by_media.setdefault(r.media_id, []).append(r)
-    for mid, rs in by_media.items():
-        assert len(rs) == durs[mid] // 250
-        assert all(r.energy > 0 for r in rs)  # sinusoids have energy
-        assert all(r.zero_crossings > 0 for r in rs)

@@ -1,19 +1,21 @@
-"""attach_offsets — the shared offsets-attachment step of the distributed
-prefix-sum pattern (operators/prefix.py).
+"""The distributed prefix-sum core (operators/prefix.py): the rank and
+weighted forms, their callers' plans and job counts, and attach_offsets,
+its offsets-attachment step.
 
-Covers the r6 judge's one veto-at-scale construct: the literal create_map
-offsets table must never grow past LITERAL_OFFSETS_MAX entries (at 10^4-10^5
-cluster partitions it becomes a multi-megabyte codegen'd expression); above
-the threshold, and for any non-integral key, a broadcast-joined offsets
-DataFrame is used instead.
+The literal create_map offsets table must never grow past
+LITERAL_OFFSETS_MAX entries (at 10^4-10^5 cluster partitions it becomes a
+multi-megabyte codegen'd expression); above the threshold, and for any
+non-integral key, a broadcast-joined offsets DataFrame is used instead.
 """
 
 import pytest
+from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from tilecloud_chain_spark.operators.prefix import (
     LITERAL_OFFSETS_MAX,
     attach_offsets,
+    prefix_sum,
 )
 
 
@@ -81,36 +83,113 @@ def test_empty_rows_returns_typed_zero(spark):
 
 
 def test_consumers_never_emit_oversized_literal_map(spark):
-    """The three prefix-sum consumers (token_stream_chunks,
-    shard_assignments, _distributed_rank) on an 8-core session stay on the
-    literal path (8 partitions << 256) — and their plans therefore carry no
-    join introduced by offsets attachment beyond what the operator itself
-    needs. Counting map literal entries guards the threshold contract."""
+    """The prefix-sum core on an 8-core session stays on the literal path
+    (8 partitions x 3 groups << 256) — its plan therefore carries no join
+    introduced by offsets attachment. Counting map literal entries guards
+    the threshold contract."""
     import re
-
-    from tilecloud_chain_spark.operators.image_curation import _distributed_rank
 
     df = spark.createDataFrame(
         [(i % 3, i) for i in range(50)], "g int, v long"
     )
-    base, rank = _distributed_rank(df, group_cols=["g"], order_cols=["v"])
+    base, rank, _ = prefix_sum(df, order_cols=["v"], group_cols=["g"])
     plan = _plan(base.select("g", "v", rank.alias("r")))
     for m in re.finditer(r"map\(((?:[^()]|\([^()]*\))*)\)", plan):
         entries = m.group(1).count(",") // 2 + 1
         assert entries <= LITERAL_OFFSETS_MAX, plan
 
 
-def test_rank_core_refuses_a_run_split_across_partitions(spark):
-    """The rank core reads positions off ``monotonically_increasing_id``,
+def test_rank_core_refuses_a_run_split_across_partitions(spark, monkeypatch):
+    """The rank form reads positions off ``monotonically_increasing_id``,
     consecutive only inside one physical partition: a ``_pid`` run split
-    across two partitions breaks its contract and must raise, not
-    misrank."""
-    from tilecloud_chain_spark.operators.image_curation import (
-        _ranked_over_buckets,
-    )
+    across partitions breaks its contract and must raise, not misrank.
+    The split is forced by a partition id that reads 0 everywhere."""
+    df = spark.range(0, 10, numPartitions=2)
+    with monkeypatch.context() as m:
+        m.setattr(F, "spark_partition_id", lambda: F.lit(0))
+        with pytest.raises(RuntimeError, match="not consecutive"):
+            prefix_sum(df, order_cols=["id"])
+    # the same rows under the real partition ids satisfy it
+    base, pos, totals = prefix_sum(df, order_cols=["id"])
+    assert sorted(r.p for r in base.select(pos.alias("p")).collect()) == list(range(10))
+    assert totals == {(): 10}
 
-    base = spark.range(0, 10, numPartitions=2).withColumn("_pid", F.lit(0))
-    with pytest.raises(RuntimeError, match="not consecutive"):
-        _ranked_over_buckets(base, [], ["id"])
-    # the same rows in one partition satisfy it
-    _, pos = _ranked_over_buckets(base.coalesce(1), [], ["id"])
+
+@settings(max_examples=10, deadline=None)
+@given(rows=st.lists(
+    st.tuples(st.integers(0, 3), st.integers(-50, 50),
+              st.one_of(st.none(), st.integers(0, 1000))),
+    min_size=0, max_size=60, unique_by=lambda r: (r[0], r[1]),
+))
+def test_weighted_sum_matches_python_reference(spark, rows):
+    """Grouped exclusive running sum == a sequential Python scan (null
+    weights count as 0), and the totals are each group's weight sum."""
+    df = spark.createDataFrame(rows, "g int, v long, w long")
+    base, run, totals = prefix_sum(df, order_cols=["v"], group_cols=["g"],
+                                   weight="w")
+    got = {(r.g, r.v): r.run
+           for r in base.select("g", "v", run.alias("run")).collect()}
+    want, acc = {}, {}
+    for g, v, w in sorted(rows):
+        want[(g, v)] = acc.get(g, 0)
+        acc[g] = acc.get(g, 0) + (w or 0)
+    assert got == want
+    assert totals == {(g,): t for g, t in acc.items()}
+
+
+# Spark jobs per call (the call plus a collect of its output) before the
+# prefix sum had one core, when text.py and sampling.py each carried a
+# copy and the rank core lived in image_curation.py; the same on 4 and 8
+# cores
+_JOBS_BEFORE_CORE = {
+    "token_stream_chunks": 6,
+    "shard_assignments": 7,
+    "aspect_bucket_pack": 5,
+    "epoch_schedule": 5,
+    "lm_perplexity_buckets": 12,
+}
+
+
+def _caller(spark, name):
+    from tilecloud_chain_spark.operators import image_curation as IC
+    from tilecloud_chain_spark.operators import lm as LM
+    from tilecloud_chain_spark.operators import sampling as SA
+    from tilecloud_chain_spark.operators import text as TX
+
+    words = ["the", "cat", "sat", "on", "mat", "dog", "ran", "park"]
+    docs = spark.createDataFrame(
+        [(i, " ".join(words[(i * k) % 8] for k in range(i % 9)))
+         for i in range(200)], "doc_id long, text string")
+    if name == "token_stream_chunks":
+        return lambda: TX.token_stream_chunks(docs, 16)
+    if name == "shard_assignments":
+        return lambda: SA.shard_assignments(docs, 64, size_expr=F.length("text"))
+    if name == "aspect_bucket_pack":
+        imgs = spark.createDataFrame(
+            [(f"i{i:03d}", 64 + (i * 37) % 200, 64 + (i * 53) % 200)
+             for i in range(200)], "image_id string, w int, h int")
+        return lambda: IC.aspect_bucket_pack(imgs, 8)
+    if name == "epoch_schedule":
+        batches = spark.createDataFrame(
+            [(i % 7, i // 7) for i in range(200)],
+            "bucket int, batch_index long")
+        return lambda: IC.epoch_schedule(batches, 4)
+    ref = spark.createDataFrame(
+        [("the cat sat on the mat",), ("the dog ran in the park",)],
+        "text string")
+    bw, pw = (t.localCheckpoint() for t in LM.train_bigram_lm(ref))
+    return lambda: LM.lm_perplexity_buckets(docs, bw, pw)
+
+
+@pytest.mark.parametrize("name", sorted(_JOBS_BEFORE_CORE))
+def test_callers_read_no_exchange_after_the_pin(spark, count_jobs, name):
+    """Each caller's output reads the core's pinned frame with no
+    Exchange above it: the partition-local value was computed before the
+    pin, whose LogicalRDD erases the partitioning a window after it would
+    need. Jobs per call stay at or below the pre-core count."""
+    out, n_call = count_jobs(_caller(spark, name))
+    rows, n_collect = count_jobs(out.collect)
+    assert len(rows) == 200
+    plan = _plan(out)
+    assert "Exchange" not in plan, plan
+    assert n_call + n_collect <= _JOBS_BEFORE_CORE[name], (n_call, n_collect)

@@ -70,14 +70,6 @@ def test_salted_repartition_spreads_hot_key(spark):
     assert out.count() == 10000
 
 
-def test_tiles_per_cell_agg(spark):
-    df = synth_images(spark, 500, SWISSGRID_5, size=8)
-    a = SP.assign_tiles(df, SWISSGRID_5, [1])
-    agg = SP.tiles_per_cell(a)
-    total = agg.agg(F.sum("n_rows")).collect()[0][0]
-    assert total == 500
-
-
 def test_salting_balances_hot_cell_partitions(spark):
     """Skew evidence: a hot cell (90% of rows on one key) concentrates on a
     single partition under plain hash partitioning; salted repartition

@@ -181,7 +181,10 @@ def jaccard_pairs(
             )
             .filter(F.col("jaccard") >= threshold)
         )
-    sh = shingles(df, k, text_col, id_col).cache()
+    # read by both join sides and the sizes, pinned lazily (the caller's
+    # action materializes it): .cache() would leave a CacheManager entry
+    # for the rest of the session
+    sh = shingles(df, k, text_col, id_col).localCheckpoint(eager=False)
     sizes = sh.groupBy("id").agg(F.count("*").alias("sz"))
     a = sh.select(F.col("id").alias("id_a"), "shingle")
     b = sh.select(F.col("id").alias("id_b"), "shingle")
@@ -1409,7 +1412,6 @@ def decontaminate(
     n: int = 8,
     text_col: str = "text",
     id_col: str = "doc_id",
-    broadcast_eval: bool = True,
 ) -> DataFrame:
     """Benchmark decontamination — the standard LM-corpus hygiene pass
     (public method: n-gram collision flagging, as described for GPT-2/GPT-3
@@ -1421,31 +1423,25 @@ def decontaminate(
     ``n_hits`` counts the doc's DISTINCT colliding shingles.
 
     Scale shape: eval sets are the SMALL side (benchmarks are thousands of
-    docs vs 10^12 train docs) — their distinct shingle set is broadcast by
-    default, so the train side pays exactly one shingle projection (the
+    docs vs 10^12 train docs) — their distinct shingle set is broadcast,
+    so the train side pays exactly one shingle projection (the
     per-doc arrays are already distinct; NO corpus-wide distinct shuffle —
     ``shingles()``'s terminal distinct would exchange the whole train
     shingle universe before the join can filter anything) + broadcast join
-    + map-side-combinable per-doc count. Pass ``broadcast_eval=False`` for
-    an eval set too large to broadcast — the explicit hint would otherwise
-    override ``autoBroadcastJoinThreshold`` and force-collect it.
+    + map-side-combinable per-doc count.
 
     Input contract: ``id_col`` unique per train row (as elsewhere in this
     module); empty-text eval rows contribute no shingles (an empty excerpt
     protects nothing — unfiltered, its whole-text '' shingle would flag
     every empty train doc as contaminated)."""
-    from pyspark.sql.functions import broadcast
-
     base, sh = _shingle_base(train, n, text_col, id_col)
     tr = base.select("id", F.explode(sh).alias("shingle"))
-    ev = (
+    ev = F.broadcast(
         shingles(eval_df, n, text_col, id_col)
         .select("shingle")
         .filter(F.length("shingle") > 0)
         .distinct()
     )
-    if broadcast_eval:
-        ev = broadcast(ev)
     # A single-aggregation LEFT-probe form (every doc explodes to >= 1
     # shingle row, so one conditional count could cover every id without
     # the all_ids join) was A/B-measured at ~2x this form's wall

@@ -15,8 +15,7 @@ phash, ``sources/images.py``) and dedup (``operators/image_dedup.py``):
   fixed-size batch packing: nearest-bucket assignment is IEEE-exact
   Column arithmetic (division/subtraction/abs only — no libm, so DuckDB
   reproduces it bit-for-bit), and the per-bucket dense rank is the
-  DISTRIBUTED prefix-sum pattern (range-repartition + per-partition
-  offsets, ``operators/text.py:token_stream_chunks``) — never a window
+  distributed prefix sum (``operators/prefix.py``) — never a window
   partitioned only by the handful of hot buckets;
 - :func:`image_quality_metrics` — decoded-pixel quality signals
   (sharpness via Laplacian variance, histogram entropy, brightness,
@@ -24,8 +23,8 @@ phash, ``sources/images.py``) and dedup (``operators/image_dedup.py``):
 
 No reference counterpart (the reference has no content curation); these
 compose the engine's existing kernels (cosine ``operators/similarity.py``,
-pigeonhole blocks ``operators/dedup.py:int64_near_pairs``, prefix-sum
-``operators/text.py``) over the image table.
+pigeonhole blocks ``operators/dedup.py:int64_near_pairs``, prefix sum
+``operators/prefix.py``) over the image table.
 """
 
 from __future__ import annotations
@@ -37,7 +36,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from tilecloud_chain_spark.operators.prefix import attach_offsets
+from tilecloud_chain_spark.operators.prefix import prefix_sum
 
 from tilecloud_chain_spark.operators.dedup import (
     blocked_keys,
@@ -190,100 +189,6 @@ def bucket_expr(
     return F.array_min(F.array(*entries))["i"]
 
 
-def _distributed_rank(
-    df: DataFrame,
-    group_cols: Sequence[str],
-    order_cols: Sequence[str],
-) -> tuple[DataFrame, F.Column]:
-    """Dense 0-based rank of each row within its group (globally when
-    ``group_cols`` is empty) WITHOUT a group-partitioned — or, worse,
-    single-partition — window: range-repartition by (group, order) keys so
-    ranks are contiguous across ascending partition ids, COUNT per
-    (partition, group) — O(partitions x groups) driver data — turn the
-    counts into base offsets, and add the partition-LOCAL rank. The one
-    full-data movement is the range repartition any global order costs.
-    Third use of the pattern (``text.py:token_stream_chunks`` pioneered
-    it); returns the checkpointed repartitioned frame (it is referenced
-    by both the counts job and the caller's final select) plus the rank
-    Column to select from it."""
-    parts = max(df.sparkSession.sparkContext.defaultParallelism, 2)
-    base = (
-        df.repartitionByRange(parts, *group_cols, *order_cols)
-        .sortWithinPartitions(*group_cols, *order_cols)
-        .withColumn("_pid", F.spark_partition_id())
-    )
-    return _ranked_over_buckets(base, group_cols, order_cols)
-
-
-def _ranked_over_buckets(
-    base: DataFrame,
-    group_cols: Sequence[str],
-    order_cols: Sequence[str],
-) -> tuple[DataFrame, F.Column]:
-    """Prefix-sum core shared by :func:`_distributed_rank` (range-derived
-    ``_pid`` = physical partition id) and callers that derive ``_pid``
-    deterministically from the order key (:func:`epoch_schedule` — no
-    range-partitioner sampling pass). Contract: every (``_pid``,
-    *group) combination is ONE contiguous run of the (group, order)
-    total order, held inside a single physical partition, rows already
-    SORTED in that order within partitions, and runs ascend with
-    ``_pid`` per group.
-
-    The partition-local rank is read off ``monotonically_increasing_id``
-    (task-local counter: within a partition it increments by exactly 1
-    per row, so a contiguous sorted run's ids are consecutive) instead
-    of a ``row_number`` window: the same driver collect that sizes the
-    base offsets also fetches each run's minimum (and maximum, to check
-    the ids are consecutive — a RuntimeError otherwise) id, and
-    ``rank = _mid + (group_offset - run_min)`` is plain stored-column
-    arithmetic. The r8 window form re-shuffled the WHOLE table by
-    (_pid, group) first — the checkpoint's LogicalRDD erases the
-    partitioning, so EnsureRequirements re-exchanged rows that were
-    already perfectly clustered (planner blindness, a full extra narrow
-    shuffle per call) — and then re-sorted inside the window. Both are
-    gone; the final consume is exchange-free and sort-free."""
-    base = base.withColumn(
-        "_mid", F.monotonically_increasing_id()
-    ).localCheckpoint(
-        eager=False
-        # LAZY: the offsets collect right below is the action that
-        # materializes the checkpoint (pinning also freezes the assigned
-        # _mid values for every later consumer) — eager would pay a
-        # second full blocking job per prefix-sum call site (r8,
-        # ~0.3-0.5 s each of pure toy-scale scheduling floor)
-    )
-    agg = base.groupBy("_pid", *group_cols).agg(
-        F.count("*").alias("_n"), F.min("_mid").alias("_mn"),
-        F.max("_mid").alias("_mx"),
-    ).collect()
-    # the consecutive-id reading above holds only when each run sits in
-    # ONE physical partition; a run split across partitions (or a Spark
-    # whose id stops counting by 1 per row) would silently misrank
-    broken = [r for r in agg if r["_mx"] - r["_mn"] + 1 != r["_n"]]
-    if broken:
-        raise RuntimeError(
-            "prefix-sum core contract broken: a (_pid, group) run's "
-            "monotonically_increasing_id values are not consecutive "
-            f"(first run: {broken[0].asDict()})"
-        )
-    acc: dict[tuple, int] = {}
-    rows: list[tuple] = []
-    for r in sorted(
-        agg,
-        key=lambda r: (tuple(r[g] for g in group_cols), int(r["_pid"])),
-    ):
-        gkey = tuple(r[g] for g in group_cols)
-        off = acc.get(gkey, 0)
-        # one attached value folds both lookups: rank = _mid + (off - mn)
-        rows.append((int(r["_pid"]), *gkey, off - int(r["_mn"])))
-        acc[gkey] = off + int(r["_n"])
-    # offsets travel as a literal map only while tiny and int-keyed; at
-    # cluster partition counts (or for non-integral group values) they
-    # become a broadcast-joined table — see operators/prefix.py
-    base, adj = attach_offsets(base, ["_pid", *group_cols], rows)
-    return base, F.col("_mid") + adj
-
-
 def aspect_bucket_pack(
     imgs: DataFrame,
     batch_size: int,
@@ -305,23 +210,23 @@ def aspect_bucket_pack(
 
     Scale shape: the naive form — ``row_number() OVER (PARTITION BY
     bucket ORDER BY id)`` — funnels a 10^12-row corpus through ~7 tasks
-    (one per bucket). Instead this is the distributed prefix-sum pattern
-    (``text.py:token_stream_chunks``): range-repartition by (bucket, id)
-    so each partition holds a contiguous id-run of one-or-few buckets,
-    COUNT per (partition, bucket) — O(partitions x buckets) driver data —
-    turn the counts into per-(partition, bucket) base offsets, and add
-    the partition-LOCAL rank. Every partition works independently; the
-    only full-data movement is the single range repartition any global
-    order costs."""
+    (one per bucket). Instead the rank is the distributed prefix sum
+    (``operators/prefix.py``): range-repartition by (bucket, id) so each
+    partition holds a contiguous id-run of one-or-few buckets, COUNT per
+    (partition, bucket) — O(partitions x buckets) driver data — turn the
+    counts into per-(partition, bucket) base offsets, and add the
+    partition-LOCAL rank. Every partition works independently; the only
+    full-data movement is the single range repartition any global order
+    costs."""
     if batch_size < 1:
         raise ValueError(f"batch_size must be >= 1, got {batch_size}")
-    base, rank = _distributed_rank(
+    base, rank, _ = prefix_sum(
         imgs.select(
             F.col(id_col).alias("id"),
             bucket_expr(w_col, h_col, buckets).alias("bucket"),
         ),
-        group_cols=["bucket"],
         order_cols=["id"],
+        group_cols=["bucket"],
     )
     b = F.lit(int(batch_size))
     return base.select(
@@ -360,10 +265,10 @@ def epoch_schedule(
     distinct's map-side partial aggregation dedups BEFORE its exchange,
     so only deduped keys ever shuffle). A naive ``row_number() OVER
     (ORDER BY md5)`` is a single-partition sort — ~10^10 batch keys at
-    the 10^12-row target — so this reuses the distributed prefix-sum
-    pattern (:func:`aspect_bucket_pack`): bucket by the hash key,
-    per-bucket COUNT (O(buckets) driver data), base offsets +
-    bucket-local rank. Unlike the generic pattern, the order key here is
+    the 10^12-row target — so the position is the distributed prefix sum
+    (``operators/prefix.py``): bucket by the hash key, per-bucket COUNT
+    (O(buckets) driver data), base offsets + bucket-local rank. Unlike
+    a range layout, the order key here is
     an md5 hex string — uniform BY CONSTRUCTION — so the bucket id is
     derived directly from the first 8 hex digits (integer-exact, and
     monotone in the string order because fixed-length lowercase-hex
@@ -381,9 +286,7 @@ def epoch_schedule(
         F.col(bucket_col).cast("string"),
         F.col(batch_col).cast("string"),
     ))
-    spark = batches.sparkSession
-    parts = max(spark.sparkContext.defaultParallelism, 2)
-    nbuck = parts * 8
+    nbuck = max(batches.sparkSession.sparkContext.defaultParallelism, 2) * 8
     # _ok is md5's fixed-width (32 digits) lowercase hex: its first 8
     # digits, read as an unsigned 32-bit int, are monotone in the string
     # order, so buckets ascend with _ok. Another key format (mixed case,
@@ -392,19 +295,11 @@ def epoch_schedule(
         f"CAST(CAST(conv(substring(_ok, 1, 8), 16, 10) AS BIGINT) "
         f"* {nbuck} DIV 4294967296 AS INT)"
     )
-    prepared = (
+    base, pos, _ = prefix_sum(
         batches.select(bucket_col, batch_col).distinct()
-        .select(okey.alias("_ok"), bucket_col, batch_col)
-        .withColumn("_pid", pid)
-        .repartition(parts, "_pid")
-        # _pid is monotone in _ok, so this sort leaves every bucket as
-        # one contiguous ascending run — the core's contract
-        .sortWithinPartitions("_ok", bucket_col, batch_col)
-    )
-    base, pos = _ranked_over_buckets(
-        prepared,
-        group_cols=[],
+        .select(okey.alias("_ok"), bucket_col, batch_col),
         order_cols=["_ok", bucket_col, batch_col],
+        pid=pid,
     )
     w = F.lit(int(world_size))
     return base.select(

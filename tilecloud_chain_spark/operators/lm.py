@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import broadcast
 
+from tilecloud_chain_spark.operators.prefix import prefix_sum
 from tilecloud_chain_spark.operators.text import tokens
 from tilecloud_chain_spark.session import ensure_parallelism as _ensure_parallelism
 
@@ -390,43 +391,34 @@ def lm_perplexity_buckets(
     exact, where interpolated percentile thresholds are not.
 
     Scale shape: scoring is :func:`lm_score_udf` (one Arrow pass); the
-    global rank uses the engine's distributed prefix-sum ranking (range
-    repartition + per-partition offsets — NEVER a single-partition global
-    window; ``image_curation._distributed_rank``), so the only full-data
-    movement is the range shuffle any global order costs."""
+    rank is the distributed prefix sum (``operators/prefix.py``) over all
+    scored docs, grouped by scoreability, so the only full-data movement
+    is the range shuffle any global order costs, and the group's total is
+    the ``n`` the buckets divide by — no join back, no separate count."""
     if len(labels) != n_buckets:
         raise ValueError(f"need {n_buckets} labels, got {labels!r}")
-    # the ranking helper lives with the other prefix-sum users; imported
-    # in-function (module layering: image_curation must not load for
-    # plain lm_score_udf users)
-    from tilecloud_chain_spark.operators.image_curation import (
-        _distributed_rank,
-    )
-
     scored = lm_score_udf(
         df, bigram_weights, prefix_backoff,
         id_col=id_col, text_col=text_col,
         miss_penalty_micro=miss_penalty_micro,
-    ).localCheckpoint(eager=False)  # ranked branch + final join; the
-    # count below is the action that materializes it
-    scoreable = scored.filter(F.col("n_bigrams") > 0).withColumn(
-        "_neg_avg", -F.col("avg_logprob")
-    )
-    n = scoreable.count()
-    if n == 0:
-        return scored.select(
+    ).localCheckpoint(eager=False)  # the range layout reads it twice
+    # (boundary sampling, then the exchange); the first one pins it
+    base, rank, totals = prefix_sum(
+        scored.select(
             id_col, "lp_micro", "n_bigrams", "avg_logprob",
-            F.lit(None).cast("string").alias("bucket"),
-        )
-    base, rank = _distributed_rank(scoreable, [], ["_neg_avg", id_col])
+            (F.col("n_bigrams") > 0).cast("int").alias("_s"),
+            (-F.col("avg_logprob")).alias("_neg_avg"),
+        ),
+        order_cols=["_neg_avg", id_col],
+        group_cols=["_s"],
+    )
+    # with no scoreable doc no bucket is read; 1 keeps the DIV defined
+    n = totals.get((1,), 1)
     bidx = F.expr(f"CAST((_rk * {int(n_buckets)}) DIV {int(n)} AS INT)")
     label = F.when(bidx == 0, F.lit(labels[0]))
     for i in range(1, n_buckets):
         label = label.when(bidx == i, F.lit(labels[i]))
-    ranked = base.withColumn("_rk", rank.cast("long")).select(
-        F.col(id_col), label.alias("bucket")
-    )
-    return (
-        scored.join(ranked, id_col, "left")
-        .select(id_col, "lp_micro", "n_bigrams", "avg_logprob", "bucket")
+    return base.withColumn("_rk", rank).select(
+        id_col, "lp_micro", "n_bigrams", "avg_logprob",
+        F.when(F.col("_s") == 1, label).alias("bucket"),
     )

@@ -18,7 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from tilecloud_chain_spark.operators.prefix import attach_offsets
+from tilecloud_chain_spark.operators.prefix import prefix_sum
 
 
 def hex_threshold(fraction: float) -> str:
@@ -98,41 +98,21 @@ def shard_assignments(
     Output: (id, n_bytes, shard, offset_in_shard) — enough to drive a
     downstream per-shard writer (``repartitionByRange("shard")`` + tar).
 
-    Scale shape: the same DISTRIBUTED prefix sum as
-    ``text.token_stream_chunks`` — range-partition by id, cumsum within
-    partitions, add per-partition base offsets from an O(partitions)
-    driver collect; never a single-partition global window. Exactly
-    reproducible in SQL (global cumsum) — pytest-oracled in
+    Scale shape: the distributed prefix sum of ``operators/prefix.py``;
+    never a single-partition global window. Exactly reproducible in SQL
+    (``SUM(n_bytes) OVER (ORDER BY id) - n_bytes``) — pytest-oracled in
     tests/test_sampling.py."""
-    from pyspark.sql.window import Window
-
     if size_expr is None:
         if size_col is None:
             raise ValueError("pass size_col or size_expr")
         size_expr = F.col(size_col)
-    parts = max(df.sparkSession.sparkContext.defaultParallelism, 2)
-    base = (
-        df.select(F.col(id_col).alias("id"), size_expr.cast("long").alias("n_bytes"))
-        .repartitionByRange(parts, "id")
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)  # referenced twice: totals + cumsum
+    base, run, _ = prefix_sum(
+        df.select(F.col(id_col).alias("id"),
+                  size_expr.cast("long").alias("n_bytes")),
+        order_cols=["id"], weight="n_bytes",
     )
-    totals = {
-        r["_pid"]: r["tot"]
-        for r in base.groupBy("_pid").agg(F.sum("n_bytes").alias("tot")).collect()
-    }
-    rows, acc = [], 0
-    for pid in sorted(totals):  # range partitions ascend in id order
-        rows.append((int(pid), acc))
-        acc += int(totals[pid] or 0)
-    # literal map while tiny, broadcast-joined offsets table at cluster
-    # partition counts (operators/prefix.py)
-    base, offset = attach_offsets(base, ["_pid"], rows)
-    win = (
-        Window.partitionBy("_pid").orderBy("id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    before = F.sum("n_bytes").over(win) + offset - F.col("n_bytes")
+    # a sample of unknown size gets no shard
+    before = F.when(F.col("n_bytes").isNotNull(), run)
     sb = F.lit(float(shard_bytes))  # double division: exact below 2^53 bytes
     shard = F.floor(before / sb).cast("long")
     return base.select(

@@ -214,8 +214,9 @@ def kmeans_fit(
     :func:`kmeans_centroids` refined by ``iters`` DISTRIBUTED Lloyd rounds.
     Each round is ONE Arrow pass over the data producing per-batch partial
     sums (cluster, sum-vector, count) — O(partitions x k) tiny rows collect
-    to the driver (the bounded-collect pattern of token_stream_chunks),
-    never the vectors themselves — then centroids renormalize driver-side.
+    to the driver (a bounded collect, as in the prefix sum of
+    ``operators/prefix.py``), never the vectors themselves — then
+    centroids renormalize driver-side.
     Deterministic: partials carry (partition, batch) ids and are combined
     in sorted order, so float summation order is fixed run-to-run."""
     import pandas as pd
@@ -232,21 +233,21 @@ def kmeans_fit(
     sample = np.stack([np.asarray(r[0], dtype=np.float64) for r in rows])
     cents = kmeans_centroids(sample, k, seed=seed)
 
-    src = df.select(F.col(vec_col).alias("v")).withColumn(
-        "_pid", F.spark_partition_id()
-    )
+    src = df.select(F.col(vec_col).alias("v"))
     dim = cents.shape[1]
     for _ in range(int(iters)):
         c = cents  # close over this round's centroids
 
         def partials(batches, _c=c):
+            from pyspark import TaskContext
+
+            pid = TaskContext.get().partitionId()
             bi = 0
             for pdf in batches:
                 m = np.stack(pdf["v"].to_numpy()).astype(np.float64)
                 mn = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
                 assign = (mn @ _c.T).argmax(axis=1)
                 out_c, out_s, out_n, out_p, out_b = [], [], [], [], []
-                pid = int(pdf["_pid"].iloc[0])
                 for j in range(len(_c)):
                     mask = assign == j
                     if mask.any():

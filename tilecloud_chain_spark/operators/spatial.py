@@ -166,13 +166,6 @@ def knn_cells(
     )
 
 
-def tiles_per_cell(points_with_cell: DataFrame) -> DataFrame:
-    """The flagship aggregation: rows joined/assigned per tile cell."""
-    return points_with_cell.groupBy("z", "tx", "ty").agg(
-        F.count("*").alias("n_rows")
-    )
-
-
 def knn_adaptive(
     points: DataFrame,
     queries: DataFrame,

@@ -16,7 +16,7 @@ from __future__ import annotations
 import pandas as pd  # noqa: F401 - pandas_udf type hints resolve via module globals
 from pyspark.sql import Column, DataFrame, functions as F
 
-from tilecloud_chain_spark.operators.prefix import attach_offsets
+from tilecloud_chain_spark.operators.prefix import prefix_sum
 
 # tiny marker sets; a real system would ship trained n-gram profiles, but the
 # operator shape (scored CASE over marker hits) is the same.
@@ -138,46 +138,22 @@ def token_stream_chunks(
     Output: id, n_tokens, start_off, end_off (exclusive), chunk_first,
     chunk_last, n_chunks (0 for empty documents; boundary docs straddle).
 
-    Scale shape: a DISTRIBUTED prefix sum — never a global-window funnel
-    (Spark executes an unpartitioned window by moving ALL rows to one
-    partition): range-repartition by id, cumsum WITHIN each partition, and
-    add per-partition base offsets computed from a tiny per-partition
-    totals collect (O(partitions) driver data — the zipWithIndex pattern).
-    Offsets are exact in doubles below 2^53 tokens, far past any corpus."""
-    from pyspark.sql.window import Window
-
-    t = F.col(text_col)
-    parts = max(df.sparkSession.sparkContext.defaultParallelism, 2)
-    base = (
-        df.select(F.col(id_col).alias("id"), token_count(t).alias("n_tokens"))
-        .repartitionByRange(parts, "id")
-        # no sortWithinPartitions: nothing consumes partition-local order —
-        # the totals agg is order-free and the window re-sorts by id anyway
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)  # referenced twice: totals + cumsum
-        # (LAZY — the totals collect materializes it; eager paid an extra
-        # blocking pass per packing call, r8)
+    Scale shape: the distributed prefix sum of ``operators/prefix.py`` —
+    never a global-window funnel (Spark executes an unpartitioned window
+    by moving ALL rows to one partition). Offsets are exact in doubles
+    below 2^53 tokens, far past any corpus."""
+    base, before, _ = prefix_sum(
+        df.select(F.col(id_col).alias("id"),
+                  token_count(F.col(text_col)).alias("n_tokens")),
+        order_cols=["id"], weight="n_tokens",
     )
-    totals = {
-        r["_pid"]: r["tot"]
-        for r in base.groupBy("_pid").agg(F.sum("n_tokens").alias("tot")).collect()
-    }
-    rows, acc = [], 0
-    for pid in sorted(totals):  # range partitions are in ascending id order
-        rows.append((int(pid), acc))
-        acc += int(totals[pid])
-    # literal map while tiny, broadcast-joined offsets table at cluster
-    # partition counts (operators/prefix.py)
-    base, offset = attach_offsets(base, ["_pid"], rows)
-    win = (
-        Window.partitionBy("_pid").orderBy("id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = F.sum("n_tokens").over(win) + offset
+    # end as SQL's SUM(n_tokens) OVER (ORDER BY id): defined for a
+    # document without text, whose start_off is then null
+    end = before + F.coalesce(F.col("n_tokens"), F.lit(0))
     out = base.select(
         "id", "n_tokens",
-        (cum - F.col("n_tokens")).alias("start_off"),
-        cum.alias("end_off"),
+        (end - F.col("n_tokens")).alias("start_off"),
+        end.alias("end_off"),
     )
     # double division (exact for offsets < 2^53) keeps the arithmetic
     # identical across engines for the oracle

@@ -105,7 +105,10 @@ def cost_count(
 
     if not tilecloud_parity:
         metas = FL.geom_intersect_filter(metas, grid, geoms, buffer_px=buffer_px, n="n")
-    metas = metas.cache()
+    # read by both count branches, pinned lazily (the caller's action
+    # materializes it): .cache() would leave a CacheManager entry for the
+    # rest of the session
+    metas = metas.localCheckpoint(eager=False)
     meta_counts = metas.groupBy("z").agg(F.count("*").alias("n_metatiles"))
 
     children = MT.split_to_tiles(metas)  # unclamped, like metatile iteration

@@ -1,15 +1,13 @@
 """Audio/video multimodal columns — opaque ``binary`` payloads with typed
-metadata, plus the distributed decode / frame-sample / feature-extract
-plumbing (task-brief mandate).
+metadata, plus the distributed frame-sample / frame-dedup plumbing for
+video.
 
-The container ships no audio/video codecs (no ffmpeg/soundfile/PyAV), so the
-DECODE step is stubbed exactly as the brief instructs: a clearly-marked
-``NotImplementedError`` behind an import-try for the real thing, and a
-DETERMINISTIC FAKE decoder whose output is a pure function of the payload
-bytes — which makes every downstream stage (frame sampling, per-frame
-phash, windowed audio features, cross-video frame dedup) REAL, tested
-Spark plumbing with the exact schemas, partitioning and Arrow batch shapes
-the real codecs would see.
+No audio/video codec ships with the engine (no ffmpeg/soundfile/PyAV), so
+frames come from a DETERMINISTIC FAKE decoder whose output is a pure
+function of the payload bytes — which makes every downstream stage (frame
+sampling, per-frame phash, cross-video frame dedup) REAL, tested Spark
+plumbing with the exact schemas, partitioning and Arrow batch shapes a
+real codec would see.
 
 Schema (typed metadata struct, brief requirement):
 
@@ -77,23 +75,8 @@ def synth_media(
 
 
 # --------------------------------------------------------------------------
-# decode — real-codec stub + deterministic fake
+# decode — deterministic fake
 # --------------------------------------------------------------------------
-
-
-def decode_media(data: bytes, kind: str):  # pragma: no cover - env-gated
-    """Real decode — STUB: no av/soundfile/ffmpeg in this container."""
-    try:
-        if kind == "audio":
-            import soundfile  # noqa: F401
-        else:
-            import av  # noqa: F401
-    except ImportError as exc:
-        raise NotImplementedError(
-            f"real {kind} decode requires soundfile/PyAV, unavailable here; "
-            "use fake_decode_* (deterministic stand-in) for the pipeline"
-        ) from exc
-    raise NotImplementedError("unreachable in this environment")
 
 
 def fake_decode_frame(payload: bytes, frame_idx: int, w: int, h: int) -> np.ndarray:
@@ -104,18 +87,6 @@ def fake_decode_frame(payload: bytes, frame_idx: int, w: int, h: int) -> np.ndar
     base = int.from_bytes(hashlib.md5(payload).digest()[:4], "big")
     # frame seed advances slowly -> adjacent frames are near-duplicates
     return IMG.synth_pixels(base + frame_idx // 4, h, w)
-
-
-def fake_decode_audio(payload: bytes, sample_rate: int, duration_ms: int) -> np.ndarray:
-    """Deterministic PCM: sum of two seeded sinusoids + seeded noise."""
-    n = sample_rate * duration_ms // 1000
-    seed = np.frombuffer(hashlib.md5(payload).digest(), dtype=np.uint8)
-    t = np.arange(n, dtype=np.float64) / sample_rate
-    f1, f2 = 100.0 + seed[0] * 4, 400.0 + seed[1] * 8
-    rng = np.random.default_rng(int(seed[2]))
-    return (0.6 * np.sin(2 * np.pi * f1 * t)
-            + 0.3 * np.sin(2 * np.pi * f2 * t)
-            + 0.05 * rng.standard_normal(n))
 
 
 # --------------------------------------------------------------------------
@@ -151,43 +122,6 @@ def sample_frames(media: DataFrame, every_n: int = 2) -> DataFrame:
 
     return picked.mapInPandas(
         featurize, "media_id string, frame_idx int, w int, h int, phash long"
-    )
-
-
-def audio_features(media: DataFrame, window_ms: int = 250) -> DataFrame:
-    """Audio -> per-window features (media_id, window_idx, energy,
-    zero_crossings): deterministic fake PCM decoded ONCE per row inside one
-    Arrow stage, windows computed with vectorized numpy."""
-    import pandas as pd
-
-    picked = media.filter(F.col("kind") == "audio").select(
-        "media_id", "bytes",
-        F.col("meta.sample_rate").alias("sr"),
-        F.col("meta.duration_ms").alias("dur"),
-    )
-
-    def featurize(batches):
-        for pdf in batches:
-            out = {"media_id": [], "window_idx": [], "energy": [], "zero_crossings": []}
-            for mid, payload, sr, dur in zip(
-                pdf["media_id"], pdf["bytes"], pdf["sr"], pdf["dur"]
-            ):
-                pcm = fake_decode_audio(bytes(payload), int(sr), int(dur))
-                win = int(sr) * window_ms // 1000
-                n_win = len(pcm) // win
-                w = pcm[: n_win * win].reshape(n_win, win)
-                energy = np.sqrt((w ** 2).mean(axis=1))
-                zc = (np.diff(np.signbit(w), axis=1) != 0).sum(axis=1)
-                for k in range(n_win):
-                    out["media_id"].append(mid)
-                    out["window_idx"].append(k)
-                    out["energy"].append(float(energy[k]))
-                    out["zero_crossings"].append(int(zc[k]))
-            yield pd.DataFrame(out)
-
-    return picked.mapInPandas(
-        featurize,
-        "media_id string, window_idx int, energy double, zero_crossings int",
     )
 
 
