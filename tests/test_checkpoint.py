@@ -1,6 +1,11 @@
 """Checkpoint / lineage / exact-resume tests (BASELINE.json mandate)."""
 
+import json
 import os
+import sys
+import threading
+import time
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -155,356 +160,134 @@ def test_error_stage_retry_only_errors(spark, root):
     assert store.stage_status(job_id, "s", 1) == "done"
 
 
-def test_merge_table_iceberg_semantics(tmp_path):
-    """MERGE upsert + conditional matched clause + DELETE FROM + snapshot
-    log with equivalent Iceberg SQL + snapshot expiry."""
-    from tilecloud_chain_spark.checkpoint.merge import MergeTable
-
-    t = MergeTable(str(tmp_path / "status"), ["k", "status", "ts"])
-    assert t.merge([{"k": 1, "status": "pending", "ts": 10.0}], on=["k"]) == {
-        "updated": 0, "inserted": 1,
-    }
-    assert t.merge([{"k": 1, "status": "done", "ts": 20.0},
-                    {"k": 2, "status": "pending", "ts": 21.0}], on=["k"]) == {
-        "updated": 1, "inserted": 1,
-    }
-    df = t.read().sort_values("k")
-    assert list(df.status) == ["done", "pending"]
-    # conditional matched clause: only rows already 'pending' update
-    t.merge([{"k": 1, "status": "error", "ts": 30.0},
-             {"k": 2, "status": "error", "ts": 30.0}],
-            on=["k"], matched_condition="status == 'pending'")
-    df = t.read().sort_values("k")
-    assert list(df.status) == ["done", "error"]
-    # DELETE FROM returns the victims
-    gone = t.delete_where("status == 'error'")
-    assert [r["k"] for r in gone] == [2]
-    assert list(t.read().k) == [1]
-    # snapshot log carries the equivalent SQL, expiry drops old data files
-    log = t.snapshots()
-    assert len(log) == 4
-    assert log[0]["sql"].startswith("MERGE INTO status")
-    assert "WHEN NOT MATCHED THEN INSERT *" in log[0]["sql"]
-    assert log[-1]["sql"] == "DELETE FROM status WHERE status == 'error'"
-    assert t.expire_snapshots(keep_last=2) == 2
-    assert list(t.read().k) == [1]  # current snapshot untouched
+def _markers(root, job, stage, zoom=0):
+    d = os.path.join(root, "status", f"job={job}", f"stage={stage}", f"z={zoom}")
+    names = sorted(os.listdir(d))
+    statuses = []
+    for n in names:
+        with open(os.path.join(d, n)) as f:
+            statuses.append(json.load(f)["status"])
+    return names, statuses
 
 
-def _merge_suite(t):
-    """The mutation sequence test_merge_table_iceberg_semantics exercises —
-    shared so the parquet path and the (captured) Iceberg path run the SAME
-    calls and their statement logs can be compared verbatim."""
-    t.merge([{"k": 1, "status": "pending", "ts": 10.0}], on=["k"])
-    t.merge([{"k": 1, "status": "done", "ts": 20.0},
-             {"k": 2, "status": "pending", "ts": 21.0}], on=["k"])
-    t.merge([{"k": 1, "status": "error", "ts": 30.0},
-             {"k": 2, "status": "error", "ts": 30.0}],
-            on=["k"], matched_condition="status == 'pending'")
-    t.delete_where("status == 'error'")
+def test_racing_transitions_lose_nothing_and_never_reset_done(spark, tmp_path):
+    """8 writer threads commit stale-pending -> done on a stage of their own
+    and on one shared stage while a stale-pending requeue races them: every
+    transition lands as its own numbered marker (no gap, no temp file
+    left), a reset only ever follows a pending, and every stage ends done."""
+    root = str(tmp_path / "ck")
+    store = CheckpointStore(spark, root)
+    job = store.create_job("race")
+    stale = time.time() - 3600
+    writers, rounds = 8, 25
+    resets = []
+    stop = threading.Event()
+
+    def writer(i):
+        for _ in range(rounds):
+            for stage in (f"own{i}", "shared"):
+                store.set_status(job, stage, 0, "pending", started_at=stale)
+                store.set_status(job, stage, 0, "done", wall_s=0.0)
+
+    def requeuer():
+        while not stop.is_set():
+            resets.extend(store.requeue_stale_pending(job, max_pending_minutes=10))
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        rq = threading.Thread(target=requeuer)
+        rq.start()
+        ws = [threading.Thread(target=writer, args=(i,)) for i in range(writers)]
+        for t in ws:
+            t.start()
+        for t in ws:
+            t.join(timeout=120)
+        stop.set()
+        rq.join(timeout=120)
+    finally:
+        stop.set()
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in ws + [rq])
+
+    for stage, n in [(f"own{i}", 1) for i in range(writers)] + [("shared", writers)]:
+        names, seq = _markers(root, job, stage)
+        assert names == [f"{k:08d}.json" for k in range(1, len(names) + 1)], stage
+        assert seq.count("pending") == seq.count("done") == n * rounds, stage
+        assert seq.count("created") == resets.count((stage, 0)), stage
+        assert all(prev == "pending" for prev, cur in zip(seq, seq[1:]) if cur == "created")
+        assert store.stage_status(job, stage, 0) == "done"
 
 
-def test_merge_table_iceberg_statement_parity(tmp_path, spark, monkeypatch):
-    """The Iceberg path must execute EXACTLY the statements the parquet
-    stand-in logs (the swap is spark.sql(logged) and nothing else). Without
-    jars in this sandbox the executor is captured instead of run; the
-    statement streams must be identical."""
-    from tilecloud_chain_spark.checkpoint import merge as M
+def test_requeue_that_loses_the_race_to_done_leaves_done(spark, tmp_path, monkeypatch):
+    """A requeue that saw a stale pending but whose commit loses to a
+    concurrent done re-tests against the new marker and resets nothing."""
+    root = str(tmp_path / "ck")
+    store, other = CheckpointStore(spark, root), CheckpointStore(spark, root)
+    job = store.create_job("lost")
+    store.set_status(job, "s", 0, "pending", started_at=time.time() - 3600)
+    real_link = os.link
+    raced = []
 
-    parquet_t = M.MergeTable(str(tmp_path / "status"), ["k", "status", "ts"])
-    _merge_suite(parquet_t)
-    logged = [e["sql"] for e in parquet_t.snapshots()]
+    def link_after_done(src, dst):
+        if not raced:  # the done commit lands between the requeue's read and link
+            raced.append(dst)
+            other.set_status(job, "s", 0, "done", wall_s=1.0)
+        return real_link(src, dst)
 
-    executed = []
-    monkeypatch.setattr(M, "iceberg_available", lambda s: True)
-    ice_t = M.MergeTable(
-        str(tmp_path / "status_ice"), ["k", "status", "ts"],
-        spark=spark, iceberg_table="status",
-    )
-    assert ice_t.use_iceberg
-    monkeypatch.setattr(
-        ice_t, "_exec_iceberg", lambda sql, source=None: executed.append(sql)
-    )
-    # delete_where pre-reads victims via spark.sql — capture that too
-    monkeypatch.setattr(
-        ice_t, "delete_where",
-        lambda cond: (executed.append(ice_t._delete_sql(cond)), [])[1],
-    )
-    _merge_suite(ice_t)
-    assert executed == logged
+    monkeypatch.setattr(os, "link", link_after_done)
+    assert store.requeue_stale_pending(job, max_pending_minutes=10) == []
+    monkeypatch.undo()
+    assert raced and store.stage_status(job, "s", 0) == "done"
+    assert _markers(root, job, "s")[1] == ["pending", "done"]
 
 
-def test_merge_sql_qualifies_target_columns(tmp_path):
-    """The executed MERGE must qualify condition columns as t.<col> —
-    unqualified, a column present in both target and source raises
-    AMBIGUOUS_REFERENCE on a real engine (and would not mean target-row
-    semantics). String literals containing column names stay verbatim."""
-    from tilecloud_chain_spark.checkpoint.merge import MergeTable
+def test_transition_writes_one_file_in_its_stage_dir(spark, tmp_path):
+    """A status transition adds exactly one file, inside its own stage's
+    status directory, and rewrites no other file of the store."""
+    root = str(tmp_path / "ck")
+    store = CheckpointStore(spark, root)
+    job = store.create_job("one")
+    store.set_status(job, "a", 0, "pending", started_at=time.time())
 
-    t = MergeTable(str(tmp_path / "s"), ["k", "status", "ts"])
-    sql = t._merge_sql(["k"], True, True, "status == 'pending'")
-    assert "WHEN MATCHED AND (t.status == 'pending')" in sql
-    sql = t._merge_sql(["k"], True, False, "status == 'status' and ts > 5")
-    assert "(t.status == 'status' and t.ts > 5)" in sql  # literal untouched
+    def files():
+        out = {}
+        for r, _, fs in os.walk(root):
+            for f in fs:
+                st = os.stat(os.path.join(r, f))
+                out[os.path.join(r, f)] = (st.st_ino, st.st_size, st.st_mtime_ns)
+        return out
 
-
-def test_exec_iceberg_pads_source_to_full_columns(tmp_path, spark, monkeypatch):
-    """UPDATE SET * / INSERT * require the source view to carry EVERY target
-    column; absent ones are None-padded — which exactly reproduces the
-    parquet path's matched-row replacement semantics."""
-    from tilecloud_chain_spark.checkpoint import merge as M
-
-    t = M.MergeTable(str(tmp_path / "s"), ["k", "status", "started_at", "error"])
-    t.spark = spark
-    captured = {}
-    monkeypatch.setattr(
-        spark.__class__, "sql", lambda self, q: captured.setdefault("sql", q),
-        raising=False,
-    )
-    t._exec_iceberg("SELECT 1", source=[{"k": 1, "status": "done"}])
-    src = spark.table("source")
-    assert set(src.columns) == {"k", "status", "started_at", "error"}
-    row = src.collect()[0]
-    assert row.k == 1 and row.status == "done"
-    assert row.started_at is None and row.error is None
+    before = files()
+    store.set_status(job, "b", 3, "done", wall_s=1.0)
+    after = files()
+    new = set(after) - set(before)
+    assert len(new) == 1, sorted(new)
+    assert os.path.dirname(new.pop()) == os.path.join(
+        root, "status", f"job={job}", "stage=b", "z=3")
+    assert {p: after.get(p) for p in before} == before
 
 
-def test_merge_table_real_iceberg_roundtrip(tmp_path, spark):
-    """The real catalog path — runnable only with the Iceberg runtime jars
-    on the classpath (spark-submit --packages iceberg-spark-runtime)."""
-    import pytest
-
-    from tilecloud_chain_spark.checkpoint.merge import iceberg_available
-
-    if not iceberg_available(spark):
-        pytest.skip("no Iceberg runtime jars in this sandbox — the swap is "
-                    "exercised via statement parity instead")
-    from tilecloud_chain_spark.checkpoint.merge import MergeTable
-
-    t = MergeTable(str(tmp_path / "s"), ["k", "status", "ts"],
-                   spark=spark, iceberg_table="local.db.status")
-    spark.sql("CREATE TABLE IF NOT EXISTS local.db.status "
-              "(k INT, status STRING, ts DOUBLE) USING iceberg")
-    _merge_suite(t)
-    assert sorted(t.read().k) == [1]
-
-
-def test_merge_table_concurrent_writers_no_lost_update(tmp_path):
-    """Two writers racing on different keys must both land (the unlocked
-    read-modify-write dropped the slower writer's rows); a held lock makes
-    a second writer wait, and a stale lock (dead writer) is broken."""
-    import os
-    import threading
-
-    from tilecloud_chain_spark.checkpoint.merge import MergeTable
-
-    root = str(tmp_path / "status")
-    t = MergeTable(root, ["k", "status"])
-    errs = []
-
-    def writer(lo: int):
-        try:
-            w = MergeTable(root, ["k", "status"])
-            for i in range(lo, lo + 20):
-                w.merge([{"k": i, "status": f"w{lo}"}], on=["k"])
-        except Exception as e:  # pragma: no cover
-            errs.append(e)
-
-    threads = [threading.Thread(target=writer, args=(lo,)) for lo in (0, 100, 200)]
-    for th in threads:
-        th.start()
-    for th in threads:
-        th.join()
-    assert not errs
-    assert len(t.read()) == 60  # no writer's rows were dropped
-
-    # stale lock from a dead writer is broken after lock_timeout
-    fast = MergeTable(root, ["k", "status"], lock_timeout=0.2)
-    with open(os.path.join(root, ".lock"), "w") as f:
-        f.write("99999")
-    os.utime(os.path.join(root, ".lock"), (0, 0))  # ancient mtime -> stale
-    fast.merge([{"k": 999, "status": "recovered"}], on=["k"])
-    assert 999 in set(fast.read().k)
-
-
-def test_live_lock_heartbeat_never_broken(tmp_path):
-    """A holder whose mutation outlives lock_timeout must NOT have its live
-    lock broken (the heartbeat refreshes mtime while held): a long-held lock
-    forces the second writer to WAIT, and both mutations land."""
-    import threading
-    import time as _time
-
-    from tilecloud_chain_spark.checkpoint.merge import MergeTable
-
-    root = str(tmp_path / "hb")
-    t = MergeTable(root, ["k", "status"], lock_timeout=0.3)
-    entered = threading.Event()
-    order = []
-
-    def slow_holder():
-        with t._locked():
-            entered.set()
-            _time.sleep(1.0)  # 3x the timeout — stale without heartbeats
-            order.append("holder_done")
-
-    th = threading.Thread(target=slow_holder)
-    th.start()
-    entered.wait(2.0)
-    w2 = MergeTable(root, ["k", "status"], lock_timeout=5.0)
-    w2.merge([{"k": 1, "status": "second"}], on=["k"])
-    order.append("second_done")
-    th.join()
-    # the second writer only got in after the holder released
-    assert order == ["holder_done", "second_done"]
-    assert set(w2.read().k) == {1}
-
-
-def test_log_only_tolerates_truncated_log(tmp_path):
-    """An existing-but-empty log.jsonl (crash truncation) must restart the
-    sequence at 1, not IndexError."""
-    from tilecloud_chain_spark.checkpoint.merge import MergeTable
-
-    root = str(tmp_path / "trunc")
-    t = MergeTable(root, ["k"])
-    open(f"{root}/log.jsonl", "w").close()  # exists, zero entries
-    t._log_only("merge", "MERGE INTO x", {})
-    snaps = t.snapshots()
-    assert [s["n"] for s in snaps] == [1]
-
-
-def test_merge_stats_shape_consistent(tmp_path):
-    """merge() returns the {'updated', 'inserted'} keys on every path —
-    parquet fills ints; the Iceberg summary helper degrades to None values
-    (never a missing key) when no snapshot metadata is reachable."""
-    from tilecloud_chain_spark.checkpoint.merge import MergeTable
-
-    t = MergeTable(str(tmp_path / "shape"), ["k", "v"])
-    stats = t.merge([{"k": 1, "v": "a"}], on=["k"])
-    assert set(stats) == {"updated", "inserted"}
-    assert stats == {"updated": 0, "inserted": 1}
-    t.spark = None  # no session: the summary query must degrade, not raise
-    assert t._iceberg_merge_stats() == {"updated": None, "inserted": None}
-
-
-def test_short_timeout_breaker_never_breaks_live_holder(tmp_path):
-    """Cross-timeout safety: a breaker whose lock_timeout is SHORTER than the
-    holder's heartbeat gap must not stale-break the live holder (two
-    concurrent holders, lost updates). Staleness is judged against the
-    holder's declared cadence (written into the lock file), so the breaker
-    times out as 'busy' instead of usurping."""
-    import json
-    import os
-    import threading
-    import time as _time
-
-    import pytest
-
-    from tilecloud_chain_spark.checkpoint.merge import MergeTable
-
-    root = str(tmp_path / "xt")
-    holder = MergeTable(root, ["k", "status"], lock_timeout=10.0)  # hb capped at 1s
-    entered = threading.Event()
-    release = threading.Event()
-
-    def slow_holder():
-        with holder._locked():
-            entered.set()
-            release.wait(5.0)
-
-    th = threading.Thread(target=slow_holder)
-    th.start()
-    assert entered.wait(2.0)
-    lock = os.path.join(root, ".lock")
-    with open(lock) as f:
-        meta = json.loads(f.read())
-    assert meta["hb"] == 1.0  # cadence capped, declared in the lock file
-    # age the mtime past the breaker's own timeout but inside 3x the
-    # holder's declared cadence — pre-fix this was the usurpation window
-    st = os.stat(lock)
-    os.utime(lock, (st.st_atime, _time.time() - 0.5))
-    breaker = MergeTable(root, ["k", "status"], lock_timeout=0.3)
-    with pytest.raises(TimeoutError):
-        breaker.merge([{"k": 1, "status": "usurped"}], on=["k"])
-    assert os.path.exists(lock)  # holder's lock survived
-    release.set()
-    th.join()
-    assert not os.path.exists(lock)  # holder released its own lock normally
-
-
-def test_release_unlink_checks_token_ownership(tmp_path):
-    """If the lock was (wrongly or rightly) replaced while held, the
-    holder's release must not delete the new owner's lock file. Ownership is
-    a uuid token in the lock content — inode numbers are recycled on
-    unlink+create, so inode identity would false-positive here."""
-    import os
-
-    from tilecloud_chain_spark.checkpoint.merge import MergeTable
-
-    root = str(tmp_path / "ino")
-    t = MergeTable(root, ["k"], lock_timeout=5.0)
-    lock = os.path.join(root, ".lock")
-    with t._locked():
-        os.unlink(lock)
-        with open(lock, "w") as f:  # a usurper's fresh lock (new inode)
-            f.write("usurper")
-    assert os.path.exists(lock)  # release did NOT unlink the usurper's
-    with open(lock) as f:
-        assert f.read() == "usurper"
-
-
-def test_iceberg_stats_cow_does_not_inflate_inserted(tmp_path):
-    """Copy-on-write MERGE snapshot summaries carry added-records that counts
-    every rewritten row (not just inserts) and no updated-records; the stats
-    helper must return inserted=None there instead of the inflated number.
-    Merge-on-read (updated-records present) keeps both counts."""
-    from tilecloud_chain_spark.checkpoint.merge import MergeTable
-
-    t = MergeTable(str(tmp_path / "cow"), ["k"])
-
-    class _FakeSpark:
-        def __init__(self, summary):
-            self._summary = summary
-
-        def sql(self, _):
-            fake = self
-
-            class _Res:
-                def collect(self):
-                    return [{"summary": fake._summary}]
-
-            return _Res()
-
-    t.use_iceberg = True
-    t.iceberg_table = "cat.db.t"
-    t.spark = _FakeSpark({"added-records": "7"})  # CoW: rewritten rows, no upd
-    assert t._iceberg_merge_stats() == {"updated": None, "inserted": None}
-    # MoR: updated rows are ALSO written as new data records, so
-    # added-records = inserts + updates -> inserted = 3 - 2 = 1
-    t.spark = _FakeSpark({"added-records": "3", "updated-records": "2"})
-    assert t._iceberg_merge_stats() == {"updated": 2, "inserted": 1}
-
-
-def test_legacy_lock_without_cadence_presumed_slow(tmp_path):
-    """A legacy (bare-pid) lock declares no heartbeat cadence. A pre-upgrade
-    holder may heartbeat as slowly as lock_timeout/3 UNCAPPED, so a breaker
-    must presume a slow cadence (its own lock_timeout) and only stale-break
-    after 3x its timeout — not after max(timeout, 3s) as the 1s-cap fallback
-    implied. A legacy lock older than the breaker's timeout but younger than
-    3x it must survive."""
-    import os
-    import time as _time
-
-    import pytest
-
-    from tilecloud_chain_spark.checkpoint.merge import MergeTable
-
-    root = str(tmp_path / "legacy")
-    os.makedirs(root)
-    lock = os.path.join(root, ".lock")
-    with open(lock, "w") as f:
-        f.write("12345")  # pre-upgrade content: bare pid, no hb/token
-    old = _time.time() - 0.6
-    os.utime(lock, (old, old))
-    breaker = MergeTable(root, ["k", "status"], lock_timeout=0.5)
-    with pytest.raises(TimeoutError):
-        breaker.merge([{"k": 1, "status": "usurped"}], on=["k"])
-    assert os.path.exists(lock)  # live-presumed legacy holder survived
+def test_orphaned_temp_marker_is_invisible(spark, tmp_path):
+    """A temp file left by a writer killed between write and link is no
+    marker: stage_status and both resets ignore it, and the next
+    transition still commits marker 1."""
+    root = str(tmp_path / "ck")
+    store = CheckpointStore(spark, root)
+    job = store.create_job("orphan")
+    store.set_status(job, "p", 0, "pending", started_at=time.time())
+    for stage, payload in [("p", {"status": "error", "error": "x"}),
+                           ("q", {"status": "pending", "started_at": 0.0}),
+                           ("q", {"status": "error", "error": "x"})]:
+        d = os.path.join(root, "status", f"job={job}", f"stage={stage}", "z=0")
+        os.makedirs(d, exist_ok=True)
+        with open(os.path.join(d, f".tmp-{uuid.uuid4().hex}"), "w") as f:
+            json.dump(payload, f)
+    assert store.stage_status(job, "p", 0) == "pending"
+    assert store.stage_status(job, "q", 0) == "created"
+    assert store.retry_errors(job) == []
+    assert store.requeue_stale_pending(job, max_pending_minutes=10) == []
+    store.set_status(job, "q", 0, "done", wall_s=1.0)
+    names, seq = _markers(root, job, "q")
+    assert [n for n in names if not n.startswith(".")] == ["00000001.json"]
+    assert seq[-1] == "done" and store.stage_status(job, "q", 0) == "done"

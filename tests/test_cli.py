@@ -79,6 +79,41 @@ def test_cli_end_to_end_golden_paths(spark, tmp_path):
     }
 
 
+def test_cli_generate_tiles_resume_checks_parameters(spark, tmp_path, capsys):
+    """generate-tiles --job-id resumes through the job's recorded
+    parameters: the same meta buffer skips every committed zoom, a
+    different one is refused instead of rendering the remaining zooms with
+    it onto the old queue."""
+    import yaml
+    from pyspark.sql import functions as F
+
+    from tilecloud_chain_spark import cli
+    from tilecloud_chain_spark.checkpoint import CheckpointStore
+
+    cfg_path = tmp_path / "test.yaml"
+    cfg_path.write_text(yaml.safe_dump(REF_STYLE_YAML))
+    ckpt = str(tmp_path / "ckpt")
+    argv = [
+        "generate-tiles", "--config", str(cfg_path), "--layer", "line",
+        "--zooms", "0", "--checkpoint", ckpt, "--meta-buffer", "32",
+        "--cores", os.environ.get("TEST_SPARK_CPUS", "8"),
+    ]
+    assert cli.main(argv) == 0
+    job = capsys.readouterr().out.split("Job id: ")[1].split()[0]
+    store = CheckpointStore(spark, ckpt)
+
+    def tiles_wall():
+        return store.lineage(job, "tiles").agg(F.sum("wall_ms")).collect()[0][0]
+
+    wall = tiles_wall()
+    assert cli.main(argv + ["--job-id", job]) == 0
+    assert tiles_wall() == wall  # nothing re-rendered
+    other = list(argv)
+    other[other.index("--meta-buffer") + 1] = "64"
+    with pytest.raises(ValueError, match="different parameters"):
+        cli.main(other + ["--job-id", job])
+
+
 def test_cli_get_limits(tmp_path, capsys):
     import yaml
 

@@ -11,20 +11,25 @@ currently in error are requeued, done rows untouched"
   (SKIP LOCKED, ``elapsed_togenerate``): the unit of atomicity is the *stage
   commit*, not the row claim.
 - The store is **log-structured**: every mutation is an append (queue rows,
-  status markers, stage manifests); current state is a reconciliation read
-  (latest marker wins). This is exactly Iceberg's snapshot model; on a real
-  cluster these directories become Iceberg tables and ``_commit_marker``
-  becomes a snapshot commit / MERGE. Parquet + atomic rename is the
-  sandbox stand-in (no Iceberg runtime jars in this environment).
+  job markers, stage manifests, status markers); current state is the
+  latest marker.
+- **Stage status** is a per-stage commit log (Delta Lake's numbered,
+  put-if-absent log, scoped to one ``(job, stage, zoom)``): the directory
+  ``status/job=<id>/stage=<s>/z=<z>/`` holds ``00000001.json``,
+  ``00000002.json``, … and the highest number is the current status (no
+  marker = ``created``). A transition writes a dot-prefixed temp file and
+  ``os.link``s it to the next number; the link fails when another writer
+  committed that number first, so the writer re-reads and re-tests. No
+  lock, no thread, and a transition touches only its own stage's directory.
 - **Per-partition lineage rows** (partition id, cell range, row count,
   bytes, wall ms — BASELINE.json mandate) are produced inside the stage's
   own ``mapInPandas`` pass and written INTO THE SAME parquet files as the
   data (a ``_lineage`` struct column, null on data rows): lineage commits
   atomically with exactly the data it describes. ``output()`` filters
   ``_lineage IS NULL``; ``lineage()`` reads the complement.
-- **Exact resume**: ``run_stage`` is a no-op when the stage's commit marker
-  exists; a killed run re-executes only uncommitted stages against the same
-  deterministic inputs. ``retry_errors`` re-opens only stages marked
+- **Exact resume**: ``run_stage`` is a no-op when the stage's status is
+  ``done``; a killed run re-executes only uncommitted stages against the
+  same deterministic inputs. ``retry_errors`` re-opens only stages marked
   ``error``.
 """
 
@@ -101,21 +106,15 @@ def with_lineage(df: DataFrame, cell_col: str = "cell", bytes_col: str | None = 
 
 
 class CheckpointStore:
-    """Filesystem-rooted job/queue/stage/lineage store (Iceberg-analog)."""
+    """Filesystem-rooted job/queue/stage/lineage store."""
 
     def __init__(self, spark: SparkSession, root: str) -> None:
-        from tilecloud_chain_spark.checkpoint.merge import MergeTable
-
         self.spark = spark
         self.root = root
+        # job markers live in jobs/; stage status markers in
+        # status/job=<id>/stage=<s>/z=<z>/, one directory per stage (created
+        # by its first transition)
         os.makedirs(os.path.join(root, "jobs"), exist_ok=True)
-        # stage-status control plane: Iceberg-shaped MERGE/DELETE table —
-        # every transition below is a logged MERGE INTO / DELETE FROM, so a
-        # real Iceberg catalog is a drop-in (see checkpoint/merge.py)
-        self._status = MergeTable(
-            os.path.join(root, "status"),
-            ["job_id", "stage", "zoom", "status", "started_at", "error", "wall_s", "at"],
-        )
 
     # -- jobs (reference job table, store/postgresql.py:143-167) ------------
 
@@ -186,21 +185,73 @@ class CheckpointStore:
     def _stage_dir(self, job_id: str, stage: str, zoom: int) -> str:
         return os.path.join(self.root, "stages", f"job={job_id}", f"stage={stage}", f"z={zoom}")
 
+    def _status_dir(self, job_id: str, stage: str, zoom: int) -> str:
+        return os.path.join(self.root, "status", f"job={job_id}", f"stage={stage}", f"z={int(zoom)}")
+
+    @staticmethod
+    def _last_marker(d: str) -> tuple[int, dict]:
+        """(number, payload) of the stage's highest marker; (0, created)
+        when it has none. Temp files (``.tmp-<uuid>``) are not markers."""
+        try:
+            names = sorted(n for n in os.listdir(d) if n.endswith(".json"))
+        except FileNotFoundError:
+            names = []
+        if not names:
+            return 0, {"status": "created"}
+        with open(os.path.join(d, names[-1])) as f:
+            return int(names[-1][:-5]), json.load(f)
+
+    def _transition(self, d: str, payload: dict,
+                    when: Callable[[dict], bool] | None = None) -> bool:
+        """Commit ``payload`` as the stage's next marker, put-if-absent:
+        ``os.link`` of a complete temp file fails when another writer took
+        that number first, and the writer then re-reads (and re-tests
+        ``when`` against the new current marker). Returns whether it
+        committed."""
+        os.makedirs(d, exist_ok=True)
+        tmp = os.path.join(d, f".tmp-{uuid.uuid4().hex}")
+        with open(tmp, "w") as f:
+            json.dump(payload, f)
+        try:
+            while True:
+                n, cur = self._last_marker(d)
+                if when is not None and not when(cur):
+                    return False
+                try:
+                    os.link(tmp, os.path.join(d, f"{n + 1:08d}.json"))
+                    return True
+                except FileExistsError:
+                    continue
+        finally:
+            os.unlink(tmp)
+
     def set_status(self, job_id: str, stage: str, zoom: int, status: str,
                    **extra) -> None:
-        """One status transition = one MERGE INTO (upsert on the stage key)."""
-        self._status.merge(
-            [{"job_id": job_id, "stage": stage, "zoom": int(zoom),
-              "status": status, "at": time.time(), **extra}],
-            on=["job_id", "stage", "zoom"],
+        """Unconditional transition: one new marker in the stage's directory."""
+        self._transition(
+            self._status_dir(job_id, stage, zoom),
+            {"status": status, "at": time.time(), **extra},
         )
 
     def stage_status(self, job_id: str, stage: str, zoom: int) -> str:
-        df = self._status.read()
-        if not len(df):
-            return "created"
-        hit = df[(df.job_id == job_id) & (df.stage == stage) & (df.zoom == zoom)]
-        return str(hit.iloc[0]["status"]) if len(hit) else "created"
+        return self._last_marker(self._status_dir(job_id, stage, zoom))[1]["status"]
+
+    def _reset_where(self, job_id: str, test: Callable[[dict], bool]) -> list[tuple[str, int]]:
+        """Conditional transition to ``created`` of every stage of the job
+        whose current marker passes ``test``; the test is re-run after a
+        lost race, so a stage another writer just moved on (e.g. to
+        ``done``) is left alone. Returns the (stage, zoom) pairs reset."""
+        base = os.path.join(self.root, "status", f"job={job_id}")
+        reset = []
+        for sd in sorted(os.listdir(base)) if os.path.isdir(base) else []:
+            stage = sd[len("stage="):]
+            for zoom in sorted(int(zd[len("z="):]) for zd in os.listdir(os.path.join(base, sd))):
+                d = self._status_dir(job_id, stage, zoom)
+                if test(self._last_marker(d)[1]) and self._transition(
+                    d, {"status": "created", "at": time.time()}, when=test
+                ):
+                    reset.append((stage, zoom))
+        return reset
 
     def run_stage(
         self,
@@ -246,22 +297,18 @@ class CheckpointStore:
         """ST2 — lost-worker recovery: pending stages older than
         ``max_pending_minutes`` (reference default 10, configuration.py:2348;
         maintenance loop store/postgresql.py:700-713) reset to created so a
-        later run re-executes the stage. One ``DELETE FROM status WHERE
-        status='pending' AND started_at < cutoff`` (Iceberg row-level op)."""
+        later run re-executes the stage."""
         cutoff = time.time() - max_pending_minutes * 60
-        gone = self._status.delete_where(
-            f"job_id == {job_id!r} and status == 'pending' and started_at < {cutoff!r}"
+        return self._reset_where(
+            job_id,
+            lambda m: m["status"] == "pending" and m.get("started_at", cutoff) < cutoff,
         )
-        return [(r["stage"], int(r["zoom"])) for r in gone]
 
     def retry_errors(self, job_id: str) -> list[tuple[str, int]]:
         """Reset error stages to created (requeue-only-errors, reference
-        store/postgresql.py:443-477). One ``DELETE FROM status WHERE
-        status='error'``. Returns the (stage, zoom) pairs reopened."""
-        gone = self._status.delete_where(
-            f"job_id == {job_id!r} and status == 'error'"
-        )
-        return [(r["stage"], int(r["zoom"])) for r in gone]
+        store/postgresql.py:443-477). Returns the (stage, zoom) pairs
+        reopened."""
+        return self._reset_where(job_id, lambda m: m["status"] == "error")
 
     # -- reads ----------------------------------------------------------------
 

@@ -83,23 +83,14 @@ def _generate_tiles_one(args) -> int:
     from tilecloud_chain_spark.plans.pipeline import generate_tiles
     from tilecloud_chain_spark.sources.tiles_file import write_cache
 
-    from tilecloud_chain_spark.plans.pipeline import run_zoom_stages
-
     spark, owned = _spark(args)
     spark.sparkContext.setLogLevel("ERROR")
     _, grid, layer, geoms, zooms = _load(args)
     store = CheckpointStore(spark, args.checkpoint)
     t0 = time.time()
-    if args.job_id:
-        # exact resume: requeue stale/error stages, re-run only uncommitted
-        job_id = args.job_id
-        store.requeue_stale_pending(job_id)
-        store.retry_errors(job_id)
-        run_zoom_stages(spark, grid, layer, geoms, store, job_id,
-                        meta_buffer=args.meta_buffer)
-    else:
-        job_id = generate_tiles(spark, grid, layer, geoms, store, zooms=zooms,
-                                meta_buffer=args.meta_buffer)
+    # with --job-id: exact resume, only the zooms not yet done render
+    job_id = generate_tiles(spark, grid, layer, geoms, store, zooms=zooms,
+                            meta_buffer=args.meta_buffer, job_id=args.job_id)
     out = store.output(job_id, "tiles")
     n_meta = store.queue(job_id).count()
     rep = store.report(job_id)

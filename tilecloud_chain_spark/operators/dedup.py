@@ -1303,6 +1303,33 @@ def connected_components(
     )
 
 
+def _near_labels(
+    df: DataFrame, threshold: float, num_hashes: int, bands: int,
+    rows_per_band: int, k: int, text_col: str, id_col: str,
+) -> DataFrame:
+    """(id, rep_id, cluster) for every input row: ``rep_id`` is the min id
+    of the row's exact-duplicate group, ``cluster`` the min id of its
+    near-dup connected component. Components run over representative-level
+    pairs only; members attach through one join on their rep."""
+    df = _ensure_parallelism(df)
+    rep_pairs, mem = _collapsed_rep_pairs(
+        df, threshold, num_hashes, bands, rows_per_band, k, text_col, id_col,
+        None,
+    )
+    cc = connected_components(rep_pairs, emit_singletons=False)
+    # mem is one row per input row by construction (keyed ⋈ unique-per-hash
+    # groups), and the input contract requires unique ids (jaccard_pairs
+    # docstring) — a defensive distinct here would shuffle the ENTIRE
+    # corpus's (id, rep) mapping at 10^12 rows for nothing
+    return (
+        mem.join(cc.withColumnRenamed("id", "rep_id"), "rep_id", "left")
+        .select(
+            "id", "rep_id",
+            F.coalesce("component", F.col("rep_id")).alias("cluster"),
+        )
+    )
+
+
 def dedup_clusters(
     df: DataFrame,
     threshold: float = 0.5,
@@ -1335,19 +1362,8 @@ def dedup_clusters(
         return all_ids.select(
             id_col, F.col(id_col).alias("cluster"), F.lit(True).alias("keep")
         )
-    df = _ensure_parallelism(df)
-    rep_pairs, mem = _collapsed_rep_pairs(
-        df, threshold, num_hashes, bands, rows_per_band, k, text_col, id_col,
-        None,
-    )
-    cc = connected_components(rep_pairs, emit_singletons=False)
-    # mem is one row per input row by construction (keyed ⋈ unique-per-hash
-    # groups), and the input contract requires unique ids (jaccard_pairs
-    # docstring) — a defensive distinct here would shuffle the ENTIRE
-    # corpus's (id, rep) mapping at 10^12 rows for nothing
-    labeled = (
-        mem.join(cc.withColumnRenamed("id", "rep_id"), "rep_id", "left")
-        .select("id", F.coalesce("component", F.col("rep_id")).alias("cluster"))
+    labeled = _near_labels(
+        df, threshold, num_hashes, bands, rows_per_band, k, text_col, id_col
     )
     return labeled.select(
         F.col("id").alias(id_col), "cluster",
@@ -1381,23 +1397,13 @@ def dedup_keep_flags(
     the min over all members; property-tested there). Drops a whole
     full-corpus shuffle (the md5 window re-hashed and re-exchanged every
     text) and the member-level star edges from the CC input."""
-    df = _ensure_parallelism(df)
-    rep_pairs, mem = _collapsed_rep_pairs(
-        df, threshold, num_hashes, bands, rows_per_band, k, text_col, id_col,
-        None,
-    )
-    cc = connected_components(rep_pairs, emit_singletons=False)
-    labeled = (
-        mem.join(cc.withColumnRenamed("id", "rep_id"), "rep_id", "left")
-        .select(
-            "id", "rep_id",
-            F.coalesce("component", F.col("rep_id")).alias("_cluster"),
-        )
+    labeled = _near_labels(
+        df, threshold, num_hashes, bands, rows_per_band, k, text_col, id_col
     )
     return labeled.select(
         F.col("id").alias(id_col),
         (F.col("id") == F.col("rep_id")).alias("exact_keep"),
-        (F.col("_cluster") == F.col("id")).alias("neardup_keep"),
+        (F.col("cluster") == F.col("id")).alias("neardup_keep"),
     )
 
 

@@ -67,15 +67,22 @@ def generate_tiles(
     zooms: Iterable[int] | None = None,
     meta_buffer: int | None = None,
     fmt: str = "png",
+    job_id: str | None = None,
 ) -> str:
     """Full run: master (plan+enqueue) then per-zoom slave stages with
-    checkpoint/lineage; returns job_id. Rerunning after a kill resumes
-    exactly (done stages skipped)."""
-    job_id = store.create_job(layer.name, command="generate_tiles")
-    metas = plan_metatiles(spark, grid, layer, geoms, zooms)
-    metas = metas.withColumn("cell", GM.cell_key(F.col("z"), F.col("x"), F.col("y")))
-    store.enqueue(job_id, metas)
-    run_zoom_stages(spark, grid, layer, geoms, store, job_id, meta_buffer, fmt)
+    checkpoint/lineage; returns job_id. Pass it back in to resume after a
+    kill: plan and enqueue are skipped and only the zooms not yet done
+    render. The resolved meta buffer and the format are recorded in the
+    job marker, and a resume with different ones (or another layer) is
+    refused (``CheckpointStore.open_job``)."""
+    mb = layer.meta_buffer if meta_buffer is None else meta_buffer
+    resume = job_id is not None
+    job_id = store.open_job(layer.name, {"meta_buffer": mb, "fmt": fmt}, job_id)
+    if not resume:
+        metas = plan_metatiles(spark, grid, layer, geoms, zooms)
+        metas = metas.withColumn("cell", GM.cell_key(F.col("z"), F.col("x"), F.col("y")))
+        store.enqueue(job_id, metas)
+    run_zoom_stages(spark, grid, layer, geoms, store, job_id, mb, fmt)
     return job_id
 
 
