@@ -54,6 +54,7 @@ from tilecloud_chain_spark.functions import gridmath as GM  # noqa: E402
 from tilecloud_chain_spark.operators import dedup as DD  # noqa: E402
 from tilecloud_chain_spark.operators import filters as FL  # noqa: E402
 from tilecloud_chain_spark.operators import spatial as SP  # noqa: E402
+from tilecloud_chain_spark.session import CODEGEN_CACHE_MAX_ENTRIES  # noqa: E402
 from tilecloud_chain_spark.sources import enumerate as EN  # noqa: E402
 from tilecloud_chain_spark.sources.images import position_exprs  # noqa: E402
 
@@ -131,6 +132,7 @@ def _session(cores: int, shuffle_parts: int | None = None) -> SparkSession:
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.local.dir", os.environ.get("SPARK_LOCAL_DIRS", "/dev/shm/spark-local"))
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_MAX_ENTRIES))
         .config("spark.executorEnv.OPENBLAS_NUM_THREADS", "1")
         .config("spark.executorEnv.OMP_NUM_THREADS", "1")
         .config("spark.executorEnv.MKL_NUM_THREADS", "1")
@@ -851,10 +853,17 @@ def _measure_pair(lo: int, hi: int, sf_dir: str, reps: int, work_mult: int = 1) 
 def _scaling(sf_dir: str) -> dict:
     """North-rule evidence (N -> 4N executors, sandbox realization = cores):
     primary pair local[N] -> local[4N] plus the supplementary local[8] ->
-    local[32] pair the driver suggested — published together with the
-    single-box bandwidth analysis in BENCH.md."""
+    local[32] pair — published together with the single-box bandwidth
+    analysis in BENCH.md. The supplementary pair is refused, with its
+    message recorded in place of a measurement, on a host with fewer than
+    32 usable cores: there local[32] only time-slices the same cores, so
+    its efficiency measures nothing."""
     out = _measure_pair(SCALE_N, SCALE_4N, sf_dir, SCALE_REPS)
-    if os.environ.get("SPARK_GRAFT_SCALING_8_32", "1") != "0":
+    usable = len(os.sched_getaffinity(0))
+    if usable < 32:
+        out["supplementary_8_32"] = {
+            "refused": f"local[32] needs 32 cores; this host has {usable} usable"}
+    elif os.environ.get("SPARK_GRAFT_SCALING_8_32", "1") != "0":
         # informational only (outside the single-box envelope) — but
         # published as a DISTRIBUTION like the primary pair (r6 verdict:
         # point samples can't separate a host phase from a regression).
@@ -1349,7 +1358,7 @@ def _headline_line(result: dict) -> str:
         headline["scaling"] = _pair_summary(result["scaling"])
         sup = result["scaling"].get("supplementary_8_32")
         if sup:
-            headline["scaling"]["supplementary_8_32"] = _pair_summary(sup)
+            headline["scaling"]["supplementary_8_32"] = sup if "refused" in sup else _pair_summary(sup)
     line = json.dumps(headline, separators=(",", ":"))
     assert len(line) < 1900, f"headline line {len(line)} chars — must stay <1900"
     return line
@@ -1432,7 +1441,14 @@ def _write_bench_md(result: dict) -> None:
         "",
     ]
     sup = s.get("supplementary_8_32")
-    if sup:
+    if sup and "refused" in sup:
+        lines += [
+            "## Supplementary pair: local[8] -> local[32]",
+            "",
+            f"Not measured: {sup['refused']}.",
+            "",
+        ]
+    elif sup:
         lines += [
             "## Supplementary pair: local[8] -> local[32]",
             "",

@@ -1,3 +1,4 @@
+import contextlib
 import itertools
 import os
 import sys
@@ -67,3 +68,46 @@ def count_jobs(spark):
         return result, len(sc.statusTracker().getJobIdsForGroup(group))
 
     return run
+
+
+@pytest.fixture
+def count_compiles(spark):
+    """``count_compiles(fn, *args, **kw) -> (result, n)``: call ``fn`` and
+    count the classes Janino compiled meanwhile, i.e. the misses of Spark's
+    JVM-wide generated-code cache (one entry per compile in the
+    ``CodegenMetrics`` compilation-time histogram). ``fn`` must run its
+    actions itself: a lazy DataFrame compiles nothing. Compiles other
+    threads cause in the window are counted too."""
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def run(fn, *args, **kw):
+        n0 = compiles.getCount()
+        result = fn(*args, **kw)
+        return result, compiles.getCount() - n0
+
+    return run
+
+
+@pytest.fixture(scope="session")
+def fixed_join_plans(spark):
+    """``with fixed_join_plans(): ...`` runs the block without adaptive
+    execution's runtime broadcast conversion. With it, a sort-merge join
+    becomes a broadcast join on the side whose shuffle stage finished
+    first, so identical calls can generate different classes; a test that
+    counts compiles needs one plan per query. The rest of adaptive
+    execution stays on."""
+    key = "spark.sql.adaptive.autoBroadcastJoinThreshold"
+
+    @contextlib.contextmanager
+    def off():
+        prev = spark.conf.get(key, None)
+        spark.conf.set(key, "-1")
+        try:
+            yield
+        finally:
+            if prev is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, prev)
+
+    return off

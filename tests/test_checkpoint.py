@@ -48,8 +48,32 @@ def _run_line_job(spark, root):
     return store, job_id
 
 
-def test_pipeline_checkpoint_golden_and_lineage(spark, root):
-    store, job_id = _run_line_job(spark, root)
+@pytest.fixture(scope="module")
+def line_job(spark, tmp_path_factory, fixed_join_plans):
+    """One finished line-layer tile job, (store, job_id), run with one plan
+    per query so that ``test_repeat_tile_job_compiles_no_class`` can
+    repeat it."""
+    with fixed_join_plans():
+        return _run_line_job(spark, str(tmp_path_factory.mktemp("line")))
+
+
+def _tiles(store, job_id):
+    return sorted((r.z, r.x, r.y, r.data) for r in store.output(job_id, "tiles").collect())
+
+
+def test_repeat_tile_job_compiles_no_class(spark, line_job, fixed_join_plans, count_compiles,
+                                           tmp_path):
+    """A second identical tile job finds every generated class in Spark's
+    codegen cache and stores the same tiles. Runs first in the module, so
+    the only job before it is the ``line_job`` fixture's."""
+    with fixed_join_plans():
+        again, n = count_compiles(_run_line_job, spark, str(tmp_path))
+    assert n == 0
+    assert _tiles(*again) == _tiles(*line_job)
+
+
+def test_pipeline_checkpoint_golden_and_lineage(line_job):
+    store, job_id = line_job
     out = store.output(job_id, "tiles", 0)
     got = {(r.x, r.y) for r in out.select("x", "y").collect()}
     assert got == {(6, 5), (7, 5), (5, 6), (6, 6), (4, 7), (5, 7)}  # reference golden
@@ -65,8 +89,8 @@ def test_pipeline_checkpoint_golden_and_lineage(spark, root):
     assert store.job(job_id)["meta_tiles_total"] == store.queue(job_id).count()
 
 
-def test_exact_resume_skips_done_stages(spark, root):
-    store, job_id = _run_line_job(spark, root)
+def test_exact_resume_skips_done_stages(line_job):
+    store, job_id = line_job
     before = {(r.z, r.x, r.y) for r in store.output(job_id, "tiles").collect()}
 
     # simulate a restarted run: same stages re-submitted -> all skipped
@@ -291,3 +315,57 @@ def test_orphaned_temp_marker_is_invisible(spark, tmp_path):
     names, seq = _markers(root, job, "q")
     assert [n for n in names if not n.startswith(".")] == ["00000001.json"]
     assert seq[-1] == "done" and store.stage_status(job, "q", 0) == "done"
+
+
+class _Killed(BaseException):
+    """Raised where a kill would land; no ``except Exception`` catches it."""
+
+
+def test_kill_between_write_and_publish_leaves_no_orphan(spark, tmp_path, monkeypatch):
+    """Two tile-shaped zoom stages of 100 rows; the second is killed after
+    its write and before its publish, then the job is resumed. The stage
+    tree must never hold the killed attempt: ``output()`` without a zoom
+    and ``report()`` equal an uninterrupted run's, and the resume sweeps
+    the attempt's temp directory."""
+    def build(z):
+        return lambda: spark.range(0, 100, 1, 2).select(
+            F.lit(z).alias("z"), F.col("id").alias("cell"), F.lit(b"tile").alias("data"))
+
+    def run_all(store, job):
+        for z in (0, 1):
+            store.run_stage(job, "tiles", z, build(z), bytes_col="data")
+        return store.output(job, "tiles").count(), store.report(job)["rows"]
+
+    clean = CheckpointStore(spark, str(tmp_path / "clean"))
+    want = run_all(clean, clean.open_job("tiles", {}))
+    assert want == (200, 200)
+
+    root = str(tmp_path / "killed")
+    store = CheckpointStore(spark, root)
+    job = store.open_job("tiles", {})
+    store.run_stage(job, "tiles", 0, build(0), bytes_col="data")
+    real_replace = os.replace
+    kills = []
+
+    def replace_killed_once(src, dst):
+        if not kills and f"{os.sep}stage=" in str(dst):
+            kills.append(dst)
+            raise _Killed()
+        return real_replace(src, dst)
+
+    monkeypatch.setattr(os, "replace", replace_killed_once)
+    with pytest.raises(_Killed):
+        store.run_stage(job, "tiles", 1, build(1), bytes_col="data")
+    monkeypatch.undo()
+    assert kills and store.stage_status(job, "tiles", 1) == "pending"
+    assert store.output(job, "tiles").count() == 100
+
+    resumed = CheckpointStore(spark, root)
+    assert resumed.open_job("tiles", {}, job) == job
+    assert not os.path.exists(os.path.join(root, "tmp", f"job={job}"))
+    assert run_all(resumed, job) == want
+
+    # an attempt that published but died before its done marker: the
+    # re-run replaces the published directory instead of adding to it
+    resumed.set_status(job, "tiles", 0, "pending", started_at=time.time())
+    assert run_all(resumed, job) == want

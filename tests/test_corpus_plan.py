@@ -80,10 +80,12 @@ def _rows(df):
 
 
 @pytest.fixture(scope="module")
-def want(inputs):
+def want(inputs, fixed_join_plans):
     """The composed operator's result — the reference every staged run
-    must reproduce."""
-    return _rows(corpus_admission(*inputs, **_KW))
+    must reproduce — computed with one plan per query, so that
+    ``test_repeat_call_compiles_no_class`` can repeat the call."""
+    with fixed_join_plans():
+        return _rows(corpus_admission(*inputs, **_KW))
 
 
 @pytest.fixture(scope="module")
@@ -91,6 +93,17 @@ def staged(spark, inputs, tmp_path_factory):
     """One finished staged job: (store, job_id)."""
     store = CheckpointStore(spark, str(tmp_path_factory.mktemp("corpus")))
     return store, curate_corpus(spark, inputs[0], store, *inputs[1:], **_KW)
+
+
+def test_repeat_call_compiles_no_class(inputs, want, fixed_join_plans, count_compiles):
+    """A second identical call finds every generated class in Spark's
+    codegen cache: no per-call value reaches generated code, and the cache
+    holds the whole query set. Runs first in the module, so the only call
+    before it is the ``want`` fixture's."""
+    with fixed_join_plans():
+        rows, n = count_compiles(lambda: _rows(corpus_admission(*inputs, **_KW)))
+    assert rows == want
+    assert n == 0
 
 
 def test_staged_plan_equals_composed_operator(staged, want):

@@ -61,13 +61,31 @@ def want(inputs):
                                         **_KW))
 
 
-@pytest.fixture(scope="module")
-def staged(spark, inputs, tmp_path_factory):
-    """One finished staged job: (store, job_id)."""
+def _staged(spark, inputs, root):
     imgs, ev, pairs = inputs
-    store = CheckpointStore(spark, str(tmp_path_factory.mktemp("curation")))
+    store = CheckpointStore(spark, str(root))
     return store, curate_images(spark, imgs, store, eval_df=ev,
                                 clip_pairs=pairs, **_KW)
+
+
+@pytest.fixture(scope="module")
+def staged(spark, inputs, tmp_path_factory, fixed_join_plans):
+    """One finished staged job: (store, job_id), run with one plan per
+    query, so that ``test_repeat_call_compiles_no_class`` can repeat it."""
+    with fixed_join_plans():
+        return _staged(spark, inputs, tmp_path_factory.mktemp("curation"))
+
+
+def test_repeat_call_compiles_no_class(spark, inputs, staged, want, fixed_join_plans,
+                                      count_compiles, tmp_path):
+    """The same staged job into a fresh store finds every generated class
+    in Spark's codegen cache: no per-call value reaches generated code,
+    and the cache holds the whole query set. Runs first in the module, so
+    the only staged job before it is the ``staged`` fixture's."""
+    with fixed_join_plans():
+        (store, job), n = count_compiles(_staged, spark, inputs, tmp_path)
+    assert n == 0
+    assert _result_rows(admission_table(store, job)) == want
 
 
 def test_staged_plan_equals_composed_operator(staged, want):

@@ -27,6 +27,14 @@ currently in error are requeued, done rows untouched"
   data (a ``_lineage`` struct column, null on data rows): lineage commits
   atomically with exactly the data it describes. ``output()`` filters
   ``_lineage IS NULL``; ``lineage()`` reads the complement.
+- **Crash-safe publish**: a stage attempt writes under
+  ``tmp/job=<id>/<uuid>/``, outside every read path but on the same
+  filesystem, and publishes with renames only: an earlier attempt's
+  ``z=<z>`` directory is first moved into the attempt's temp directory,
+  then the new data is renamed into place. A kill at any point leaves the
+  stage tree holding one complete attempt or none, never an orphan or a
+  half-deleted directory; what the kill leaves under ``tmp/`` is swept
+  when the job is reopened (``open_job`` with its id).
 - **Exact resume**: ``run_stage`` is a no-op when the stage's status is
   ``done``; a killed run re-executes only uncommitted stages against the
   same deterministic inputs. ``retry_errors`` re-opens only stages marked
@@ -37,6 +45,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import uuid
 from collections.abc import Callable
@@ -137,7 +146,9 @@ class CheckpointStore:
         ``job_id`` — check that the job was created with the same
         ``params`` and return it. A resume with different parameters is
         refused: the new values would be silently ignored for committed
-        stages, or a mid-run kill would yield a mixed-parameter result."""
+        stages, or a mid-run kill would yield a mixed-parameter result.
+        A resume also sweeps the temp directories a killed run of the job
+        left behind, so it must be the job's only writer."""
         command = f"{name} {json.dumps(params, sort_keys=True)}"
         if job_id is None:
             return self.create_job(name, command=command)
@@ -148,6 +159,7 @@ class CheckpointStore:
                 f"resume must reuse them (or start a new job).\n"
                 f"  recorded: {prev}\n  requested: {command}"
             )
+        shutil.rmtree(self._tmp_root(job_id), ignore_errors=True)
         return job_id
 
     def job(self, job_id: str) -> dict:
@@ -184,6 +196,9 @@ class CheckpointStore:
 
     def _stage_dir(self, job_id: str, stage: str, zoom: int) -> str:
         return os.path.join(self.root, "stages", f"job={job_id}", f"stage={stage}", f"z={zoom}")
+
+    def _tmp_root(self, job_id: str) -> str:
+        return os.path.join(self.root, "tmp", f"job={job_id}")
 
     def _status_dir(self, job_id: str, stage: str, zoom: int) -> str:
         return os.path.join(self.root, "status", f"job={job_id}", f"stage={stage}", f"z={int(zoom)}")
@@ -274,21 +289,22 @@ class CheckpointStore:
             return {"skipped": True, "status": "done"}
         self.set_status(job_id, stage, zoom, "pending", started_at=time.time())
         out_dir = self._stage_dir(job_id, stage, zoom)
-        tmp_dir = f"{out_dir}.inprogress-{uuid.uuid4().hex}"
+        attempt = os.path.join(self._tmp_root(job_id), uuid.uuid4().hex)
+        data = os.path.join(attempt, "data")
         t0 = time.perf_counter()
         try:
             df = build()
             with_lin = with_lineage(df, cell_col=cell_col, bytes_col=bytes_col)
-            with_lin.write.mode("overwrite").parquet(tmp_dir)
-            if os.path.exists(out_dir):  # failed earlier attempt's partial data
-                import shutil
-
-                shutil.rmtree(out_dir)
+            with_lin.write.mode("overwrite").parquet(data)
+            if os.path.exists(out_dir):  # an earlier attempt published, then died
+                os.replace(out_dir, os.path.join(attempt, "old"))
             os.makedirs(os.path.dirname(out_dir), exist_ok=True)
-            os.replace(tmp_dir, out_dir)  # atomic publish of data+lineage
+            os.replace(data, out_dir)  # atomic publish of data+lineage
         except Exception as exc:
+            shutil.rmtree(attempt, ignore_errors=True)
             self.set_status(job_id, stage, zoom, "error", error=str(exc)[:2000])
             raise
+        shutil.rmtree(attempt, ignore_errors=True)
         wall = time.perf_counter() - t0
         self.set_status(job_id, stage, zoom, "done", wall_s=round(wall, 3))
         return {"skipped": False, "status": "done", "wall_s": wall}

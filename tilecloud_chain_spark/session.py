@@ -4,6 +4,18 @@ Local-mode knobs mirror what we'd set on a real cluster: AQE (runtime
 re-planning + skew-join splitting), Arrow for pandas UDF transfer, parquet
 filter pushdown. ``cores`` parameterizes the two-cluster-size scaling bench
 (N vs 4N realization, BASELINE.md).
+
+Spark keeps the classes it generates for whole-stage codegen in one
+JVM-wide cache, keyed by class loader and generated source; a miss costs
+a Janino compile plus the JIT's work on the new class. The default cache
+holds 100 classes, but one capstone call needs 120-200 distinct ones and
+an admission process about 400, so with the default every call evicted
+what the call before it compiled and compiled it again (a repeat
+``corpus_admission`` call compiled 168 classes with the default).
+``CODEGEN_CACHE_MAX_ENTRIES`` sizes the cache to the engine's
+whole query set; its census is next to it. It is a static SQL conf: it
+takes effect only when ``get_spark`` creates the session (and with it
+the JVM's cache), never on a session that already exists.
 """
 
 from __future__ import annotations
@@ -11,6 +23,18 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+#: ``spark.sql.codegen.cache.maxEntries``: at least twice the most distinct
+#: generated classes one process of the engine compiles. Census: Janino
+#: compiles per process with a cache that never evicts, i.e. the distinct
+#: (class loader, class) pairs, at seed 1 on local[4]; in brackets, the
+#: compiles with Spark's default of 100:
+#:   perfbench ``admission``               404  (892)
+#:   perfbench ``tile_pyramid``              79   (79)
+#:   cli ``curate-corpus``                  182  (182, one call per process)
+#:   cli ``curate-images``                  126  (126)
+#:   cli ``generate-tiles``, line, z0-3      42   (42)
+CODEGEN_CACHE_MAX_ENTRIES = 1024
 
 
 def get_spark(
@@ -34,6 +58,7 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_MAX_ENTRIES))
     )
     return builder.getOrCreate()
 
