@@ -160,6 +160,22 @@ def test_parser_self_closing_block_tags_flush():
     assert [b[0] for b in H._parse_blocks(doc2)] == ["alpha beta", "gamma"]
 
 
+def test_parser_bare_void_skip_tag_keeps_the_rest_of_the_page():
+    # <embed> is a void element: its bare start tag has no end tag, so it
+    # must not open a skip subtree that swallows the rest of the page
+    want = ["First paragraph text", "Second paragraph text"]
+    for embed in ('<embed src="a.swf">', '<embed src="a.swf"/>'):
+        doc = f"<p>First paragraph text</p>{embed}<p>Second paragraph text</p>"
+        assert [b[0] for b in H._parse_blocks(doc)] == want
+    # a stray </embed> inside <object> must not end the object's skipped
+    # subtree early
+    doc = (
+        "<p>before</p><object><embed></embed>object fallback text</object>"
+        "<p>after</p>"
+    )
+    assert [b[0] for b in H._parse_blocks(doc)] == ["before", "after"]
+
+
 def test_parser_anchor_wrapping_block_content():
     # HTML5 card-style nav: <a> legitimately wraps block content; its
     # inner blocks ARE link text (r7 judge finding — a block start tag

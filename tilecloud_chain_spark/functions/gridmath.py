@@ -48,7 +48,7 @@ def cell_unpack(cell: Column) -> tuple[Column, Column, Column]:
     """Inverse of :func:`cell_key` — pure integer shifts/masks (float
     division would round the long→double conversion for x ≥ 2^24 and give
     off-by-one unpacks on matrices wider than ~16.7M tiles)."""
-    mask = F.lit((1 << _XY_BITS) - 1)
+    mask = F.lit(_Y_MASK)
     z = F.shiftrightunsigned(cell, 2 * _XY_BITS).cast("int").alias("z")
     x = F.shiftrightunsigned(cell, _XY_BITS).bitwiseAND(mask).cast("int").alias("x")
     y = cell.bitwiseAND(mask).cast("int").alias("y")

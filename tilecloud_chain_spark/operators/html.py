@@ -62,10 +62,10 @@ _BLOCK_TAGS = frozenset(
     ).split()
 )
 
-#: void elements never get a closing tag — seeing one must not unbalance
-#: the skip-depth bookkeeping
+#: void elements never get a closing tag — a void skip tag (``<embed>``)
+#: must not open a skip subtree that no end tag would ever close
 _VOID_TAGS = frozenset(
-    "br img input meta link hr area base col source track wbr param".split()
+    "br img input meta link hr area base col embed source track wbr param".split()
 )
 
 #: tiny embedded stopword sets for the langid demo languages (ASCII
@@ -137,7 +137,8 @@ class _BlockParser(HTMLParser):
     # -- parser events -----------------------------------------------------
     def handle_starttag(self, tag: str, attrs) -> None:
         if tag in _SKIP_TAGS:
-            self._skip_depth += 1
+            if tag not in _VOID_TAGS:
+                self._skip_depth += 1
             return
         if self._skip_depth:
             return
@@ -158,8 +159,11 @@ class _BlockParser(HTMLParser):
 
     def handle_endtag(self, tag: str) -> None:
         if tag in _SKIP_TAGS:
-            # max() guards unbalanced markup (a stray </script>)
-            self._skip_depth = max(0, self._skip_depth - 1)
+            # a void tag's stray end tag (</embed>) closes nothing: inside
+            # <object> it would end the object's subtree early; max()
+            # guards unbalanced markup (a stray </script>)
+            if tag not in _VOID_TAGS:
+                self._skip_depth = max(0, self._skip_depth - 1)
             return
         if self._skip_depth:
             return

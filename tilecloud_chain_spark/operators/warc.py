@@ -143,9 +143,6 @@ def decode_payload(payload: bytes, declared: str | None) -> tuple[str | None, st
     return declared_out, ("utf-8" if used == "utf-8-sig" else used), text
 
 
-_CRLF = b"\r\n"
-
-
 def _split_header_block(buf: bytes, pos: int) -> tuple[dict, int]:
     """Parse one CRLF(-or-LF)-terminated header block starting at ``pos``;
     returns ({lowercase name: value}, offset just past the blank line)."""

@@ -3,7 +3,8 @@
 Local-mode knobs mirror what we'd set on a real cluster: AQE (runtime
 re-planning + skew-join splitting), Arrow for pandas UDF transfer, parquet
 filter pushdown. ``cores`` parameterizes the two-cluster-size scaling bench
-(N vs 4N realization, BASELINE.md).
+(N vs 4N realization, BASELINE.md); without it, ``$SPARK_GRAFT_CPUS`` or
+else the usable cores set the local thread count.
 
 Spark keeps the classes it generates for whole-stage codegen in one
 JVM-wide cache, keyed by class loader and generated source; a miss costs
@@ -42,7 +43,10 @@ def get_spark(
     cores: int | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    # the affinity set, not os.cpu_count(): a container or taskset narrows it
+    cores = cores or int(
+        os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    )
     shuffle_partitions = shuffle_partitions or max(cores, 8)
     builder = (
         SparkSession.builder.appName(app_name)

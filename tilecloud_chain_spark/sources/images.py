@@ -20,11 +20,6 @@ from pyspark.sql import functions as F
 from tilecloud_chain_spark.config import Grid
 from tilecloud_chain_spark.functions import image as IMG
 
-IMAGE_SCHEMA = (
-    "image_id string, bytes binary, w int, h int, fmt string, "
-    "caption string, phash long, x double, y double"
-)
-
 # Knuth multiplicative hashes used to scatter ids into the bbox; kept as
 # plain integer arithmetic so DuckDB oracles can replicate positions exactly.
 _HX = 2654435761
