@@ -71,6 +71,36 @@ def count_jobs(spark):
 
 
 @pytest.fixture
+def check_store_reads(spark, count_jobs):
+    """``check_store_reads(store, job_id) -> stages``: for every committed
+    stage and zoom of the job, building its ``output`` read (per zoom and
+    across zooms) and its ``lineage`` read runs no Spark job, and the
+    ``output`` schema equals the one parquet inference finds in the
+    stage's files, minus ``_lineage``. Returns the stage names seen."""
+
+    def run(store, job_id):
+        base = os.path.join(store.root, "stages", f"job={job_id}")
+        stages = sorted(d[len("stage="):] for d in os.listdir(base))
+        for stage in stages:
+            zooms = sorted(int(d[len("z="):])
+                           for d in os.listdir(os.path.join(base, f"stage={stage}")))
+            for zoom in [*zooms, None]:
+                df, n = count_jobs(store.output, job_id, stage, zoom)
+                assert n == 0, (stage, zoom)
+                path = os.path.join(base, f"stage={stage}",
+                                    "" if zoom is None else f"z={zoom}")
+                inferred = spark.read.option("recursiveFileLookup", "true").parquet(path)
+                assert df.schema == inferred.drop("_lineage").schema, (stage, zoom)
+            lin, n = count_jobs(store.lineage, job_id, stage)
+            assert n == 0, stage
+            assert lin.schema == inferred.select("_lineage.*").schema, stage
+        assert count_jobs(store.lineage, job_id)[1] == 0
+        return stages
+
+    return run
+
+
+@pytest.fixture
 def count_compiles(spark):
     """``count_compiles(fn, *args, **kw) -> (result, n)``: call ``fn`` and
     count the classes Janino compiled meanwhile, i.e. the misses of Spark's

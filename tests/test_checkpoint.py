@@ -89,6 +89,15 @@ def test_pipeline_checkpoint_golden_and_lineage(line_job):
     assert store.job(job_id)["meta_tiles_total"] == store.queue(job_id).count()
 
 
+def test_store_reads_run_no_job_and_keep_the_written_schema(line_job, check_store_reads,
+                                                           count_jobs):
+    store, job_id = line_job
+    assert check_store_reads(store, job_id) == ["tiles"]
+    q, n = count_jobs(store.queue, job_id)
+    assert n == 0
+    assert q.columns == ["x", "y", "n", "cell", "z"]
+
+
 def test_exact_resume_skips_done_stages(line_job):
     store, job_id = line_job
     before = {(r.z, r.x, r.y) for r in store.output(job_id, "tiles").collect()}
@@ -369,3 +378,23 @@ def test_kill_between_write_and_publish_leaves_no_orphan(spark, tmp_path, monkey
     # re-run replaces the published directory instead of adding to it
     resumed.set_status(job, "tiles", 0, "pending", started_at=time.time())
     assert run_all(resumed, job) == want
+
+
+def test_done_stage_without_schema_file_reruns_on_resume(spark, tmp_path):
+    """A stage published before stages carried ``_schema.json`` is
+    ``done`` but has no schema to read with: resuming the job re-runs it
+    (one more pending -> done), and the rows read back are the same."""
+    geom = G.parse_wkt(LAYERS["line"].geom_wkt)
+    root = str(tmp_path / "ck")
+    store = CheckpointStore(spark, root)
+    job = P.generate_tiles(spark, SWISSGRID_5, LAYERS["line"], {0: geom}, store,
+                           zooms=[0], meta_buffer=32)
+    before = _tiles(store, job)
+    schema_file = os.path.join(root, "stages", f"job={job}", "stage=tiles", "z=0",
+                               "_schema.json")
+    os.remove(schema_file)
+    assert P.generate_tiles(spark, SWISSGRID_5, LAYERS["line"], {0: geom}, store,
+                            zooms=[0], meta_buffer=32, job_id=job) == job
+    assert _markers(root, job, "tiles")[1] == ["pending", "done", "pending", "done"]
+    assert os.path.exists(schema_file)
+    assert _tiles(store, job) == before

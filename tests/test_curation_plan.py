@@ -110,6 +110,12 @@ def test_staged_plan_equals_composed_operator(staged, want):
     assert sched.count() == n_batches
 
 
+def test_store_reads_run_no_job_and_keep_the_written_schema(staged, check_store_reads):
+    store, job = staged
+    assert check_store_reads(store, job) == sorted(
+        ["dedup", "decontam", "clip", "admitted", "batches", "schedule"])
+
+
 def test_rerun_same_job_skips_every_stage(spark, inputs, staged, want):
     imgs, ev, pairs = inputs
     store, job = staged

@@ -3,7 +3,9 @@ plan-time-bounded — nothing trillion-sized ever touches the driver."""
 
 import time
 
+import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from tilecloud_chain_spark.config import Grid
 from tilecloud_chain_spark.operators import spatial as SP
@@ -105,3 +107,40 @@ def test_ensure_parallelism_never_executes_join_stages(spark, count_jobs):
     out, jobs = count_jobs(ensure_parallelism, joined)
     assert out is joined  # backed off untouched
     assert jobs == 0, "probe launched Spark jobs on a join-fed plan"
+
+
+_LOCAL_ROWS = [(1 << 40, 7, "a", 0.5, True),
+               (None, None, None, None, None),
+               (-3, -(1 << 31), "\u00e9\u3000", -1e300, False)]
+
+
+@pytest.mark.parametrize("schema,rows", [
+    ("l long, i int, s string, d double, b boolean", _LOCAL_ROWS),
+    ("l long, i int, s string, d double, b boolean", []),
+    # the prefix-sum offsets shape: a nullable key, a non-null long
+    (StructType([StructField("k", StringType()), StructField("o", LongType(), False)]),
+     [(None, 0), ("x", 1 << 50)]),
+], ids=["types_and_nulls", "empty", "non_null_column"])
+def test_local_frame_runs_no_job(spark, count_jobs, schema, rows):
+    """Driver-held rows become a LocalTableScan: building and collecting
+    the frame runs no Spark job, so no Python worker task (a list-fed
+    ``createDataFrame`` ran 1 job of Python tasks on every read), for
+    every column type the engine's call sites hand it, with nulls, and
+    empty."""
+    from tilecloud_chain_spark.session import local_frame
+
+    df, n_build = count_jobs(local_frame, spark, rows, schema)
+    got, n_collect = count_jobs(df.collect)
+    assert (n_build, n_collect) == (0, 0)
+    assert "LocalTableScan" in df._jdf.queryExecution().executedPlan().toString()
+    assert [tuple(r) for r in got] == rows
+    want = StructType.fromDDL(schema) if isinstance(schema, str) else schema
+    assert df.schema == want
+
+
+def test_local_frame_refuses_rows_of_another_width(spark):
+    from tilecloud_chain_spark.session import local_frame
+
+    for rows in ([(1, 2), (3,)], [(1, 2, 3)]):
+        with pytest.raises(ValueError):
+            local_frame(spark, rows, "a long, b long")

@@ -289,6 +289,20 @@ def test_connected_components_shapes(spark):
     assert got == want
 
 
+def test_driver_union_find_frame_runs_no_job(spark, count_jobs):
+    """The CC driver finisher hands its components back as a local frame:
+    reading it runs no Spark job, so no Python worker task."""
+    import pandas as pd
+
+    edges = pd.DataFrame({"u": [1, 2, 3, 10, 11], "v": [2, 3, 4, 11, 12]})
+    schema = "u long, v long"
+    comp = DD._union_find_pdf(spark, edges, schema)
+    got, n = count_jobs(comp.collect)
+    assert n == 0
+    assert {tuple(r) for r in got} == {(2, 1), (3, 1), (4, 1), (11, 10), (12, 10)}
+    assert "LocalTableScan" in comp._jdf.queryExecution().executedPlan().toString()
+
+
 def test_dedup_clusters_lsh_refines_exact(spark, docs):
     """The LSH-driven dedup_clusters must (a) keep exactly one doc per
     cluster, (b) produce clusters that are REFINEMENTS of the exact-Jaccard

@@ -27,6 +27,15 @@ currently in error are requeued, done rows untouched"
   data (a ``_lineage`` struct column, null on data rows): lineage commits
   atomically with exactly the data it describes. ``output()`` filters
   ``_lineage IS NULL``; ``lineage()`` reads the complement.
+- **The schema commits with the data**: ``run_stage`` writes the written
+  frame's schema as ``_schema.json`` into the attempt's data directory, so
+  the publish rename commits it together with the files it describes
+  (Spark's file listing skips names that start with ``_``). Every read
+  is built with a known schema — ``output()`` with the stage's
+  ``_schema.json``, ``lineage()`` with the fixed ``_lineage`` struct,
+  ``queue()`` with the fixed queue schema — so building a read infers
+  nothing and runs no Spark job. A ``done`` stage without the file (one
+  published before the file existed) is re-run by ``run_stage``.
 - **Crash-safe publish**: a stage attempt writes under
   ``tmp/job=<id>/<uuid>/``, outside every read path but on the same
   filesystem, and publishes with renames only: an earlier attempt's
@@ -52,6 +61,17 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+#: the per-partition lineage struct ``with_lineage`` appends to every stage
+LINEAGE_DDL = ("_lineage struct<partition_id: int, salt: int, cell_min: bigint, "
+               "cell_max: bigint, row_count: bigint, bytes: bigint, wall_ms: bigint>")
+#: the queue table's columns; ``enqueue`` writes exactly these, ``z`` as
+#: the partition directory
+QUEUE_DDL = "x int, y int, n int, cell bigint, z int"
+#: the written schema of a stage attempt, next to its parquet files
+SCHEMA_FILE = "_schema.json"
+
 
 def with_lineage(df: DataFrame, cell_col: str = "cell", bytes_col: str | None = None,
                  salt_col: str | None = None) -> DataFrame:
@@ -66,10 +86,8 @@ def with_lineage(df: DataFrame, cell_col: str = "cell", bytes_col: str | None = 
 
     in_cols = df.columns
     has_cell = cell_col in in_cols
-    out_schema = (
-        ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields)
-        + ", _lineage struct<partition_id: int, salt: int, cell_min: bigint, "
-        "cell_max: bigint, row_count: bigint, bytes: bigint, wall_ms: bigint>"
+    out_schema = ", ".join(
+        [f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields] + [LINEAGE_DDL]
     )
 
     def wrap(batches):
@@ -178,8 +196,10 @@ class CheckpointStore:
         """Append work rows (the master role's queue put, generate.py:164-168).
         Returns meta_tiles_total (store/postgresql.py:285-290)."""
         path = os.path.join(self.root, "queue", f"job={job_id}")
-        metatiles.write.mode("append").partitionBy("z").parquet(path)
-        n = self.spark.read.parquet(path).count()
+        cols = StructType.fromDDL(QUEUE_DDL).fields
+        (metatiles.select([F.col(f.name).cast(f.dataType) for f in cols])
+         .write.mode("append").partitionBy("z").parquet(path))
+        n = self.queue(job_id).count()
         j = self.job(job_id)
         j["meta_tiles_total"] = n
         j["status"] = "started"
@@ -187,7 +207,8 @@ class CheckpointStore:
         return n
 
     def queue(self, job_id: str, zoom: int | None = None) -> DataFrame:
-        df = self.spark.read.parquet(os.path.join(self.root, "queue", f"job={job_id}"))
+        df = self.spark.read.schema(QUEUE_DDL).parquet(
+            os.path.join(self.root, "queue", f"job={job_id}"))
         if zoom is not None:
             df = df.filter(F.col("z") == zoom)
         return df
@@ -282,13 +303,15 @@ class CheckpointStore:
         Skips when already ``done`` (exact resume); on failure the marker is
         ``error`` and a later ``run_stage``/``retry_errors`` re-executes —
         only error/uncommitted stages re-run, done stages are untouched
-        (reference retry parity, store/postgresql.py:443-477).
+        (reference retry parity, store/postgresql.py:443-477). A ``done``
+        stage published without its ``_schema.json`` re-runs, since no
+        read can be built for it.
         """
-        status = self.stage_status(job_id, stage, zoom)
-        if status == "done":
+        out_dir = self._stage_dir(job_id, stage, zoom)
+        if (self.stage_status(job_id, stage, zoom) == "done"
+                and os.path.exists(os.path.join(out_dir, SCHEMA_FILE))):
             return {"skipped": True, "status": "done"}
         self.set_status(job_id, stage, zoom, "pending", started_at=time.time())
-        out_dir = self._stage_dir(job_id, stage, zoom)
         attempt = os.path.join(self._tmp_root(job_id), uuid.uuid4().hex)
         data = os.path.join(attempt, "data")
         t0 = time.perf_counter()
@@ -296,10 +319,12 @@ class CheckpointStore:
             df = build()
             with_lin = with_lineage(df, cell_col=cell_col, bytes_col=bytes_col)
             with_lin.write.mode("overwrite").parquet(data)
+            with open(os.path.join(data, SCHEMA_FILE), "w") as f:
+                f.write(with_lin.schema.json())
             if os.path.exists(out_dir):  # an earlier attempt published, then died
                 os.replace(out_dir, os.path.join(attempt, "old"))
             os.makedirs(os.path.dirname(out_dir), exist_ok=True)
-            os.replace(data, out_dir)  # atomic publish of data+lineage
+            os.replace(data, out_dir)  # atomic publish of data+lineage+schema
         except Exception as exc:
             shutil.rmtree(attempt, ignore_errors=True)
             self.set_status(job_id, stage, zoom, "error", error=str(exc)[:2000])
@@ -329,16 +354,22 @@ class CheckpointStore:
     # -- reads ----------------------------------------------------------------
 
     def output(self, job_id: str, stage: str, zoom: int | None = None) -> DataFrame:
+        """The stage's committed rows (every zoom's when ``zoom`` is None),
+        read with the schema the stage was written with."""
         base = os.path.join(self.root, "stages", f"job={job_id}", f"stage={stage}")
         path = base if zoom is None else os.path.join(base, f"z={zoom}")
-        df = self.spark.read.option("recursiveFileLookup", "true").parquet(path)
+        # the zooms of one stage share its schema: any zoom's file will do
+        zd = os.path.join(base, min(os.listdir(base))) if zoom is None else path
+        with open(os.path.join(zd, SCHEMA_FILE)) as f:
+            schema = StructType.fromJson(json.load(f))
+        df = self.spark.read.schema(schema).option("recursiveFileLookup", "true").parquet(path)
         return df.filter(F.col("_lineage").isNull()).drop("_lineage")
 
     def lineage(self, job_id: str, stage: str | None = None) -> DataFrame:
         base = os.path.join(self.root, "stages", f"job={job_id}")
         if stage is not None:
             base = os.path.join(base, f"stage={stage}")
-        df = self.spark.read.option("recursiveFileLookup", "true").parquet(base)
+        df = self.spark.read.schema(LINEAGE_DDL).option("recursiveFileLookup", "true").parquet(base)
         return df.filter(F.col("_lineage").isNotNull()).select("_lineage.*")
 
     def report(self, job_id: str) -> dict:

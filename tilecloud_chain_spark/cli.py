@@ -360,6 +360,7 @@ def cmd_curate_corpus(args) -> int:
     from tilecloud_chain_spark.operators.lm import train_bigram_lm
     from tilecloud_chain_spark.operators.postprocess import duration_format
     from tilecloud_chain_spark.plans.corpus import admission_table, curate_corpus
+    from tilecloud_chain_spark.session import local_frame
 
     spark, owned = _spark(args)
     spark.sparkContext.setLogLevel("ERROR")
@@ -379,7 +380,7 @@ def cmd_curate_corpus(args) -> int:
     train = (
         spark.read.parquet(args.langid_train)
         if args.langid_train
-        else spark.createDataFrame(DEMO_TRAIN, "lang string, text string")
+        else local_frame(spark, DEMO_TRAIN, "lang string, text string")
     )
     profiles = train_ngram_profiles(train)
     lm_train = CP.extract_stage(pages.filter(F.expr("doc_id % 7 = 0")))

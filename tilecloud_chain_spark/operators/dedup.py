@@ -29,6 +29,7 @@ from pyspark.sql.window import Window
 
 from tilecloud_chain_spark.operators.text import tokens
 from tilecloud_chain_spark.session import ensure_parallelism as _ensure_parallelism
+from tilecloud_chain_spark.session import local_frame
 
 
 # --------------------------------------------------------------------------
@@ -1013,7 +1014,8 @@ _CC_MAX_ROWS_PER_PARTITION = 1 << 16
 
 #: residual edge count below which the CC loop finishes with a bounded
 #: driver-side union-find instead of more distributed rounds. Collected
-#: via Arrow (toPandas -> two int64 numpy columns, ~16 MB at the cap);
+#: via Arrow (toPandas -> two int64 numpy columns, ~16 MB at the cap) and
+#: handed back as an Arrow-built local frame (no Python worker reads it);
 #: the union-find dicts on top add roughly 30-60 bytes/node of Python
 #: overhead, so worst-case driver RSS for the finisher is ~100-150 MB —
 #: the honest budget (r7 judge: the old "~16 MB" figure counted raw
@@ -1021,13 +1023,15 @@ _CC_MAX_ROWS_PER_PARTITION = 1 << 16
 _CC_DRIVER_FINISH_EDGES = 1 << 20
 
 
-def _union_find_pdf(spark, pdf, schema, empty_df) -> DataFrame:
+def _union_find_pdf(spark, pdf, schema) -> DataFrame:
     """Exact min-label components over an ALREADY-COLLECTED small edge
     frame (two int64-ish columns; duplicate and repeated edges are fine —
     find/union are idempotent), as the same (member -> component-min)
     edge shape the star loop converges to. Union-find with path
     compression; second pass labels every root's tree with the
-    component's min id."""
+    component's min id. The result is handed back as an Arrow-built
+    ``local_frame`` (a ``LocalTableScan``): its readers run no Python
+    worker task to unpickle driver-held rows."""
     parent: dict = {}
 
     def find(x):
@@ -1053,7 +1057,7 @@ def _union_find_pdf(spark, pdf, schema, empty_df) -> DataFrame:
         for n in ns
         if n != root
     ]
-    return spark.createDataFrame(out, schema=schema) if out else empty_df
+    return local_frame(spark, out, schema)
 
 
 def _driver_union_find(spark, edges: DataFrame) -> DataFrame:
@@ -1061,7 +1065,7 @@ def _driver_union_find(spark, edges: DataFrame) -> DataFrame:
     collect goes through Arrow (``toPandas`` -> two int64 numpy arrays):
     at the 2^20-edge cap that is ~16 MB of columnar payload instead of
     ~10x that in PySpark ``Row`` objects (r7 judge finding)."""
-    return _union_find_pdf(spark, edges.toPandas(), edges.schema, edges.limit(0))
+    return _union_find_pdf(spark, edges.toPandas(), edges.schema)
 
 
 def _cc_loop_partitions(n_edges: int, parallelism: int) -> int:
@@ -1282,15 +1286,15 @@ def connected_components(
     comp = edges.select(F.col("u").alias("id"), F.col("v").alias("component"))
     if driver_finished:
         # the driver finisher's output is bounded by construction
-        # (<= 2 x _CC_DRIVER_FINISH_EDGES rows, ~32 MB framed) but its
-        # createDataFrame plan has no size statistics, so the planner
-        # picks a sort-merge join in every consumer — shuffling AND
-        # sorting the consumer's full member/node table against a tiny
-        # component list. The explicit hint rides the returned frame
-        # into those joins and turns them into broadcast-hash probes
-        # (no exchange on the corpus side at all). The distributed-loop
-        # path stays unhinted: its residual components can be
-        # arbitrarily large.
+        # (<= 2 x _CC_DRIVER_FINISH_EDGES rows, ~32 MB framed). Its
+        # local frame carries size statistics, but whether the planner
+        # broadcasts on them depends on autoBroadcastJoinThreshold; a
+        # sort-merge join would shuffle AND sort the consumer's full
+        # member/node table against a tiny component list. The explicit
+        # hint rides the returned frame into those joins and keeps them
+        # broadcast-hash probes under any threshold (no exchange on the
+        # corpus side at all). The distributed-loop path stays unhinted:
+        # its residual components can be arbitrarily large.
         comp = F.broadcast(comp)
     if not emit_singletons:
         return comp

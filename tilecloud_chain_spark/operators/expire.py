@@ -20,6 +20,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from tilecloud_chain_spark.session import local_frame
+
 # the QuadTileGrid max_extent the reference passes (expiretiles.py:121);
 # its golden coordinates back-solve to exactly this 2-decimal literal
 WORLD = 20037508.34
@@ -36,8 +38,8 @@ def boundary_edges(tiles: DataFrame) -> DataFrame:
     zrange = tiles.agg(F.max("z").alias("zmax"), F.min("z").alias("zmin")).collect()[0]
     zmax = zrange["zmax"]
     if zmax is None:
-        return tiles.sparkSession.createDataFrame(
-            [], "x1 long, y1 long, x2 long, y2 long, zmax int"
+        return local_frame(
+            tiles.sparkSession, [], "x1 long, y1 long, x2 long, y2 long, zmax int"
         )
     if zmax - zrange["zmin"] > 10:
         # a z-spread of s expands each coarse tile into 4^s lattice cells;

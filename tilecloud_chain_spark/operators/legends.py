@@ -26,6 +26,7 @@ from pyspark.sql.window import Window
 
 from tilecloud_chain_spark.config import Grid, Layer
 from tilecloud_chain_spark.functions import image as IMG
+from tilecloud_chain_spark.session import local_frame
 
 SWATCH_W, SWATCH_H = 48, 16
 
@@ -83,7 +84,8 @@ def legend_metadata(
                 out["n_bytes"].append(len(data))
             yield pd.DataFrame(out)
 
-    base = spark.createDataFrame(
+    base = local_frame(
+        spark,
         [(z, float(r)) for z, r in enumerate(grid.resolutions)],
         "z int, resolution double",
     )

@@ -58,6 +58,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 from pyspark.sql.window import Window
 
+from tilecloud_chain_spark.session import local_frame
+
 LITERAL_OFFSETS_MAX = 256
 
 _OFFSET_COL = "_prefix_offset"
@@ -172,8 +174,8 @@ def attach_offsets(
          for k in key_cols]
         + [StructField(_OFFSET_COL, LongType(), False)]
     )
-    off_df = base.sparkSession.createDataFrame(
-        [(*row[:-1], int(row[-1])) for row in rows], schema
+    off_df = local_frame(
+        base.sparkSession, [(*row[:-1], int(row[-1])) for row in rows], schema
     )
     cond = None
     for k in key_cols:

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
 from tilecloud_chain_spark.config import Layer
+from tilecloud_chain_spark.session import local_frame
 
 # WMS params the reference strips before forwarding (generate.py:536-545)
 RESERVED_PARAMS = {
@@ -34,7 +35,8 @@ def layer_config_df(spark: SparkSession, layers: dict[str, Layer]) -> DataFrame:
         )
         for lay in layers.values()
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "layer string, grid string, meta boolean, meta_size int, meta_buffer int,"
         " px_buffer double, empty_tile_hash string, empty_metatile_hash string",

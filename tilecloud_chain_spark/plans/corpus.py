@@ -22,8 +22,10 @@ per line, the stages of a wave run concurrently):
 (score, dedup and decontam form one wave.) Later stages read the
 COMMITTED parquet of earlier stages (``store.output``) — a resume
 recomputes nothing upstream of the first non-done stage, and the
-expensive Arrow extraction parses each page exactly once per job. The
-final table is row-identical to the single-shot composed operator
+expensive Arrow extraction parses each page exactly once per job. Each
+read is built with the schema the stage committed next to its files, so
+building it infers nothing and runs no Spark job. The final table is
+row-identical to the single-shot composed operator
 (``operators/corpus.py:corpus_admission``), which runs the same graph in
 memory; the ``__spark_entry__`` gates pin both against one DuckDB oracle.
 

@@ -51,6 +51,7 @@ from tilecloud_chain_spark.config import Grid, Layer
 from tilecloud_chain_spark.geometry import Geom
 from tilecloud_chain_spark.operators import filters as FL
 from tilecloud_chain_spark.operators import metatile as MT
+from tilecloud_chain_spark.session import local_frame
 from tilecloud_chain_spark.sources import enumerate as EN
 
 
@@ -101,7 +102,7 @@ def cost_count(
             df = FL.geom_intersect_filter(df, grid, geoms, buffer_px=z_buffer_px(z), n="n")
         metas = df if metas is None else metas.unionAll(df)
     if metas is None:
-        return spark.createDataFrame([], "z int, n_metatiles long, n_tiles long")
+        return local_frame(spark, [], "z int, n_metatiles long, n_tiles long")
 
     if not tilecloud_parity:
         metas = FL.geom_intersect_filter(metas, grid, geoms, buffer_px=buffer_px, n="n")

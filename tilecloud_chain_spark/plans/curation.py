@@ -20,8 +20,10 @@ Stage graph (each stage = one ``run_stage`` call, keyed zoom=0):
 dedup, decontam and clip run concurrently (one wave). Later stages read
 the committed parquet of earlier stages (``store.output``), never the
 live lineage — a resume recomputes nothing upstream of the first
-non-done stage. The final ``admitted`` output joined with ``batches`` is
-row-identical to the single-shot composed operator
+non-done stage. Each read is built with the schema the stage committed
+next to its files, so building it infers nothing and runs no Spark job.
+The final ``admitted`` output joined with ``batches`` is row-identical
+to the single-shot composed operator
 (``operators/image_curation.py:image_admission``), which runs the same
 graph in memory; the ``__spark_entry__`` gates pin that equivalence
 against one DuckDB oracle.

@@ -21,6 +21,7 @@ from tilecloud_chain_spark.functions import gridmath as GM
 from tilecloud_chain_spark.geometry import Geom
 from tilecloud_chain_spark.operators import filters as FL
 from tilecloud_chain_spark.operators import raster as R
+from tilecloud_chain_spark.session import local_frame
 from tilecloud_chain_spark.sources import enumerate as EN
 
 
@@ -52,7 +53,7 @@ def plan_metatiles(
                                     px_buffer=layer.px_buffer)
             metas = df if metas is None else metas.unionAll(df)
         if metas is None:
-            return spark.createDataFrame([], "z int, x int, y int, n int")
+            return local_frame(spark, [], "z int, x int, y int, n int")
     return FL.geom_intersect_filter(
         metas, grid, geoms, buffer_px=layer.filter_buffer_px(), n="n"
     )

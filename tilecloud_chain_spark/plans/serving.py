@@ -21,6 +21,7 @@ from tilecloud_chain_spark.config import Grid, Layer
 from tilecloud_chain_spark.functions import gridmath as GM
 from tilecloud_chain_spark.geometry import Geom
 from tilecloud_chain_spark.operators import filters as FL
+from tilecloud_chain_spark.session import local_frame
 
 
 def max_zoom_seed(grid: Grid, layer: Layer) -> int:
@@ -95,7 +96,7 @@ def host_serving_decisions(
         schema = ("host string, layer string, z int, x int, y int, meta_x int, "
                   "meta_y int, is_seeded boolean, geom_redirect boolean, "
                   "static_cache_hit boolean")
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     parts = []
     for lname in sorted(routed):
         dec = serving_columns(df, grid, layers[lname], geoms_by_layer[lname])

@@ -17,13 +17,21 @@ what the call before it compiled and compiled it again (a repeat
 whole query set; its census is next to it. It is a static SQL conf: it
 takes effect only when ``get_spark`` creates the session (and with it
 the JVM's cache), never on a session that already exists.
+
+Rows the driver already holds become a DataFrame through ``local_frame``
+only: built from an Arrow table, the frame is a ``LocalTableScan``, so
+reading it runs no job and no Python worker. A list handed to
+``createDataFrame`` instead is parallelized as pickled rows, and every
+read of it runs Python worker tasks to unpickle them.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 #: ``spark.sql.codegen.cache.maxEntries``: at least twice the most distinct
 #: generated classes one process of the engine compiles. Census: Janino
@@ -65,6 +73,28 @@ def get_spark(
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_MAX_ENTRIES))
     )
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows: Sequence[tuple],
+                schema: StructType | str) -> DataFrame:
+    """The DataFrame of driver-held ``rows`` (tuples in ``schema``'s field
+    order; ``schema`` a StructType or a DDL string), built from a
+    ``pyarrow.Table``. PySpark plans it as a ``LocalTableScan`` whatever
+    ``spark.sql.execution.arrow.pyspark.enabled`` says, and has no
+    fallback to the pickled-row path: a row of another width or a value
+    the schema cannot hold raises here."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows, strict=True))
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow, strict=True)], schema=arrow
+    ) if cols else arrow.empty_table()
+    return spark.createDataFrame(table, schema)
+
 
 def ensure_parallelism(df, probe=None):
     """Repartition a NARROW DataFrame (fewer partitions than the cluster's

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from tilecloud_chain_spark.config import Grid
 from tilecloud_chain_spark.geometry import Geom
+from tilecloud_chain_spark.session import local_frame
 
 
 # --------------------------------------------------------------------------
@@ -205,7 +206,7 @@ def dense_tiles(
         )
         dfs.append(df)
     if not dfs:
-        return spark.createDataFrame([], "z int, x int, y int")
+        return local_frame(spark, [], "z int, x int, y int")
     out = dfs[0]
     for df in dfs[1:]:
         out = out.unionAll(df)
@@ -241,7 +242,7 @@ def dense_metatiles(
         )
         dfs.append(df)
     if not dfs:
-        return spark.createDataFrame([], "z int, x int, y int, n int")
+        return local_frame(spark, [], "z int, x int, y int, n int")
     out = dfs[0]
     for df in dfs[1:]:
         out = out.unionAll(df)
@@ -268,7 +269,7 @@ def sparse_metatiles(
 
     zooms = [z for z in zooms if geoms.get(z) is not None and not geoms[z].is_empty]
     if not zooms:
-        return spark.createDataFrame([], "z int, x int, y int, n int")
+        return local_frame(spark, [], "z int, x int, y int, n int")
 
     buffered: dict[int, Geom] = {}
     row_ranges: dict[int, tuple[int, int]] = {}
@@ -285,7 +286,7 @@ def sparse_metatiles(
         buffered[zoom] = g
         row_ranges[zoom] = (start, end)
     if not row_ranges:
-        return spark.createDataFrame([], "z int, x int, y int, n int")
+        return local_frame(spark, [], "z int, x int, y int, n int")
 
     bc = spark.sparkContext.broadcast((grid, buffered, int(n)))
 
