@@ -51,10 +51,11 @@ def count_jobs(spark):
     """``count_jobs(fn, *args, **kw) -> (result, n_jobs)``: call ``fn`` under
     a job group of its own and count the Spark jobs that group launched.
     Selecting by group (not by a before/after job-id window) leaves out
-    jobs other threads run meanwhile; jobs a callable starts from threads
-    it spawns itself carry no group and are not counted. The listener bus
-    is drained before reading, since the status store is fed
-    asynchronously."""
+    jobs other threads run meanwhile. Jobs a callable starts from threads
+    it spawns itself are counted only when those threads carry the
+    caller's local properties, as ``plans/graph.py:run``'s wave threads
+    do; a plain thread's jobs carry no group. The listener bus is drained
+    before reading, since the status store is fed asynchronously."""
     sc = spark.sparkContext
 
     def run(fn, *args, **kw):

@@ -38,14 +38,15 @@ def test_with_lineage_single_pass(spark):
     assert all(l.wall_ms >= 0 for l in lin)
 
 
-def _run_line_job(spark, root):
+def _tile_job(spark, store, zooms, **kw):
     geom = G.parse_wkt(LAYERS["line"].geom_wkt)
-    geoms = {0: geom, 1: geom}
+    return P.generate_tiles(spark, SWISSGRID_5, LAYERS["line"], {z: geom for z in zooms},
+                            store, zooms=zooms, **kw)
+
+
+def _run_line_job(spark, root):
     store = CheckpointStore(spark, root)
-    job_id = P.generate_tiles(
-        spark, SWISSGRID_5, LAYERS["line"], geoms, store, zooms=[0, 1], meta_buffer=32
-    )
-    return store, job_id
+    return store, _tile_job(spark, store, [0, 1], meta_buffer=32)
 
 
 @pytest.fixture(scope="module")
@@ -87,6 +88,79 @@ def test_pipeline_checkpoint_golden_and_lineage(line_job):
 
     # queue bookkeeping: meta_tiles_total recorded (postgresql.py:285-290)
     assert store.job(job_id)["meta_tiles_total"] == store.queue(job_id).count()
+
+
+def _same_report(store, job_id):
+    """``report()`` without the fields that time the run."""
+    rep = store.report(job_id)
+    return rep["rows"], rep["bytes"], rep["partitions"]
+
+
+def test_tile_job_census(spark, count_jobs, tmp_path):
+    """The line layer at zooms 0-3 runs at most 7 Spark jobs: plan and
+    enqueue, the queue count, one job per zoom stage. The zooms are
+    listed from the queue's partition directories, and the jobs the
+    zoom wave's threads start carry the caller's job group, so all are
+    counted."""
+    store = CheckpointStore(spark, str(tmp_path))
+    job_id, n = count_jobs(_tile_job, spark, store, [0, 1, 2, 3])
+    assert n <= 7
+    assert store.queue_zooms(job_id) == [0, 1, 2, 3]
+    assert all(store.stage_status(job_id, "tiles", z) == "done" for z in range(4))
+
+
+@pytest.mark.parametrize("partial_queue", [False, True])
+def test_job_killed_before_its_queue_committed_resumes(spark, line_job, tmp_path,
+                                                       partial_queue):
+    """A job killed after ``open_job`` and before ``enqueue`` committed
+    (no queue, or part of one written) resumes: the partial queue is
+    cleared, the plan re-runs, and tiles and metatile total equal an
+    uninterrupted run's."""
+    store = CheckpointStore(spark, str(tmp_path))
+    job_id = store.open_job("line", {"meta_buffer": 32, "fmt": "png"})
+    if partial_queue:
+        geom = G.parse_wkt(LAYERS["line"].geom_wkt)
+        metas = P.plan_metatiles(spark, SWISSGRID_5, LAYERS["line"], {0: geom}, [0])
+        (metas.withColumn("cell", F.lit(0).cast("long")).write.partitionBy("z")
+         .parquet(os.path.join(str(tmp_path), "queue", f"job={job_id}")))
+    assert _tile_job(spark, store, [0, 1], meta_buffer=32, job_id=job_id) == job_id
+    want_store, want_job = line_job
+    assert _tiles(store, job_id) == _tiles(want_store, want_job)
+    assert (store.job(job_id)["meta_tiles_total"]
+            == want_store.job(want_job)["meta_tiles_total"])
+
+
+def test_failed_zoom_of_a_concurrent_wave_resumes_alone(spark, tmp_path, monkeypatch):
+    """One zoom's build raises inside the zoom wave of a line job at
+    zooms 0-3: the other zooms still commit ``done`` and the failing one
+    is marked ``error``; a resume with the job id re-runs only that zoom,
+    and tiles and ``report()`` equal an uninterrupted run's."""
+    clean = CheckpointStore(spark, str(tmp_path / "clean"))
+    want_job = _tile_job(spark, clean, [0, 1, 2, 3])
+
+    root = str(tmp_path / "failed")
+    store = CheckpointStore(spark, root)
+    real_queue = store.queue
+
+    def queue_failing_at_2(job_id, zoom=None):
+        if zoom == 2:
+            raise RuntimeError("zoom 2 fails")
+        return real_queue(job_id, zoom)
+
+    monkeypatch.setattr(store, "queue", queue_failing_at_2)
+    with pytest.raises(RuntimeError, match="zoom 2 fails"):
+        _tile_job(spark, store, [0, 1, 2, 3])
+    monkeypatch.undo()
+    (job_id,) = (f[:-len(".json")] for f in os.listdir(os.path.join(root, "jobs")))
+    assert [store.stage_status(job_id, "tiles", z) for z in range(4)] == [
+        "done", "done", "error", "done"]
+
+    assert _tile_job(spark, store, [0, 1, 2, 3], job_id=job_id) == job_id
+    for z in (0, 1, 3):
+        assert _markers(root, job_id, "tiles", z)[1] == ["pending", "done"], z
+    assert _markers(root, job_id, "tiles", 2)[1] == ["pending", "error", "pending", "done"]
+    assert _tiles(store, job_id) == _tiles(clean, want_job)
+    assert _same_report(store, job_id) == _same_report(clean, want_job)
 
 
 def test_store_reads_run_no_job_and_keep_the_written_schema(line_job, check_store_reads,

@@ -53,6 +53,19 @@ def test_image_admission_stops_at_batches():
                           ["batches"]]
 
 
+def test_nodes_are_keyed_by_name_and_zoom():
+    """One stage name at several zooms is several nodes, and an input
+    names the node of its reader's own zoom."""
+    from tilecloud_chain_spark.plans.graph import Node
+
+    tiles = [Node("tiles", (), _INPUT, z) for z in (0, 3, 7)]
+    assert [[n.zoom for n in w] for w in waves(tiles, ("tiles",))] == [[0, 3, 7]]
+    nodes = [Node("a", (), _INPUT, 0), Node("a", (), _INPUT, 1),
+             Node("b", ("a",), _INPUT, 1)]
+    assert [[(n.name, n.zoom) for n in w] for w in waves(nodes, ("b",))] == [
+        [("a", 1)], [("b", 1)]]
+
+
 def test_corpus_memory_pins():
     nodes = _declare(corpus_graph, _INPUT, _INPUT, _INPUT, _INPUT)
     targets = ("admitted", "pack")

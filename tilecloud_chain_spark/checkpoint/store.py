@@ -47,7 +47,9 @@ currently in error are requeued, done rows untouched"
 - **Exact resume**: ``run_stage`` is a no-op when the stage's status is
   ``done``; a killed run re-executes only uncommitted stages against the
   same deterministic inputs. ``retry_errors`` re-opens only stages marked
-  ``error``.
+  ``error``. The queue commits when ``enqueue`` records
+  ``meta_tiles_total`` in the job marker; a resume of a job without it
+  clears the partial queue (``open_job``).
 """
 
 from __future__ import annotations
@@ -165,19 +167,23 @@ class CheckpointStore:
         ``params`` and return it. A resume with different parameters is
         refused: the new values would be silently ignored for committed
         stages, or a mid-run kill would yield a mixed-parameter result.
-        A resume also sweeps the temp directories a killed run of the job
-        left behind, so it must be the job's only writer."""
+        A resume also sweeps what a killed run of the job left behind —
+        its temp directories, and a queue whose ``enqueue`` did not commit
+        (no ``meta_tiles_total`` in the marker) — so it must be the job's
+        only writer."""
         command = f"{name} {json.dumps(params, sort_keys=True)}"
         if job_id is None:
             return self.create_job(name, command=command)
-        prev = self.job(job_id).get("command", "")
-        if prev != command:
+        prev = self.job(job_id)
+        if prev.get("command", "") != command:
             raise ValueError(
                 f"job {job_id} was created with different parameters — "
                 f"resume must reuse them (or start a new job).\n"
-                f"  recorded: {prev}\n  requested: {command}"
+                f"  recorded: {prev.get('command', '')}\n  requested: {command}"
             )
         shutil.rmtree(self._tmp_root(job_id), ignore_errors=True)
+        if "meta_tiles_total" not in prev:
+            shutil.rmtree(self._queue_dir(job_id), ignore_errors=True)
         return job_id
 
     def job(self, job_id: str) -> dict:
@@ -192,13 +198,17 @@ class CheckpointStore:
 
     # -- queue (reference queue table, store/postgresql.py:170-194) ---------
 
+    def _queue_dir(self, job_id: str) -> str:
+        return os.path.join(self.root, "queue", f"job={job_id}")
+
     def enqueue(self, job_id: str, metatiles: DataFrame) -> int:
         """Append work rows (the master role's queue put, generate.py:164-168).
-        Returns meta_tiles_total (store/postgresql.py:285-290)."""
-        path = os.path.join(self.root, "queue", f"job={job_id}")
+        Returns meta_tiles_total (store/postgresql.py:285-290), which the
+        job marker records after the write: its presence commits the
+        queue."""
         cols = StructType.fromDDL(QUEUE_DDL).fields
         (metatiles.select([F.col(f.name).cast(f.dataType) for f in cols])
-         .write.mode("append").partitionBy("z").parquet(path))
+         .write.mode("append").partitionBy("z").parquet(self._queue_dir(job_id)))
         n = self.queue(job_id).count()
         j = self.job(job_id)
         j["meta_tiles_total"] = n
@@ -207,11 +217,17 @@ class CheckpointStore:
         return n
 
     def queue(self, job_id: str, zoom: int | None = None) -> DataFrame:
-        df = self.spark.read.schema(QUEUE_DDL).parquet(
-            os.path.join(self.root, "queue", f"job={job_id}"))
+        df = self.spark.read.schema(QUEUE_DDL).parquet(self._queue_dir(job_id))
         if zoom is not None:
             df = df.filter(F.col("z") == zoom)
         return df
+
+    def queue_zooms(self, job_id: str) -> list[int]:
+        """The zooms with queued rows, ascending: ``enqueue`` partitions
+        the queue by zoom, so they are its ``z=<n>`` directories and
+        listing them runs no Spark job."""
+        return sorted(int(d[len("z="):]) for d in os.listdir(self._queue_dir(job_id))
+                      if d.startswith("z="))
 
     # -- stages ---------------------------------------------------------------
 

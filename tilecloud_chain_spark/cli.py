@@ -92,7 +92,7 @@ def _generate_tiles_one(args) -> int:
     job_id = generate_tiles(spark, grid, layer, geoms, store, zooms=zooms,
                             meta_buffer=args.meta_buffer, job_id=args.job_id)
     out = store.output(job_id, "tiles")
-    n_meta = store.queue(job_id).count()
+    n_meta = store.job(job_id)["meta_tiles_total"]
     rep = store.report(job_id)
     if args.cache:
         dims = next(iter(layer.dimensions.values()), ("",))

@@ -7,8 +7,9 @@ stages are skipped, uncommitted stages re-execute (the same stage-commit
 semantics as the tile pipeline; reference parity
 store/postgresql.py:443-477).
 
-Stage graph (each stage one ``run_stage`` call, keyed zoom=0; one wave
-per line, the stages of a wave run concurrently):
+Stage graph (each stage one ``run_stage`` call at the graph nodes'
+zoom 0 — the stages are not zoom-structured; one wave per line, the
+stages of a wave run concurrently):
 
     extract   html_extract                 -> (doc_id, clean_text, n_blocks_*)
     rows      PII scrub + quality floor    -> (doc_id, text, n_pii, quality_keep)
@@ -100,6 +101,6 @@ def admission_table(store: CheckpointStore, job_id: str) -> DataFrame:
     """The composed-operator-shaped result from a finished job: one row
     per document with every stage flag and (for admitted docs) the packing
     coordinates — row-identical to ``corpus_admission``."""
-    flags = store.output(job_id, "admitted", G.ZOOM).drop("cell")
-    packed = store.output(job_id, "pack", G.ZOOM).drop("cell")
+    flags = store.output(job_id, "admitted", 0).drop("cell")
+    packed = store.output(job_id, "pack", 0).drop("cell")
     return CP.assemble_corpus_admission(flags, packed)

@@ -8,7 +8,8 @@ stages re-execute (the same stage-commit/retry semantics as the tile
 pipeline, ``plans/pipeline.py:generate_tiles``; reference parity
 store/postgresql.py:443-477).
 
-Stage graph (each stage = one ``run_stage`` call, keyed zoom=0):
+Stage graph (each stage = one ``run_stage`` call at the graph nodes'
+zoom 0 — the stages are not zoom-structured):
 
     dedup     image_caption_dedup  -> (image_id, dup_group, keep)
     decontam  phash_decontaminate  -> (image_id, contaminated)   [optional]
@@ -106,5 +107,5 @@ def admission_table(store: CheckpointStore, job_id: str) -> DataFrame:
     per image with every stage flag and the training-batch coordinates
     (NULL batch/slot for rejected rows) — row-identical to
     ``image_admission``."""
-    return assemble_admission(store.output(job_id, "admitted", G.ZOOM),
-                              store.output(job_id, "batches", G.ZOOM))
+    return assemble_admission(store.output(job_id, "admitted", 0),
+                              store.output(job_id, "batches", 0))

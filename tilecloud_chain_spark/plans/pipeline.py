@@ -6,13 +6,19 @@ generate.py:305-322) -> split -> tile hash-drop -> store]. Here each step is
 a DataFrame transform; the queue/checkpoint store supplies master/slave
 separation and exact resume; explicit transform ordering preserves the
 reference's physical tricks (drop-before-split, filter-before-expensive).
+The slave role is one ``tiles`` stage per queued zoom, declared as
+``plans/graph.py`` nodes: they read disjoint queue slices and share no
+file, so the graph runner runs them as one concurrent wave, as the
+reference's slaves drain the queue concurrently (generate.py:273-283). A
+failed zoom is marked ``error`` while the other zooms still commit, and a
+resume re-runs only the zooms not ``done``.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tilecloud_chain_spark.checkpoint import CheckpointStore
@@ -21,6 +27,7 @@ from tilecloud_chain_spark.functions import gridmath as GM
 from tilecloud_chain_spark.geometry import Geom
 from tilecloud_chain_spark.operators import filters as FL
 from tilecloud_chain_spark.operators import raster as R
+from tilecloud_chain_spark.plans import graph as G
 from tilecloud_chain_spark.session import local_frame
 from tilecloud_chain_spark.sources import enumerate as EN
 
@@ -59,6 +66,11 @@ def plan_metatiles(
     )
 
 
+def _cell(df: DataFrame) -> Column:
+    """Lineage and queue cell: the tile's (z, x, y) packed into one long."""
+    return GM.cell_key(F.col("z"), F.col("x"), F.col("y"))
+
+
 def generate_tiles(
     spark: SparkSession,
     grid: Grid,
@@ -70,52 +82,30 @@ def generate_tiles(
     fmt: str = "png",
     job_id: str | None = None,
 ) -> str:
-    """Full run: master (plan+enqueue) then per-zoom slave stages with
-    checkpoint/lineage; returns job_id. Pass it back in to resume after a
-    kill: plan and enqueue are skipped and only the zooms not yet done
-    render. The resolved meta buffer and the format are recorded in the
-    job marker, and a resume with different ones (or another layer) is
-    refused (``CheckpointStore.open_job``)."""
+    """Full run: the master step (plan + enqueue), then the slave role —
+    one ``tiles`` stage per queued zoom (render -> drop -> split -> drop
+    -> store, each zoom = one checkpointed stage with lineage,
+    BASELINE.json mandate), run by the graph runner as one concurrent
+    wave; returns job_id. Pass it back in to resume after a kill: the plan
+    is skipped once the job's queue has committed, and only the zooms not
+    yet done render. The resolved meta buffer and the format are recorded
+    in the job marker, and a resume with different ones (or another
+    layer) is refused (``CheckpointStore.open_job``)."""
     mb = layer.meta_buffer if meta_buffer is None else meta_buffer
-    resume = job_id is not None
     job_id = store.open_job(layer.name, {"meta_buffer": mb, "fmt": fmt}, job_id)
-    if not resume:
+    if "meta_tiles_total" not in store.job(job_id):  # the queue's commit mark
         metas = plan_metatiles(spark, grid, layer, geoms, zooms)
-        metas = metas.withColumn("cell", GM.cell_key(F.col("z"), F.col("x"), F.col("y")))
-        store.enqueue(job_id, metas)
-    run_zoom_stages(spark, grid, layer, geoms, store, job_id, mb, fmt)
+        store.enqueue(job_id, metas.withColumn("cell", _cell(metas)))
+
+    def tiles(z: int) -> G.Node:
+        # fused render+split with drop-empty short-circuit: pixel-exact
+        # equivalent of render -> empty-metatile hash-drop (before split,
+        # generate.py:305-322) -> split -> empty-tile hash-drop; the
+        # equivalence is pinned by tests/test_multigrid_fused.py
+        return G.Node("tiles", (), lambda ins: R.render_split_metatiles(
+            store.queue(job_id, z).select("z", "x", "y", "n"), grid, geoms,
+            meta_buffer=mb, fmt=fmt, drop_empty_children=True), z)
+
+    G.run([tiles(z) for z in store.queue_zooms(job_id)], ("tiles",), store=store,
+          job_id=job_id, cell=_cell, bytes_col="data")
     return job_id
-
-
-def run_zoom_stages(
-    spark: SparkSession,
-    grid: Grid,
-    layer: Layer,
-    geoms: dict[int, Geom],
-    store: CheckpointStore,
-    job_id: str,
-    meta_buffer: int | None = None,
-    fmt: str = "png",
-) -> None:
-    """Slave role: per-zoom render->drop->split->drop->store stages against
-    the queue (each zoom = one checkpointed stage, BASELINE.json mandate)."""
-    mb = layer.meta_buffer if meta_buffer is None else meta_buffer
-    zooms = [r.z for r in store.queue(job_id).select("z").distinct().collect()]
-
-    for z in sorted(zooms):
-
-        def build(z=z):
-            metas = store.queue(job_id, z).select("z", "x", "y", "n")
-            # fused render+split with drop-empty short-circuit: pixel-exact
-            # equivalent of render -> empty-metatile hash-drop (before split,
-            # generate.py:305-322) -> split -> empty-tile hash-drop; the
-            # equivalence is pinned by tests/test_multigrid_fused.py
-            stored = R.render_split_metatiles(
-                metas, grid, geoms, meta_buffer=mb, fmt=fmt,
-                drop_empty_children=True,
-            )
-            return stored.withColumn(
-                "cell", GM.cell_key(F.col("z"), F.col("x"), F.col("y"))
-            )
-
-        store.run_stage(job_id, "tiles", z, build, cell_col="cell", bytes_col="data")

@@ -36,8 +36,8 @@ class TooManyErrorsError(RuntimeError):
 
 def pending_stages(store: CheckpointStore, job_id: str, stage: str) -> list[int]:
     """Zooms whose stage is not yet done (created or error)."""
-    zooms = sorted(r.z for r in store.queue(job_id).select("z").distinct().collect())
-    return [z for z in zooms if store.stage_status(job_id, stage, z) != "done"]
+    return [z for z in store.queue_zooms(job_id)
+            if store.stage_status(job_id, stage, z) != "done"]
 
 
 def drain(
